@@ -10,12 +10,18 @@ Reference dataflow, per bundle:
      condition id mapping (J2) + distinct sets (A4) (bundle.go:84-125)
 
 Spark-first re-expression (SURVEY §3.2): the goroutine worker pool becomes
-the partitioned file scan; per-bundle shared state (refMap) disappears
-because new IDs are a DETERMINISTIC function of (bundle_id, fullUrl) — so
-the per-bundle fullUrl->new-reference map is built on the INTACT bundle row
-(one `transform` + `map_from_entries` before the explode) and reference
-rewriting is pure `withField` struct surgery: the whole ingest-to-write
-path is a ZERO-SHUFFLE projection at any corpus size.
+the partitioned file scan, sized by input bytes (size_by_bytes) so that
+thousands of tiny bundle files do not fan every later job out into one task
+per 4 MB of Spark's per-file open cost.  Per-bundle shared state (refMap)
+disappears because new IDs are a DETERMINISTIC function of (bundle_id,
+fullUrl) — so the per-bundle fullUrl->new-reference map is built on the
+INTACT bundle row (one `transform` + `map_from_entries` before the explode)
+and reference rewriting is pure `withField` struct surgery.  The RawStats
+row is likewise a projection over the intact bundle row (`filter` by
+resource type, last Patient, `transform` over the Conditions) with the two
+small dims as a map literal and a broadcast join.  Scan-to-sink has no
+shuffle on the rawstat path; the resource write's one rebalance shuffle
+lays out its output files.
 """
 
 from __future__ import annotations
@@ -115,7 +121,9 @@ def read_bundles(
     ``_corrupt_record`` column: a malformed file becomes one row carrying
     its raw text instead of an indistinguishable all-null bundle.  The
     reference silently discards the parse error (main.go:255 ignores
-    json.Unmarshal's return), leaving no trace of bad inputs."""
+    json.Unmarshal's return), leaving no trace of bad inputs.
+
+    The scan comes back sized by its input bytes (size_by_bytes)."""
     reader = (
         spark.read.option("multiLine", "true")
         .option("recursiveFileLookup", "true")
@@ -128,7 +136,30 @@ def read_bundles(
         df = reader.schema(BUNDLE_SCHEMA_PERMISSIVE).json(path)
     else:
         df = reader.schema(BUNDLE_SCHEMA).json(path)
-    return df.withColumn("bundle_id", bundle_id_column(path))
+    return size_by_bytes(df.withColumn("bundle_id", bundle_id_column(path)), df)
+
+
+def size_by_bytes(df: DataFrame, sized_by: DataFrame | None = None) -> DataFrame:
+    """Coalesce ``df``, without a shuffle, to one partition per
+    ``spark.sql.files.maxPartitionBytes`` of input, and at least
+    ``defaultParallelism``.  The input size is the optimized plan's
+    ``sizeInBytes`` of ``sized_by`` (default ``df``): for a file scan, the
+    file sizes the file index already listed; for a foreachBatch
+    micro-batch, the statistics its source plan carried.
+
+    Spark packs small files by charging each a 4 MB open cost, so 1,000
+    0.6 KB bundles scan as 32 partitions, and every downstream job of the
+    load then runs 32 tasks for 0.6 MB.  This is ensure_parallelism
+    (operators/dedup.py) in the other direction: it only ever lowers the
+    partition count, so it does nothing on large inputs."""
+    spark = df.sparkSession
+    plan = (df if sized_by is None else sized_by)._jdf.queryExecution().optimizedPlan()
+    size = int(str(plan.stats().sizeInBytes()))
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    target = max(spark.sparkContext.defaultParallelism, -(-size // split))
+    if target < df.rdd.getNumPartitions():
+        return df.coalesce(target)
+    return df
 
 
 def explode_entries(bundles: DataFrame) -> DataFrame:
@@ -270,142 +301,118 @@ def load_condition_dim(spark: SparkSession, path: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _patient_fields(entries: DataFrame, as_of: Column) -> DataFrame:
-    """Patient scalars per bundle (bundle.go:84-97).  The reference keeps one
-    basestat struct per bundle and overwrites it on every Patient — the LAST
-    patient in ENTRY ORDER wins; max_by(field, pos) reproduces exactly that
-    (pos is the posexplode entry index from explode_entries)."""
-    p = entries.filter(F.col("resource.resourceType") == "Patient")
-    addr = first_element(F.col("resource.address"))  # F6: Address[0] only
-    flat = p.select(
-        "bundle_id",
-        "pos",
-        F.col("resource.id").alias("patient_id"),
-        F.col("resource.gender").alias("gender"),
-        age_years(F.to_date("resource.birthDate"), as_of).alias("age"),
-        is_deceased(  # F4 tri-state (bundle.go:91)
-            F.to_timestamp("resource.deceasedDateTime"),
-            F.col("resource.deceasedBoolean"),
-        ).alias("deceased"),
-        addr["city"].alias("city"),
-        addr["postalCode"].alias("zipcode"),
-    )
-    return flat.groupBy("bundle_id").agg(
-        F.max_by("patient_id", "pos").alias("patient_id"),
-        F.max_by("gender", "pos").alias("gender"),
-        F.max_by("age", "pos").alias("age"),
-        F.max_by("deceased", "pos").alias("deceased"),
-        F.max_by("city", "pos").alias("city"),
-        F.max_by("zipcode", "pos").alias("zipcode"),
-        # presence marker: NULL after the left join <=> bundle had no Patient
-        F.max(F.lit(1)).alias("_has_patient"),
-    )
-
-
-def _condition_sets(entries: DataFrame, condition_dim: DataFrame) -> DataFrame:
-    """Conditions per bundle with J2 dim mapping and A4 distinct sets.
-
-    J2 (bundle.go:104-105): broadcast left join on (system, code); a miss
-    yields the Go zero-value Disease — IDs 0 — which the stats pipelines
-    filter with > 0 but which still appear inside rawstat.conditions.
-    A4 (bundle.go:24-51): distinct conditionids / diseaseids per patient,
-    order-insensitive (collect_set + sort for determinism)."""
-    c = entries.filter(F.col("resource.resourceType") == "Condition")
-    coding = first_element(F.col("resource.code.coding"))  # F6: Coding[0]
-    flat = c.select(
-        "bundle_id",
-        "pos",
-        coding["system"].alias("system"),
-        coding["code"].alias("code"),
-    )
-    j = flat.join(
-        F.broadcast(condition_dim),
-        (flat.system == condition_dim.code_system) & (flat.code == condition_dim.code),
-        "left",
-    ).select(
-        "bundle_id",
-        "pos",
-        "system",
-        flat.code.alias("code"),
-        F.coalesce(F.col("condition_id"), F.lit(0)).alias("conditionid"),
-        F.coalesce(F.col("disease_id"), F.lit(0)).alias("diseaseid"),
-    )
-    # collect_list order is partition-dependent; sorting by the carried entry
-    # index makes `conditions` exactly the reference's append order
-    # (bundle.go:99-108) and the output hash-stable.
-    ordered = F.transform(
-        F.array_sort(
-            F.collect_list(F.struct("pos", "system", "code", "conditionid", "diseaseid"))
-        ),
-        lambda s: F.struct(
-            s["system"].alias("system"),
-            s["code"].alias("code"),
-            s["conditionid"].alias("conditionid"),
-            s["diseaseid"].alias("diseaseid"),
-        ),
-    )
-    return j.groupBy("bundle_id").agg(
-        ordered.alias("conditions"),
-        F.array_sort(F.collect_set("conditionid")).alias("uniqueconditions"),
-        F.array_sort(F.collect_set("diseaseid")).alias("uniquediseases"),
-    )
+def _one_per_key(dim: DataFrame, keys: list[str], values: list[str]) -> DataFrame:
+    """One dim row per key, as in the reference's CousubMap / DiseaseMap
+    (main.go:137-202), so no lookup multiplies a row; the smallest
+    ``values`` tuple wins.  A small dim fits one partition, where the
+    aggregation needs no shuffle."""
+    agg = dim.coalesce(1).groupBy(*keys).agg(F.min(F.struct(*values)).alias("_v"))
+    return agg.select(*keys, "_v.*")
 
 
 def derive_rawstat(
-    entries: DataFrame,
+    bundles: DataFrame,
     cousub_dim: DataFrame,
     condition_dim: DataFrame,
     as_of: Column | None = None,
 ) -> DataFrame:
-    """One RawStats row per bundle (models.go:5-15, bundle.go:66-125).
+    """One RawStats row per bundle (models.go:5-15, bundle.go:66-125), as a
+    projection over the bundle row (read_bundles) — no shuffle.  Exploded
+    entries (explode_entries and after) are re-nested into bundle rows, in
+    entry order, by one aggregation first.
+
+    - The LAST Patient in entry order wins (bundle.go:84-97 overwrites one
+      basestat per Patient); its id is deterministic_id(bundle_id, fullUrl).
+    - J2 (bundle.go:99-108): each Condition's (system, code) is looked up
+      in a map literal of the condition dim; a miss yields the Go
+      zero-value Disease (IDs 0), kept in ``conditions`` but filtered by
+      the stats pipelines' > 0.  A4 (bundle.go:24-51): array_distinct +
+      array_sort.  J1 (bundle.go:94-95): a broadcast left join on city.
+    - Each dim keeps one row per key (_one_per_key): the smallest
+      (ct_fips, cs_fips) per stripped city, the smallest (condition_id,
+      disease_id) per (code_system, code).
 
     Gotchas preserved (SURVEY §4.3):
-    - #1 agerange is the hard-coded constant 1 (bundle.go:90) — but ONLY
-      when a Patient entry exists: the constant is assigned inside the
-      Patient branch, so a patient-less bundle keeps the Go zero-value
-      RawStats (AgeRange=0, Age=0 — int fields without omitempty,
-      models.go:9-10); age is still computed and carried.
-    - #4 unknown city -> empty-string FIPS via left join + fill '' —
-      the Go zero-value Cousub (bundle.go:94-95).
-    - #6 a bundle with no Patient still emits a stat row with empty id
-      (bundle.go:122-124 inserts basestat unconditionally).
-    - deceasedboolean: the Go field is bool with omitempty (models.go:11),
-      so false serializes as Mongo-absent; NULL and false are equivalent to
-      the P1 filter, and we store the computed F4 boolean directly.
+    - #1 agerange is the hard-coded 1 (bundle.go:90), but only inside the
+      Patient branch: a patient-less bundle keeps the Go zero values
+      (AgeRange=0, Age=0 — ints without omitempty, models.go:9-10).
+    - #4 unknown city -> empty-string FIPS, the zero-value Cousub.
+    - #6 every bundle gets a row — with no Patient, or no entries at all,
+      its id is '' (bundle.go:122-124 inserts basestat unconditionally).
+    - deceasedboolean: false and NULL are equivalent to the P1 filter
+      (bool with omitempty, models.go:11); the F4 boolean is stored as is.
     """
+    if "entry" not in bundles.columns:  # exploded entries: re-nest, in entry order
+        bundles = bundles.groupBy("bundle_id").agg(
+            F.array_sort(F.collect_list(F.struct("pos", "fullUrl", "resource"))).alias("entry")
+        )
     as_of = as_of if as_of is not None else F.lit(DEFAULT_AS_OF).cast("date")
-    bundles = entries.select("bundle_id").distinct()
-    patients = _patient_fields(entries, as_of)
-    conds = _condition_sets(entries, condition_dim)
-
-    base = bundles.join(patients, "bundle_id", "left").join(conds, "bundle_id", "left")
-
-    # J1 (bundle.go:94-95): broadcast city -> FIPS lookup, zero-value default.
-    j = base.join(F.broadcast(cousub_dim), base.city == cousub_dim.cs_name, "left")
-
-    empty_int_array = F.array().cast("array<int>")
-    empty_cond_array = F.array().cast(
-        "array<struct<system:string,code:string,conditionid:int,diseaseid:int>>"
+    # DiseaseMap as one map literal, built once on the driver.  A NULL key
+    # part never matches a coding, and a repeated key would raise under
+    # Spark's default spark.sql.mapKeyDedupPolicy.
+    key, val = ["code_system", "code"], ["condition_id", "disease_id"]
+    dim = condition_dim.filter(F.col("code_system").isNotNull() & F.col("code").isNotNull())
+    pairs = [F.struct(*(F.lit(r[c]).alias(c) for c in cols))
+             for r in _one_per_key(dim, key, val).collect() for cols in (key, val)]
+    cond_map = F.create_map(*pairs).cast(
+        "map<struct<code_system:string,code:string>,struct<condition_id:int,disease_id:int>>"
     )
-    has_patient = F.col("_has_patient").isNotNull()
+    entry = F.coalesce(F.col("entry"), F.array())
+
+    def of_type(rtype: str) -> Column:
+        return F.filter(entry, lambda e: e["resource"]["resourceType"] == rtype)
+
+    def condition(e: Column) -> Column:
+        c = first_element(e["resource"]["code"]["coding"])  # F6: Coding[0]
+        hit = F.try_element_at(
+            cond_map, F.struct(c["system"].alias("code_system"), c["code"].alias("code"))
+        )
+        return F.struct(
+            c["system"].alias("system"),
+            c["code"].alias("code"),
+            F.coalesce(hit["condition_id"], F.lit(0)).alias("conditionid"),
+            F.coalesce(hit["disease_id"], F.lit(0)).alias("diseaseid"),
+        )
+
+    # select the last Patient once; the next projection reads its fields
+    rows = bundles.select(
+        "bundle_id",
+        F.try_element_at(of_type("Patient"), F.lit(-1)).alias("_patient"),
+        F.transform(of_type("Condition"), condition).alias("conditions"),
+    )
+    patient = F.col("_patient")
+    p, has_patient = patient["resource"], patient.isNotNull()
+    addr = first_element(p["address"])  # F6: Address[0] only
+    rows = rows.select(
+        "bundle_id",
+        F.when(has_patient, deterministic_id(F.col("bundle_id"), patient["fullUrl"]))
+        .otherwise(F.lit("")).alias("id"),
+        p["gender"].alias("gender"),
+        F.when(has_patient, F.lit(1)).otherwise(F.lit(0)).alias("agerange"),  # gotcha #1
+        F.when(has_patient, age_years(F.to_date(p["birthDate"]), as_of))
+        .otherwise(F.lit(0)).alias("age"),
+        F.when(has_patient, is_deceased(  # F4 tri-state (bundle.go:91)
+            F.to_timestamp(p["deceasedDateTime"]), p["deceasedBoolean"]
+        )).alias("deceasedboolean"),
+        addr["city"].alias("city"),
+        addr["postalCode"].alias("zipcode"),
+        "conditions",
+    )
+    cousub = _one_per_key(cousub_dim, ["cs_name"], ["ct_fips", "cs_fips"])
+    j = rows.join(F.broadcast(cousub), rows.city == cousub.cs_name, "left")
+    loc = {"countyid_fips": "ct_fips", "subcountyid_fips": "cs_fips",
+           "city": "city", "zipcode": "zipcode"}
+
+    def distinct_ids(field: str) -> Column:
+        return F.array_sort(F.array_distinct(F.transform("conditions", lambda c: c[field])))
+
     return j.select(
-        F.col("bundle_id"),
-        F.coalesce(F.col("patient_id"), F.lit("")).alias("id"),
-        F.col("gender"),
-        # gotcha #1: hard-coded 1 (bundle.go:90), but only inside the Patient
-        # branch — no Patient keeps the int zero values (models.go:9-10)
-        F.when(has_patient, F.lit(1)).otherwise(F.lit(0)).alias("agerange"),
-        F.when(has_patient, F.col("age")).otherwise(F.lit(0)).alias("age"),
-        F.col("deceased").alias("deceasedboolean"),
-        F.struct(
-            F.coalesce(F.col("ct_fips"), F.lit("")).alias("countyid_fips"),
-            F.coalesce(F.col("cs_fips"), F.lit("")).alias("subcountyid_fips"),
-            F.coalesce(F.col("city"), F.lit("")).alias("city"),
-            F.coalesce(F.col("zipcode"), F.lit("")).alias("zipcode"),
-        ).alias("location"),
-        F.coalesce(F.col("conditions"), empty_cond_array).alias("conditions"),
-        F.coalesce(F.col("uniqueconditions"), empty_int_array).alias("uniqueconditions"),
-        F.coalesce(F.col("uniquediseases"), empty_int_array).alias("uniquediseases"),
+        "bundle_id", "id", "gender", "agerange", "age", "deceasedboolean",
+        F.struct(*(F.coalesce(F.col(c), F.lit("")).alias(n) for n, c in loc.items()))
+        .alias("location"),
+        "conditions",
+        distinct_ids("conditionid").alias("uniqueconditions"),
+        distinct_ids("diseaseid").alias("uniquediseases"),
     )
 
 
@@ -467,7 +474,12 @@ def run_pipeline(
       rewrite steps are pure projections — cheap to recompute per sink; the
       JSON parse is the expensive part).  Blocks that don't fit local disk
       fall back to recompute, so this degrades gracefully rather than
-      OOMing.
+      OOMing.  The scan is already sized by bytes (read_bundles), so each
+      sink runs one task per core on a small load, not one per 4 MB of
+      per-file open cost.
+    - The resources write takes the exploded, rewritten entries; the
+      rawstat derivation takes the persisted bundle rows themselves and
+      projects one RawStats row from each, with no shuffle.
     - Malformed bundle files are captured, not crashed-on and not silently
       emptied (the reference drops the Unmarshal error, main.go:255):
       their raw text lands in ``out_dir/quarantine`` keyed by bundle_id —
@@ -494,7 +506,7 @@ def run_pipeline(
         entries = rewrite_references(assign_ids(explode_entries(good)))
         cousub = load_cousub_dim(spark, cousub_dim_path)
         conddim = load_condition_dim(spark, condition_dim_path)
-        rawstat = derive_rawstat(entries, cousub, conddim, as_of)
+        rawstat = derive_rawstat(good, cousub, conddim, as_of)
         # r17 (guide §2.6 — overlap independent jobs): the resource and
         # rawstat sinks both read the one persisted parse and depend on
         # nothing else; submitting them from two driver threads lets the

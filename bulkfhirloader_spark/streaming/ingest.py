@@ -11,7 +11,8 @@ the reference cannot do (it re-inserts).
 The transformation is THE SAME code as batch ingest: ID assignment and
 reference rewriting run inside foreachBatch on each micro-batch
 DataFrame.  Per-bundle operations (groupBy bundle_id) are legal there
-because foreachBatch hands us a plain batch DataFrame.
+because foreachBatch hands us a plain batch DataFrame, which is sized by
+its input bytes like the batch scan (size_by_bytes).
 """
 
 from __future__ import annotations
@@ -26,6 +27,7 @@ from bulkfhirloader_spark.ingest.pipeline import (
     bundle_id_column,
     explode_entries,
     rewrite_references,
+    size_by_bytes,
 )
 from bulkfhirloader_spark.functions.scalars import collection_name
 from bulkfhirloader_spark.schemas import BUNDLE_SCHEMA
@@ -55,7 +57,7 @@ def stream_ingest_available_now(
     stream = stream_bundles(spark, bundles_path)
 
     def process_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        entries = rewrite_references(assign_ids(explode_entries(batch_df)))
+        entries = rewrite_references(assign_ids(explode_entries(size_by_bytes(batch_df))))
         entries.withColumn(
             "collection", collection_name(F.col("resource.resourceType"))
         ).write.mode("append").partitionBy("collection").parquet(

@@ -423,6 +423,76 @@ def test_corrupt_bundle_quarantine(spark, tmp_path):
     assert rawstat.filter(F.col("bundle_id") == "bad").count() == 0
 
 
+@pytest.fixture(scope="module")
+def edge_env(spark, tmp_path_factory):
+    """One load over the edge cases the rawstat projection must keep: two
+    bundles with no entries, and dims that repeat a key.  'Acton' and
+    'Acton Town' are one name after the F1 strip; (SNOMED, 44054006)
+    appears twice in the condition dim."""
+    root = tmp_path_factory.mktemp("edges")
+    bdir = root / "bundles"
+    bdir.mkdir()
+    (bdir / "empty.json").write_text(json.dumps(_bundle([])))
+    (bdir / "noentry.json").write_text(
+        json.dumps({"resourceType": "Bundle", "type": "transaction"}))
+    (bdir / "acton.json").write_text(json.dumps(_bundle([
+        _patient("urn:uuid:p", city="Acton"),
+        _condition("urn:uuid:c", SNOMED, "44054006", subject="urn:uuid:p"),
+    ])))
+    spark.createDataFrame(
+        [("Acton Town", "017", "00200"), ("Acton", "017", "00100")],
+        "cs_name string, ct_fips string, cs_fips string",
+    ).write.parquet(str(root / "cousub"))
+    spark.createDataFrame(
+        [(102, None, "Diabetes (dup)", SNOMED, "44054006"),
+         (101, 11, "Diabetes", SNOMED, "44054006")],
+        "condition_id int, disease_id int, condition_name string, "
+        "code_system string, code string",
+    ).write.parquet(str(root / "conddim"))
+    counters = ing.run_pipeline(
+        spark, str(bdir), str(root / "cousub"), str(root / "conddim"),
+        str(root / "out"), as_of=F.lit("2020-01-01").cast("date"),
+    )
+    rawstat = spark.read.parquet(str(root / "out" / "rawstat"))
+    return counters, rawstat
+
+
+def test_bundle_without_entries_gets_rawstat_row(edge_env):
+    """SURVEY §4.3 #6: the reference inserts the stat unconditionally
+    (bundle.go:122-124), so a bundle with `"entry": []` or no `entry` at
+    all still gets its zero-value row, and A5 counts match rawstat rows."""
+    counters, rawstat = edge_env
+    rows = {r["bundle_id"]: r for r in rawstat.collect()}
+    assert counters["bundles"] == len(rows) == 3
+    for bid in ("empty", "noentry"):
+        r = rows[bid]
+        assert (r["id"], r["agerange"], r["age"]) == ("", 0, 0)
+        assert r["conditions"] == []
+        assert r["uniqueconditions"] == [] and r["uniquediseases"] == []
+
+
+def test_cousub_dim_duplicate_name_matches_once(edge_env):
+    """'Acton' and 'Acton Town' collide after the F1 strip: the bundle
+    keeps one rawstat row and one population fact, and the smallest
+    (ct_fips, cs_fips) wins."""
+    _counters, rawstat = edge_env
+    acton = rawstat.filter(F.col("bundle_id") == "acton").collect()
+    assert len(acton) == 1
+    assert acton[0]["location"]["subcountyid_fips"] == "00100"
+    pop = stats.population_facts(rawstat).filter(F.col("cs_fips") == "00100").collect()
+    assert [r["pop"] for r in pop] == [1]
+
+
+def test_condition_dim_duplicate_code_matches_once(edge_env):
+    """A repeated (code_system, code) in the condition dim maps the
+    Condition once, to the smallest (condition_id, disease_id)."""
+    _counters, rawstat = edge_env
+    (acton,) = rawstat.filter(F.col("bundle_id") == "acton").collect()
+    assert [(c["conditionid"], c["diseaseid"]) for c in acton["conditions"]] == [(101, 11)]
+    assert acton["uniqueconditions"] == [101]
+    assert acton["uniquediseases"] == [11]
+
+
 def test_mongo_write_option_surface_pinned():
     """No Mongo endpoint exists in the sandbox, so the production K1/K2
     document-sink path is OPTION PLUMBING ONLY (SCALE.md).  What CAN be

@@ -142,6 +142,82 @@ def test_ingest_resource_path_has_no_exchange(spark, tmp_path):
     assert rows["urn:uuid:c1"]["resource"]["subject"]["reference"].startswith("Patient/")
 
 
+def _write_tiny_bundles(path, n):
+    import json
+
+    for i in range(n):
+        b = {"resourceType": "Bundle", "entry": [
+            {"fullUrl": f"urn:uuid:p{i}",
+             "resource": {"resourceType": "Patient", "gender": "male",
+                          "address": [{"city": "Boston"}]}},
+            {"fullUrl": f"urn:uuid:c{i}",
+             "resource": {"resourceType": "Condition",
+                          "code": {"coding": [{"system": "s", "code": "1"}]}}},
+        ]}
+        (path / f"b{i:03d}.json").write_text(json.dumps(b))
+
+
+def test_rawstat_over_bundle_rows_has_no_shuffle(spark, tmp_path):
+    """The rawstat row is a projection over its bundle row: no shuffle
+    Exchange between the scan and the rawstat sink.  The city dim arrives
+    through a BroadcastExchange; the condition dim is a map literal."""
+    import re
+
+    from bulkfhirloader_spark.ingest import pipeline as ing
+
+    _write_tiny_bundles(tmp_path, 3)
+    cousub = spark.createDataFrame(
+        [("Boston", "025", "07000")], "cs_name string, ct_fips string, cs_fips string")
+    conddim = spark.createDataFrame(
+        [(101, 11, "s", "1")],
+        "condition_id int, disease_id int, code_system string, code string")
+    rawstat = ing.derive_rawstat(ing.read_bundles(spark, str(tmp_path)), cousub, conddim)
+    plan = _plan(rawstat)
+    assert not re.search(r"(?<!Broadcast)Exchange", plan), plan
+    assert "BroadcastHashJoin" in plan
+    rows = rawstat.collect()
+    assert len(rows) == 3
+    assert {r["location"]["subcountyid_fips"] for r in rows} == {"07000"}
+    assert {tuple(r["uniqueconditions"]) for r in rows} == {(101,)}
+
+
+def test_read_bundles_packs_tiny_files_into_parallelism(spark, tmp_path):
+    """Spark charges each file a 4 MB open cost and caps a split at 128 MB,
+    so 32 tiny files fill a scan partition: 32 * (cores + 1) files scan as
+    cores + 1 partitions.  read_bundles coalesces them to
+    defaultParallelism."""
+    from bulkfhirloader_spark.ingest import pipeline as ing
+
+    dp = spark.sparkContext.defaultParallelism
+    n = 32 * (dp + 1)
+    _write_tiny_bundles(tmp_path, n)
+    df = ing.read_bundles(spark, str(tmp_path))
+    assert df.rdd.getNumPartitions() <= dp
+    assert df.count() == n
+
+
+def test_read_bundles_keeps_one_partition_per_max_partition_bytes(spark, tmp_path):
+    """With spark.sql.files.maxPartitionBytes below the input size, the
+    coalesce keeps ceil(input bytes / maxPartitionBytes) partitions."""
+    import math
+
+    from bulkfhirloader_spark.ingest import pipeline as ing
+
+    dp = spark.sparkContext.defaultParallelism
+    n = max(40, 4 * dp)
+    _write_tiny_bundles(tmp_path, n)
+    size = sum(p.stat().st_size for p in tmp_path.iterdir())
+    split = size // (2 * dp)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
+    try:
+        df = ing.read_bundles(spark, str(tmp_path))
+        parts = df.rdd.getNumPartitions()
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    assert parts == math.ceil(size / split) > dp
+    assert df.count() == n
+
+
 def test_bucketed_join_has_no_shuffle(spark, tmp_path):
     """Fact-fact joins at scale must be co-locatable: two tables bucketed on
     the join key with matching bucket counts join with NO Exchange on either
