@@ -79,13 +79,15 @@ def main(argv: list[str] | None = None) -> dict:
 
     result = {
         "bundles": counters["bundles"],
+        "corrupt_bundles": counters["corrupt_bundles"],
         "ingest_sec": round(t_ingest - t0, 3),
         "stats_sec": round(t_stats - t_ingest, 3),
     }
     if args.debug:  # F11 (main.go:122-132, main.go:291-293)
         print(
             f"{result['bundles']} FHIR bundles read in {result['ingest_sec']} "
-            f"seconds; stats in {result['stats_sec']} seconds"
+            f"seconds ({result['corrupt_bundles']} corrupt files quarantined); "
+            f"stats in {result['stats_sec']} seconds"
         )
     return result
 

@@ -1,4 +1,5 @@
-"""Expression let-binding for higher-order-function lambdas.
+"""Expression binding: let-binding for higher-order-function lambdas, and
+per-JVM memoization of static expression trees (``per_jvm``).
 
 Catalyst performs common-subexpression elimination inside whole-stage
 codegen projections, but NOT inside higher-order-function lambda bodies:
@@ -20,10 +21,14 @@ lambdas may reference outer lambda variables), so multi-binding is
 
 from __future__ import annotations
 
-from typing import Callable
+import functools
+from typing import Callable, TypeVar
 
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+T = TypeVar("T")
 
 
 def let(value: Column, body: Callable[[Column], Column]) -> Column:
@@ -36,3 +41,31 @@ def let(value: Column, body: Callable[[Column], Column]) -> Column:
     downstream field-by-name access resolves wrong.  Bind only the
     scalar/array computation and build named structs OUTSIDE the let."""
     return F.element_at(F.transform(F.array(value), body), 1)
+
+
+def per_jvm(build: Callable[..., T]) -> Callable[..., T]:
+    """Memoize ``build(*args)`` per Py4J gateway, i.e. per JVM.
+
+    Every node of a Column built in Python is one Py4J round trip, so a
+    pipeline that builds its fixed expression trees on each call pays
+    hundreds to thousands of round trips per call.  A Column is an
+    immutable JVM expression tree that any DataFrame on the same JVM can
+    reuse, so a builder whose result depends only on its (hashable)
+    arguments runs once per JVM.  Per-call values (a date, a lookup table)
+    belong in projected columns that the static trees reference by name.
+
+    The gateway is compared by identity, not ``id()``: a new gateway at a
+    recycled address must still rebuild."""
+    state: tuple = (None, {})
+
+    @functools.wraps(build)
+    def cached(*args):
+        nonlocal state
+        gateway, trees = state
+        if gateway is not SparkContext._gateway:
+            gateway, trees = state = (SparkContext._gateway, {})
+        if args not in trees:
+            trees[args] = build(*args)
+        return trees[args]
+
+    return cached

@@ -18,22 +18,30 @@ fullUrl) — so the per-bundle fullUrl->new-reference map is built on the
 INTACT bundle row (one `transform` + `map_from_entries` before the explode)
 and reference rewriting is pure `withField` struct surgery.  The RawStats
 row is likewise a projection over the intact bundle row (`filter` by
-resource type, last Patient, `transform` over the Conditions) with the two
-small dims as a map literal and a broadcast join.  Scan-to-sink has no
-shuffle on the rawstat path; the resource write's one rebalance shuffle
-lays out its output files.
+resource type, last Patient, `transform` over the Conditions); the
+condition dim arrives as one `_cond_map` column, a map the JVM builds from
+the dim in a scalar subquery, and the city dim through a broadcast join.
+Scan-to-sink has no shuffle on the rawstat path; the resource write's one
+rebalance shuffle lays out its output files.
+
+Every fixed expression tree is built once per JVM (functions.binding.
+per_jvm) and reused by each load, since each node built in Python costs
+one Py4J round trip; per-call values (``as_of``, the condition dim) enter
+as projected columns that the fixed trees reference by name.
 """
 
 from __future__ import annotations
 
 import os
 import re
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
+from bulkfhirloader_spark.functions.binding import per_jvm
 from bulkfhirloader_spark.functions.scalars import (
     NULL_DISEASE_ID,
     age_years,
@@ -98,14 +106,20 @@ def bundle_id_column(scan_root: str) -> Column:
     protected as %2B before decoding; a malformed sequence falls back to
     the undecoded string via try_url_decode + coalesce."""
     root = os.path.abspath(scan_root).rstrip("/") + "/"
+    return F.regexp_replace(_file_path_sans_json(), "^" + re.escape(root), "")
+
+
+@per_jvm
+def _file_path_sans_json() -> Column:
+    """The decoded path of the row's file, `.json` stripped; the root ends
+    in '/', so stripping the suffix before the root prefix is the same."""
     no_scheme = F.regexp_replace(
         F.input_file_name(), r"^[A-Za-z][A-Za-z0-9+.-]*:(//)?", ""
     )
     decoded = F.coalesce(
         F.try_url_decode(F.regexp_replace(no_scheme, r"\+", "%2B")), no_scheme
     )
-    rel = F.regexp_replace(decoded, "^" + re.escape(root), "")
-    return F.regexp_replace(rel, r"\.json$", "")
+    return F.regexp_replace(decoded, r"\.json$", "")
 
 
 def read_bundles(
@@ -173,6 +187,14 @@ def explode_entries(bundles: DataFrame) -> DataFrame:
     pure function of the row because new ids are deterministic.  Entries
     without a fullUrl are excluded from the map (nothing can reference
     them), matching the reference which keys refMap by entry.FullUrl."""
+    refmap, exploded, entries = _explode_columns()
+    # the map is projected before the posexplode, so it is built once per
+    # bundle, not once per entry
+    return bundles.withColumn("_refmap", refmap).select(*exploded).select(*entries)
+
+
+@per_jvm
+def _explode_columns() -> tuple[Column, list[Column], list[Column]]:
     refmap = F.map_from_entries(
         F.filter(
             F.transform(
@@ -188,17 +210,16 @@ def explode_entries(bundles: DataFrame) -> DataFrame:
             lambda kv: kv["key"].isNotNull(),
         )
     )
-    return (
-        bundles.withColumn("_refmap", refmap)
-        .select("bundle_id", "_refmap", F.posexplode("entry").alias("pos", "e"))
-        .select(
-            "bundle_id",
-            "pos",
-            F.col("e.fullUrl").alias("fullUrl"),
-            F.col("e.resource").alias("resource"),
-            "_refmap",
-        )
-    )
+    exploded = [F.col("bundle_id"), F.col("_refmap"),
+                F.posexplode("entry").alias("pos", "e")]
+    entries = [
+        F.col("bundle_id"),
+        F.col("pos"),
+        F.col("e.fullUrl").alias("fullUrl"),
+        F.col("e.resource").alias("resource"),
+        F.col("_refmap"),
+    ]
+    return refmap, exploded, entries
 
 
 # ---------------------------------------------------------------------------
@@ -211,10 +232,19 @@ def assign_ids(entries: DataFrame) -> DataFrame:
     ObjectIds; we use sha2(bundle_id|fullUrl) so the refMap needs no shared
     mutable state and outputs are reproducible.  new_ref is the rewritten
     reference string Type/id (F10, main.go:268)."""
+    for name, col in _id_columns():
+        entries = entries.withColumn(name, col)
+    return entries
+
+
+@per_jvm
+def _id_columns() -> list[tuple[str, Column]]:
     new_id = deterministic_id(F.col("bundle_id"), F.col("fullUrl"))
-    return entries.withColumn("new_id", new_id).withColumn(
-        "new_ref", make_reference(F.col("resource.resourceType"), new_id)
-    ).withColumn("resource", F.col("resource").withField("id", new_id))
+    return [
+        ("new_id", new_id),
+        ("new_ref", make_reference(F.col("resource.resourceType"), new_id)),
+        ("resource", F.col("resource").withField("id", new_id)),
+    ]
 
 
 def rewrite_references(entries: DataFrame) -> DataFrame:
@@ -238,6 +268,11 @@ def rewrite_references(entries: DataFrame) -> DataFrame:
     recurses into slices, bundle.go:192-221): scalar Reference fields get
     withField surgery; array<Reference> fields rewrite element-wise with
     ``transform`` — still a pure projection, still zero-shuffle."""
+    return entries.withColumn("resource", _rewritten_resource()).drop("_refmap")
+
+
+@per_jvm
+def _rewritten_resource() -> Column:
     res = F.col("resource")
     for p in REFERENCE_PATHS:
         old = F.col(f"resource.{p}.reference")
@@ -265,7 +300,7 @@ def rewrite_references(entries: DataFrame) -> DataFrame:
                 ),
             ).otherwise(arr),
         )
-    return entries.withColumn("resource", res).drop("_refmap")
+    return res
 
 
 # ---------------------------------------------------------------------------
@@ -277,23 +312,30 @@ def load_cousub_dim(spark: SparkSession, path: str) -> DataFrame:
     """S3 (main.go:137-167): county-subdivision dim; the SQL strips a
     ' Town' suffix from cs_name in the SELECT (F1, main.go:140-142)."""
     df = spark.read.schema(COUSUB_DIM_SCHEMA).parquet(path)
-    return df.select(
-        strip_suffix_case(F.col("cs_name"), " Town").alias("cs_name"),
-        "ct_fips",
-        "cs_fips",
-    )
+    return df.select(*_dim_columns()[0])
 
 
 def load_condition_dim(spark: SparkSession, path: str) -> DataFrame:
     """S4 (main.go:171-202): tracked-condition dim keyed by (system, code);
     NULL disease_id becomes -999 in the SELECT (F2, main.go:174)."""
     df = spark.read.schema(CONDITION_DIM_SCHEMA).parquet(path)
-    return df.select(
-        "condition_id",
+    return df.select(*_dim_columns()[1])
+
+
+@per_jvm
+def _dim_columns() -> tuple[list[Column], list[Column]]:
+    cousub = [
+        strip_suffix_case(F.col("cs_name"), " Town").alias("cs_name"),
+        F.col("ct_fips"),
+        F.col("cs_fips"),
+    ]
+    condition = [
+        F.col("condition_id"),
         F.coalesce(F.col("disease_id"), F.lit(NULL_DISEASE_ID)).alias("disease_id"),
-        "code_system",
-        "code",
-    )
+        F.col("code_system"),
+        F.col("code"),
+    ]
+    return cousub, condition
 
 
 # ---------------------------------------------------------------------------
@@ -301,13 +343,26 @@ def load_condition_dim(spark: SparkSession, path: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _one_per_key(dim: DataFrame, keys: list[str], values: list[str]) -> DataFrame:
+def _one_per_key(
+    dim: DataFrame, keys: tuple[str, ...], values: tuple[str, ...]
+) -> DataFrame:
     """One dim row per key, as in the reference's CousubMap / DiseaseMap
     (main.go:137-202), so no lookup multiplies a row; the smallest
     ``values`` tuple wins.  A small dim fits one partition, where the
     aggregation needs no shuffle."""
-    agg = dim.coalesce(1).groupBy(*keys).agg(F.min(F.struct(*values)).alias("_v"))
-    return agg.select(*keys, "_v.*")
+    group, smallest, flat = _one_per_key_columns(keys, values)
+    return dim.coalesce(1).groupBy(*group).agg(smallest).select(*flat)
+
+
+@per_jvm
+def _one_per_key_columns(
+    keys: tuple[str, ...], values: tuple[str, ...]
+) -> tuple[list[Column], Column, list[Column]]:
+    group = [F.col(k) for k in keys]
+    return group, F.min(F.struct(*values)).alias("_v"), [*group, F.col("_v.*")]
+
+
+_COND_KEY, _COND_VAL = ("code_system", "code"), ("condition_id", "disease_id")
 
 
 def derive_rawstat(
@@ -324,13 +379,17 @@ def derive_rawstat(
     - The LAST Patient in entry order wins (bundle.go:84-97 overwrites one
       basestat per Patient); its id is deterministic_id(bundle_id, fullUrl).
     - J2 (bundle.go:99-108): each Condition's (system, code) is looked up
-      in a map literal of the condition dim; a miss yields the Go
-      zero-value Disease (IDs 0), kept in ``conditions`` but filtered by
-      the stats pipelines' > 0.  A4 (bundle.go:24-51): array_distinct +
-      array_sort.  J1 (bundle.go:94-95): a broadcast left join on city.
+      in `_cond_map`, a map the JVM builds from the condition dim in one
+      scalar subquery (map_from_entries over collect_list); a miss yields
+      the Go zero-value Disease (IDs 0), kept in ``conditions`` but
+      filtered by the stats pipelines' > 0.  A4 (bundle.go:24-51):
+      array_distinct + array_sort.  J1 (bundle.go:94-95): a broadcast left
+      join on city.
     - Each dim keeps one row per key (_one_per_key): the smallest
       (ct_fips, cs_fips) per stripped city, the smallest (condition_id,
       disease_id) per (code_system, code).
+    - ``as_of`` and `_cond_map` are projected as columns, so every other
+      expression tree here is built once per JVM (_rawstat_columns).
 
     Gotchas preserved (SURVEY §4.3):
     - #1 agerange is the hard-coded 1 (bundle.go:90), but only inside the
@@ -342,22 +401,43 @@ def derive_rawstat(
     - deceasedboolean: false and NULL are equivalent to the P1 filter
       (bool with omitempty, models.go:11); the F4 boolean is stored as is.
     """
+    c = _rawstat_columns()
     if "entry" not in bundles.columns:  # exploded entries: re-nest, in entry order
-        bundles = bundles.groupBy("bundle_id").agg(
-            F.array_sort(F.collect_list(F.struct("pos", "fullUrl", "resource"))).alias("entry")
-        )
-    as_of = as_of if as_of is not None else F.lit(DEFAULT_AS_OF).cast("date")
-    # DiseaseMap as one map literal, built once on the driver.  A NULL key
-    # part never matches a coding, and a repeated key would raise under
-    # Spark's default spark.sql.mapKeyDedupPolicy.
-    key, val = ["code_system", "code"], ["condition_id", "disease_id"]
-    dim = condition_dim.filter(F.col("code_system").isNotNull() & F.col("code").isNotNull())
-    pairs = [F.struct(*(F.lit(r[c]).alias(c) for c in cols))
-             for r in _one_per_key(dim, key, val).collect() for cols in (key, val)]
-    cond_map = F.create_map(*pairs).cast(
-        "map<struct<code_system:string,code:string>,struct<condition_id:int,disease_id:int>>"
-    )
+        bundles = bundles.groupBy(c.bundle_id).agg(c.renested)
+    # DiseaseMap, computed in the JVM.  A NULL key part never matches a
+    # coding, and a repeated key would raise under Spark's default
+    # spark.sql.mapKeyDedupPolicy; coalesce(1) keeps the subquery
+    # shuffle-free.
+    dim = _one_per_key(condition_dim.filter(c.known_code), _COND_KEY, _COND_VAL)
+    cond_map = dim.select(c.cond_map).scalar()
+    as_of = as_of if as_of is not None else c.default_as_of
+    rows = bundles.select(c.bundle_id, c.entry, as_of.alias("_as_of"),
+                          cond_map.alias("_cond_map"))
+    rows = rows.select(*c.nested).select(*c.flat)
+    cousub = _one_per_key(cousub_dim, ("cs_name",), ("ct_fips", "cs_fips"))
+    j = rows.join(F.broadcast(cousub), rows.city == cousub.cs_name, "left")
+    return j.select(*c.out)
+
+
+class _RawstatColumns(NamedTuple):
+    bundle_id: Column
+    entry: Column
+    renested: Column
+    known_code: Column
+    cond_map: Column
+    default_as_of: Column
+    nested: list[Column]
+    flat: list[Column]
+    out: list[Column]
+
+
+@per_jvm
+def _rawstat_columns() -> _RawstatColumns:
+    """The fixed trees of derive_rawstat.  They read the per-call values
+    from the projected `_as_of` and `_cond_map` columns."""
+    bundle_id = F.col("bundle_id")
     entry = F.coalesce(F.col("entry"), F.array())
+    cond_map = F.col("_cond_map")
 
     def of_type(rtype: str) -> Column:
         return F.filter(entry, lambda e: e["resource"]["resourceType"] == rtype)
@@ -375,44 +455,60 @@ def derive_rawstat(
         )
 
     # select the last Patient once; the next projection reads its fields
-    rows = bundles.select(
-        "bundle_id",
+    nested = [
+        bundle_id,
         F.try_element_at(of_type("Patient"), F.lit(-1)).alias("_patient"),
         F.transform(of_type("Condition"), condition).alias("conditions"),
-    )
+        F.col("_as_of"),
+    ]
     patient = F.col("_patient")
     p, has_patient = patient["resource"], patient.isNotNull()
     addr = first_element(p["address"])  # F6: Address[0] only
-    rows = rows.select(
-        "bundle_id",
-        F.when(has_patient, deterministic_id(F.col("bundle_id"), patient["fullUrl"]))
+    flat = [
+        bundle_id,
+        F.when(has_patient, deterministic_id(bundle_id, patient["fullUrl"]))
         .otherwise(F.lit("")).alias("id"),
         p["gender"].alias("gender"),
         F.when(has_patient, F.lit(1)).otherwise(F.lit(0)).alias("agerange"),  # gotcha #1
-        F.when(has_patient, age_years(F.to_date(p["birthDate"]), as_of))
+        F.when(has_patient, age_years(F.to_date(p["birthDate"]), F.col("_as_of")))
         .otherwise(F.lit(0)).alias("age"),
         F.when(has_patient, is_deceased(  # F4 tri-state (bundle.go:91)
             F.to_timestamp(p["deceasedDateTime"]), p["deceasedBoolean"]
         )).alias("deceasedboolean"),
         addr["city"].alias("city"),
         addr["postalCode"].alias("zipcode"),
-        "conditions",
-    )
-    cousub = _one_per_key(cousub_dim, ["cs_name"], ["ct_fips", "cs_fips"])
-    j = rows.join(F.broadcast(cousub), rows.city == cousub.cs_name, "left")
+        F.col("conditions"),
+    ]
     loc = {"countyid_fips": "ct_fips", "subcountyid_fips": "cs_fips",
            "city": "city", "zipcode": "zipcode"}
 
     def distinct_ids(field: str) -> Column:
         return F.array_sort(F.array_distinct(F.transform("conditions", lambda c: c[field])))
 
-    return j.select(
-        "bundle_id", "id", "gender", "agerange", "age", "deceasedboolean",
+    out = [
+        *(F.col(c) for c in ("bundle_id", "id", "gender", "agerange", "age",
+                             "deceasedboolean")),
         F.struct(*(F.coalesce(F.col(c), F.lit("")).alias(n) for n, c in loc.items()))
         .alias("location"),
-        "conditions",
+        F.col("conditions"),
         distinct_ids("conditionid").alias("uniqueconditions"),
         distinct_ids("diseaseid").alias("uniquediseases"),
+    ]
+    return _RawstatColumns(
+        bundle_id=bundle_id,
+        entry=F.col("entry"),
+        renested=F.array_sort(
+            F.collect_list(F.struct("pos", "fullUrl", "resource"))
+        ).alias("entry"),
+        known_code=F.col("code_system").isNotNull() & F.col("code").isNotNull(),
+        cond_map=F.map_from_entries(
+            F.collect_list(F.struct(F.struct(*_COND_KEY), F.struct(*_COND_VAL)))
+        ).cast("map<struct<code_system:string,code:string>,"
+               "struct<condition_id:int,disease_id:int>>"),
+        default_as_of=F.lit(DEFAULT_AS_OF).cast("date"),
+        nested=nested,
+        flat=flat,
+        out=out,
     )
 
 
@@ -438,11 +534,16 @@ def write_resources(entries: DataFrame, out_dir: str) -> None:
     serialize the write.  Cost: the one payload shuffle that produces
     the final layout — the bytes move exactly once, into the files they
     belong in (guide §8's rule)."""
-    entries.withColumn(
-        "collection", collection_name(F.col("resource.resourceType"))
-    ).hint("rebalance", "collection").write.mode("append").partitionBy(
-        "collection"
-    ).parquet(out_dir)
+    entries.withColumn("collection", resource_collection()).hint(
+        "rebalance", "collection"
+    ).write.mode("append").partitionBy("collection").parquet(out_dir)
+
+
+@per_jvm
+def resource_collection() -> Column:
+    """F7 over each entry's resource type: the collection an entry is
+    routed to, and the partition column of the resource store."""
+    return collection_name(F.col("resource.resourceType"))
 
 
 def write_rawstat(rawstat: DataFrame, out_dir: str) -> None:
@@ -487,22 +588,18 @@ def run_pipeline(
       from every downstream count and fact.
     """
     obs = Observation("a5_record_counter")
-    corrupt_flag = F.col(CORRUPT_RECORD_COL).isNotNull()
+    corrupt, counters, quarantined, good_only = _corrupt_columns()
     bundles = (
         read_bundles(spark, bundles_path, capture_corrupt=True)
-        .observe(
-            obs,
-            F.count(F.lit(1)).alias("bundles"),
-            F.sum(corrupt_flag.cast("long")).alias("corrupt"),
-        )
+        .observe(obs, *counters)
         .persist(StorageLevel.DISK_ONLY)
     )
     try:
-        bundles.filter(corrupt_flag).select(
-            "bundle_id", F.col(CORRUPT_RECORD_COL).alias("raw_text")
-        ).write.mode("overwrite").parquet(os.path.join(out_dir, "quarantine"))
+        bundles.filter(corrupt).select(*quarantined).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(out_dir, "quarantine"))
         counts = obs.get  # first action done — metrics available
-        good = bundles.filter(~corrupt_flag).drop(CORRUPT_RECORD_COL)
+        good = bundles.filter(good_only).drop(CORRUPT_RECORD_COL)
         entries = rewrite_references(assign_ids(explode_entries(good)))
         cousub = load_cousub_dim(spark, cousub_dim_path)
         conddim = load_condition_dim(spark, condition_dim_path)
@@ -537,3 +634,14 @@ def run_pipeline(
         "corrupt_bundles": n_corrupt,
         "out_dir": out_dir,
     }
+
+
+@per_jvm
+def _corrupt_columns() -> tuple[Column, list[Column], list[Column], Column]:
+    corrupt = F.col(CORRUPT_RECORD_COL).isNotNull()
+    counters = [
+        F.count(F.lit(1)).alias("bundles"),
+        F.sum(corrupt.cast("long")).alias("corrupt"),
+    ]
+    quarantined = [F.col("bundle_id"), F.col(CORRUPT_RECORD_COL).alias("raw_text")]
+    return corrupt, counters, quarantined, ~corrupt

@@ -12,7 +12,8 @@ The transformation is THE SAME code as batch ingest: ID assignment and
 reference rewriting run inside foreachBatch on each micro-batch
 DataFrame.  Per-bundle operations (groupBy bundle_id) are legal there
 because foreachBatch hands us a plain batch DataFrame, which is sized by
-its input bytes like the batch scan (size_by_bytes).
+its input bytes like the batch scan (size_by_bytes).  The batch builders'
+expression trees are built once per JVM, so each micro-batch reuses them.
 """
 
 from __future__ import annotations
@@ -20,16 +21,15 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from bulkfhirloader_spark.ingest.pipeline import (
     assign_ids,
     bundle_id_column,
     explode_entries,
+    resource_collection,
     rewrite_references,
     size_by_bytes,
 )
-from bulkfhirloader_spark.functions.scalars import collection_name
 from bulkfhirloader_spark.schemas import BUNDLE_SCHEMA
 
 
@@ -58,11 +58,9 @@ def stream_ingest_available_now(
 
     def process_batch(batch_df: DataFrame, _batch_id: int) -> None:
         entries = rewrite_references(assign_ids(explode_entries(size_by_bytes(batch_df))))
-        entries.withColumn(
-            "collection", collection_name(F.col("resource.resourceType"))
-        ).write.mode("append").partitionBy("collection").parquet(
-            os.path.join(out_dir, "resources")
-        )
+        entries.withColumn("collection", resource_collection()).write.mode(
+            "append"
+        ).partitionBy("collection").parquet(os.path.join(out_dir, "resources"))
 
     q = (
         stream.writeStream.foreachBatch(process_batch)

@@ -20,14 +20,18 @@ Fixture design (FIXTURES.md §2):
 
 from __future__ import annotations
 
+import gc
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
+from bulkfhirloader_spark.functions.binding import per_jvm
 from bulkfhirloader_spark.ingest import pipeline as ing
 from bulkfhirloader_spark.operators import stats
+from bulkfhirloader_spark.schemas import CORRUPT_RECORD_COL
 from bulkfhirloader_spark.sinks import facts as sinks
 
 
@@ -293,14 +297,18 @@ def test_k3_k4_truncate_before_load(ingest_env, spark):
     assert spark.read.parquet(path).count() == facts.count()
 
 
-def test_cli_end_to_end(ingest_env, spark):
+def test_cli_end_to_end(ingest_env, spark, capsys):
     """Entry point 1 (main.go:27-133) via the CLI: ingest + stats phases,
-    fact outputs equal to calling the stats pipelines directly."""
+    fact outputs equal to calling the stats pipelines directly; a corrupt
+    file is counted apart from the loaded bundles and reported."""
     from bulkfhirloader_spark import cli
 
     root = ingest_env["root"]
+    bundles = root / "cli_bundles"
+    shutil.copytree(root / "bundles", bundles)
+    (bundles / "bad.json").write_text('{"resourceType": "Bundle", "entry": [')
     res = cli.main([
-        "--path", str(root / "bundles"),
+        "--path", str(bundles),
         "--cousub-dim", str(root / "dims" / "cousub"),
         "--condition-dim", str(root / "dims" / "conddim"),
         "--out", str(root / "cli_out"),
@@ -310,6 +318,8 @@ def test_cli_end_to_end(ingest_env, spark):
         "--debug",
     ])
     assert res["bundles"] == 6
+    assert res["corrupt_bundles"] == 1
+    assert "(1 corrupt files quarantined)" in capsys.readouterr().out
     rs = spark.read.parquet(str(root / "cli_out" / "rawstat"))
     pop_direct = {tuple(r) for r in stats.population_facts(rs).collect()}
     pop_cli = {
@@ -491,6 +501,127 @@ def test_condition_dim_duplicate_code_matches_once(edge_env):
     assert [(c["conditionid"], c["diseaseid"]) for c in acton["conditions"]] == [(101, 11)]
     assert acton["uniqueconditions"] == [101]
     assert acton["uniquediseases"] == [11]
+
+
+def _build_load(spark, root, as_of):
+    """One load's DataFrames, built but not run: the resource entries, the
+    rawstat rows and the three facts over them."""
+    bundles = ing.read_bundles(spark, str(root / "bundles"), capture_corrupt=True)
+    good = bundles.filter(F.col(CORRUPT_RECORD_COL).isNull()).drop(CORRUPT_RECORD_COL)
+    entries = ing.rewrite_references(ing.assign_ids(ing.explode_entries(good)))
+    rawstat = ing.derive_rawstat(
+        good,
+        ing.load_cousub_dim(spark, str(root / "dims" / "cousub")),
+        ing.load_condition_dim(spark, str(root / "dims" / "conddim")),
+        as_of,
+    )
+    return [entries, rawstat, stats.population_facts(rawstat),
+            stats.disease_facts(rawstat), stats.condition_facts(rawstat)]
+
+
+def test_load_build_round_trip_budget(ingest_env, spark, monkeypatch):
+    """Building a load's DataFrames again in a session reuses the fixed
+    expression trees: the Py4J round trips stay O(1) in the plan size
+    (about 5,600 when every call rebuilt every Column node)."""
+    from py4j.clientserver import ClientServerConnection
+
+    root = ingest_env["root"]
+    _build_load(spark, root, F.lit("2020-01-01").cast("date"))
+    send = ClientServerConnection.send_command
+    calls = []
+
+    def counting(self, command):
+        calls.append(command)
+        return send(self, command)
+
+    gc.collect()
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    built = _build_load(spark, root, F.lit("2021-01-01").cast("date"))
+    monkeypatch.undo()
+    assert len(calls) <= 1500, len(calls)
+    assert len(built[1].collect()) == 6
+
+
+@pytest.fixture(scope="module")
+def two_bundles(spark, tmp_path_factory):
+    """One bundle with a tracked Condition, one with a Patient only."""
+    root = tmp_path_factory.mktemp("twobundles")
+    (root / "sick.json").write_text(json.dumps(_bundle([
+        _patient("urn:uuid:p1", birth="1980-06-01", city="Boston"),
+        _condition("urn:uuid:c1", SNOMED, "44054006", subject="urn:uuid:p1"),
+    ])))
+    (root / "well.json").write_text(json.dumps(_bundle([
+        _patient("urn:uuid:p2", birth="1990-06-01", city="Boston"),
+    ])))
+    cousub = spark.createDataFrame(
+        [("Boston", "025", "07000")], "cs_name string, ct_fips string, cs_fips string")
+    return ing.read_bundles(spark, str(root)), cousub
+
+
+def _conddim(spark, rows):
+    return spark.createDataFrame(
+        rows, "condition_id int, disease_id int, code_system string, code string")
+
+
+def test_derive_rawstat_calls_keep_their_own_dim_and_as_of(spark, two_bundles):
+    """The fixed trees are shared, the per-call values are not: two
+    derivations built side by side, with different condition dims and
+    as_of dates, each return their own ids and ages."""
+    bundles, cousub = two_bundles
+    first = ing.derive_rawstat(
+        bundles, cousub, _conddim(spark, [(101, 11, SNOMED, "44054006")]),
+        F.lit("2020-01-01").cast("date"))
+    second = ing.derive_rawstat(
+        bundles, cousub, _conddim(spark, [(201, 21, SNOMED, "44054006")]),
+        F.lit("2030-01-01").cast("date"))
+    for df, ids, ages in ((first, (101, 11), (39, 29)), (second, (201, 21), (49, 39))):
+        rows = {r["bundle_id"]: r for r in df.collect()}
+        (c,) = rows["sick"]["conditions"]
+        assert (c["conditionid"], c["diseaseid"]) == ids
+        assert (rows["sick"]["uniqueconditions"], rows["sick"]["uniquediseases"]) == (
+            [ids[0]], [ids[1]])
+        assert (rows["sick"]["age"], rows["well"]["age"]) == ages
+
+
+def test_empty_condition_dim_maps_every_condition_to_zero(spark, two_bundles):
+    """A zero-row condition dim gives an empty `_cond_map`: every Condition
+    gets the zero-value ids (0, 0), and each bundle still has one row."""
+    bundles, cousub = two_bundles
+    rawstat = ing.derive_rawstat(bundles, cousub, _conddim(spark, []))
+    rows = {r["bundle_id"]: r for r in rawstat.collect()}
+    assert len(rows) == 2
+    (c,) = rows["sick"]["conditions"]
+    assert (c["code"], c["conditionid"], c["diseaseid"]) == ("44054006", 0, 0)
+    assert rows["sick"]["uniqueconditions"] == [0]
+    assert rows["well"]["conditions"] == []
+
+
+def test_per_jvm_rebuilds_for_another_gateway(monkeypatch):
+    """per_jvm builds once per (gateway, args) and rebuilds when the
+    gateway object changes, even for a stand-in that compares equal."""
+    from pyspark import SparkContext
+
+    class EqualGateway:
+        def __eq__(self, other):
+            return True
+
+        __hash__ = object.__hash__
+
+    builds = []
+
+    @per_jvm
+    def tree(n):
+        builds.append(n)
+        return object()
+
+    one = tree(1)
+    assert tree(1) is one and builds == [1]
+    assert tree(2) is not one and builds == [1, 2]
+    monkeypatch.setattr(SparkContext, "_gateway", EqualGateway())
+    assert tree(1) is not one and builds == [1, 2, 1]
+    assert tree(1) is tree(1) and builds == [1, 2, 1]
+    monkeypatch.undo()
+    assert tree(1) is not one and builds == [1, 2, 1, 1]
 
 
 def test_mongo_write_option_surface_pinned():

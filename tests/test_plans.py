@@ -160,7 +160,8 @@ def _write_tiny_bundles(path, n):
 def test_rawstat_over_bundle_rows_has_no_shuffle(spark, tmp_path):
     """The rawstat row is a projection over its bundle row: no shuffle
     Exchange between the scan and the rawstat sink.  The city dim arrives
-    through a BroadcastExchange; the condition dim is a map literal."""
+    through a BroadcastExchange; the condition dim is the `_cond_map` column,
+    a map built in the JVM by a shuffle-free scalar subquery."""
     import re
 
     from bulkfhirloader_spark.ingest import pipeline as ing
