@@ -24,40 +24,14 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
+# the headline registry entries are the repo benchmark's query_mix list
+sys.path.insert(0, os.path.join(_HERE, "perfbench"))
 
 from bulkfhirloader_spark.queries.registry import REGISTRY
 from bulkfhirloader_spark.session import get_spark
-
-HEADLINE = [
-    "q1_lineitem_pricing",
-    "q3_top_unshipped_orders",
-    "q5_supplier_volume",
-    "ref_a1_population_facts",
-    "ref_a2_disease_facts",
-    "ext_topk_customers_by_nation",
-    "dedup_exact",
-    "dedup_minhash_pairs",
-    "text_quality_stats",
-    "sim_topk_bruteforce",
-    "win_session",
-    "ext_bloom_semi_lineitem",
-    "sim_topk_pandas",
-    "cur_full_pipeline",
-    "ext_funnel_conversion",
-    "cur_latest_event_per_user",
-    # r6 addition: the incremental-admission dedup pipeline (band join with
-    # a new-batch-only right side + exact verify + new-new clustering) —
-    # the round's flagship operator, tracked so its 4-phase plan has a
-    # round-over-round perf signal.
-    "dedup_incremental_admission",
-    # r9 additions (verdict ask #8): the two r8 scale mechanisms, tracked
-    # round-over-round by the official artifact — the stored-IVF probe
-    # (prebuilt index; measures partition-pruned probe cost only) and the
-    # skew-capped MinHash band join (cap engaged at its registry params).
-    "sim_topk_ivf_stored",
-    "dedup_minhash_capped",
-]
+from workloads import HEADLINE
 
 
 def _cpu_ticks() -> tuple[int, int] | None:
@@ -233,7 +207,8 @@ def main() -> None:
     # sim_topk_pandas's 7.4 s first-in-session cold, and the reason that
     # row oscillated 1.7-2.4 s across rounds 7-9 (it is the headline's
     # first Arrow query, so it absorbed a box-state-dependent session tax;
-    # scripts/pandas_cold_breakdown.py holds the decomposition).  A 1-row
+    # SCALE.md "`sim_topk_pandas` cold oscillation root-caused" holds the
+    # decomposition).  A 1-row
     # identity mapInPandas shares no plan, scan, or broadcast with any
     # timed query — it only spawns the pool, exactly like the per-table
     # scan warmup above — so cold rows now measure their QUERY (codegen +

@@ -6,13 +6,35 @@ which would silently disagree with object-store-backed deployments."""
 from __future__ import annotations
 
 
+def _fs(spark, path: str):
+    """(FileSystem, Path) for ``path`` on the session's Hadoop filesystem."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
 def fs_path_exists(spark, path: str) -> bool:
     """True iff ``path`` exists on the session's Hadoop filesystem (the
     public FileSystem#exists — one namenode/list call, no Spark job)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _fs(spark, path)
     return bool(fs.exists(hpath))
+
+
+def fs_dir_has_entries(spark, path: str) -> bool:
+    """True iff ``path`` is a directory with at least one child."""
+    fs, hpath = _fs(spark, path)
+    return bool(fs.exists(hpath)) and len(fs.listStatus(hpath)) > 0
+
+
+def fs_touch(spark, path: str) -> None:
+    """Create (or truncate) the empty file ``path``, parents included."""
+    fs, hpath = _fs(spark, path)
+    fs.create(hpath, True).close()
+
+
+def fs_delete(spark, path: str) -> None:
+    """Remove the file ``path`` if it exists."""
+    fs, hpath = _fs(spark, path)
+    fs.delete(hpath, False)
 
 
 def fs_dir_fingerprint(spark, path: str) -> tuple:
@@ -23,9 +45,7 @@ def fs_dir_fingerprint(spark, path: str) -> tuple:
     rewrite existing ones, so this changes iff the directory's data
     changed — the memo-invalidation signal for grown signature stores.
     Raises ValueError with the path if it does not exist."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _fs(spark, path)
     if not fs.exists(hpath):
         raise ValueError(f"no such store directory: {path}")
     return tuple(
@@ -33,60 +53,3 @@ def fs_dir_fingerprint(spark, path: str) -> tuple:
             (st.getPath().getName(), st.getLen()) for st in fs.listStatus(hpath)
         )
     )
-
-
-def store_meta_lifecycle(
-    spark,
-    meta_path: str,
-    data_path: str,
-    meta_schema: str,
-    meta_values: tuple,
-    validator,
-    mode: str,
-):
-    """The ONE meta lifecycle both parquet signature stores share (minhash
-    store in operators/dedup.py, banded store in streaming/joins.py), so
-    their bootstrap/validate/refuse semantics cannot silently diverge.
-
-    append: resolves the meta NOW — existing meta is validated via
-    ``validator(rows)`` (hard error on geometry mismatch), data WITHOUT a
-    readable meta refuses loudly (appending a second geometry beside the
-    first would produce rows that never collide with probes), and a fresh
-    store bootstraps its meta.  Returns a no-op.
-
-    overwrite: returns a ``finalize()`` the caller MUST invoke AFTER the
-    data write, so the meta acts as the commit marker — a failure between
-    data and meta leaves the OLD meta in place, which the writer's own
-    retry then trips over (validation mismatch) instead of silently
-    validating new-geometry meta against old-geometry rows.  Overwrite is
-    still not crash-atomic for concurrent READERS (a reader racing the
-    data overwrite can see torn state); store replacement under live
-    readers should build at a fresh path and swap the pointer.
-
-    SINGLE-WRITER CONTRACT: there is no cross-writer exclusion anywhere in
-    this lifecycle.  In particular, two FIRST-TIME appenders racing under
-    different geometries can each pass the no-meta check and bootstrap,
-    with the last meta write silently stamping one geometry over the
-    other's rows.  Store writes must be serialized by the caller (the
-    admission flow does: one batch is admitted, then appended, then the
-    next batch runs) — the same contract as the append-unique-ids rule
-    documented on both store writers."""
-
-    def write_meta() -> None:
-        spark.createDataFrame([meta_values], meta_schema).coalesce(
-            1
-        ).write.mode("overwrite").parquet(meta_path)
-
-    if mode == "append":
-        if fs_path_exists(spark, meta_path):
-            validator(spark.read.parquet(meta_path).collect())
-        elif fs_path_exists(spark, data_path):
-            raise ValueError(
-                f"store at {data_path} has data but no readable meta at "
-                f"{meta_path} — refusing to append under an unverifiable "
-                f"geometry; rebuild the store or restore its meta"
-            )
-        else:
-            write_meta()
-        return lambda: None
-    return write_meta

@@ -22,17 +22,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from bulkfhirloader_spark.fsutil import (
-    fs_dir_fingerprint,
-    fs_path_exists,
-    store_meta_lifecycle,
-)
+from bulkfhirloader_spark.fsutil import fs_dir_fingerprint
 from bulkfhirloader_spark.functions.binding import let
 from bulkfhirloader_spark.operators.text import normalize_text, tokens
-from bulkfhirloader_spark.sources.bucketing import (
-    bucketed_table_name,
-    register_external_bucketed_table,
-)
+from bulkfhirloader_spark.sources.stores import SIGNATURE_BANDS
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:
@@ -1670,102 +1663,32 @@ def signature_store_write(
     bands: int | None = None,
     num_buckets: int | None = None,
 ) -> None:
-    """Persist MinHash signatures for ``docs`` into the parquet signature
-    store at ``path`` — the deployment half of the incremental-admission
-    contract (the operator docstring's "stored signature table", the one
-    measured corpus-linear term of the self-contained form: SCALE.md's
-    fixed-batch table showed ~4.4× cost for a 10× corpus, all of it the
-    existing side's shingle+minhash recompute).
+    """Persist MinHash signatures for ``docs`` into the signature store at
+    ``path`` — the deployment half of the incremental-admission contract:
+    the existing side is scanned as a columnar projection instead of
+    re-shingling the corpus text (SCALE.md's fixed-batch table: ~4.4×
+    cost for a 10× corpus, all of it that recompute).
 
-    Layout (all Spark-written, so the store lives wherever the cluster's
-    storage does — object store included, no driver-local filesystem
-    assumptions):
-      <path>/meta.parquet — one row (num_hashes, shingle_words): the
-          geometry the signatures were computed under.  Band count is NOT
-          stored: banding is a pure projection over the signature array,
-          so readers may re-band stored signatures any way that divides
-          num_hashes.
-      <path>/sigs         — (id, minhash array<long>) rows, appended per
-          admitted batch (~K longs/doc; at K=16 that is ~128 B/doc —
-          a 10⁹-doc corpus's store is ~130 GB of longs, scanned as a
-          columnar projection instead of re-shingling the corpus text).
-
-    ``mode="append"`` extends an existing store after validating that its
-    geometry matches (admitting under one geometry and probing under
-    another would silently miss every collision); "overwrite" replaces
-    store + meta, writing the DATA first and the meta last (commit-marker
-    ordering: a mid-overwrite failure leaves the old meta, which the
-    retry trips over loudly, instead of new-geometry meta validating over
-    old-geometry rows).  Overwrite is not crash-atomic for concurrent
-    readers — replace a live store by building at a fresh path and
-    swapping the pointer.  Id uniqueness across appended batches is the CALLER's
-    contract (ids name pair-graph nodes downstream), which the admission
-    flow provides by construction: each appended batch is the admitted
-    (hence id-distinct, never-readmitted) subset.
-
-    BUCKETED BANDED LAYOUT (r12, the r11 verdict's "Next round #2"): pass
-    ``bands=<b>, num_buckets=<n>`` and the store ALSO persists the banded
-    projection — (id, band_idx, band_hash) rows at ``<path>/bands``, an
-    external bucketed table ``bucketBy(n, "band_hash") .sortBy
-    ("band_hash")``, catalog name in the meta.  The probe tier of
-    incremental_near_dup_filter then reads band rows directly from this
-    table with the NEW BATCH's band hashes pushed as an ``IN`` filter —
-    planning-time bucket pruning plus per-bucket-sorted row groups for
-    min/max page skipping — instead of scanning and re-banding every
-    stored signature: the store-side probe cost follows the probed key
-    set, not the corpus (the plain stored tier's one measured
-    corpus-linear term, ~2.5 µs/doc at 5M — SCALE.md third-decade table).
-    Banding becomes PINNED at write time (the plain store's re-bandable
-    property is traded away; probing under a different ``bands`` raises),
-    and layout mismatches on append refuse in both directions, same as
-    the streaming banded store: plain part files beside bucketed ones are
-    invisible to pruned scans — silent duplicate admission.  ``sigs`` is
-    still written either way, so signature_store_read and
-    validate_store_ids work identically on both layouts."""
-    spark = docs.sparkSession
-    meta_path = f"{path}/meta.parquet"
+    ``<path>/sigs`` always holds plain (id, minhash array<long>) rows,
+    ~K longs per doc, re-bandable any way that divides ``num_hashes``;
+    (num_hashes, shingle_words) is the geometry.  ``bands=<b>,
+    num_buckets=<n>`` (they come together) also persists the banded
+    projection, (id, band_idx, band_hash) rows at ``<path>/bands``
+    bucketed on ``band_hash``, so incremental_near_dup_filter reads only
+    the buckets of the new batch's band hashes: the store-side probe
+    follows the probed key set, not the corpus.  Banding is then pinned
+    at write time.  The meta lifecycle, refusals (``banded-layout
+    mismatch``) and single-writer contract are the family's
+    (sources.stores); each appended batch is the admitted, hence
+    id-distinct, subset."""
     if (num_buckets is None) != (bands is None):
         raise ValueError(
             "signature_store_write: bands and num_buckets come together — "
             "the bucketed layout pre-projects band rows (bands pinned at "
             "write time), a plain store stays re-bandable and needs neither"
         )
-    bucket_table = (
-        bucketed_table_name("bfls_sigbands", path) if num_buckets is not None else None
-    )
-    resolved: dict = {}
-
-    def _validate(rows: list) -> None:
-        _validate_store_geometry(rows, meta_path, num_hashes, shingle_words)
-        got_bands, got_buckets, got_table = _meta_band_spec(rows[0])
-        if (got_bands, got_buckets) != (bands, num_buckets):
-            raise ValueError(
-                f"signature store banded-layout mismatch at {meta_path}: "
-                f"store was written with (bands, num_buckets)="
-                f"{(got_bands, got_buckets)}, caller asked "
-                f"{(bands, num_buckets)} — mixing plain and bucketed band "
-                f"files (or two band splits) under one store silently "
-                f"corrupts pruned probes.  Rebuild the store to change its "
-                f"layout"
-            )
-        resolved["bucket_table"] = got_table
-
-    # shared lifecycle (fsutil.store_meta_lifecycle): append validates /
-    # refuses-on-data-without-meta / bootstraps NOW; overwrite defers the
-    # meta write until AFTER the data lands (meta = commit marker, so a
-    # mid-overwrite failure trips the writer's retry on the OLD meta
-    # instead of silently validating new meta over old rows)
-    finalize_meta = store_meta_lifecycle(
-        spark,
-        meta_path,
-        f"{path}/sigs",
-        "num_hashes int, shingle_words int, "
-        "bands int, num_buckets int, bucket_table string",
-        (num_hashes, shingle_words, bands, num_buckets, bucket_table),
-        _validate,
-        mode,
-    )
-    bucket_table = resolved.get("bucket_table", bucket_table)
+    if num_buckets is not None:
+        require_band_geometry(num_hashes, bands)
     sigs = minhash_signatures(
         docs.select(F.col(id_col), F.col(text_col)),
         id_col,
@@ -1774,98 +1697,25 @@ def signature_store_write(
         shingle_words,
     )
     if num_buckets is not None:
-        # two writes read the signatures (sigs parquet + banded table);
-        # persist so shingling+minhash runs once, released right after
+        # two writes read the signatures: shingle + minhash once
         sigs = sigs.persist()
     try:
-        sigs.write.mode(mode).parquet(f"{path}/sigs")
-        if num_buckets is not None:
-            require_band_geometry(num_hashes, bands)
-            banded = sigs.select(
-                F.col(id_col).alias("id"),
-                F.posexplode(band_hash_array("minhash", bands, num_hashes))
-                .alias("band_idx", "band_hash"),
-            )
-            if mode == "overwrite" and spark.catalog.tableExists(bucket_table):
-                # overwrite = fresh create (a changed schema can never
-                # half-apply against a stale catalog entry)
-                spark.sql(f"DROP TABLE `{bucket_table}`")
-            elif (
-                mode == "append"
-                and not spark.catalog.tableExists(bucket_table)
-                and fs_path_exists(spark, f"{path}/bands")
-            ):
-                # fresh session appending to an existing bucketed store:
-                # re-attach so Spark validates the bucket spec and writes
-                # bucket-hashed file names
-                register_signature_bands_table(spark, path)
-            (
-                # repartition on the bucket expression first: a bucketed
-                # write otherwise emits one file per (task, bucket) pair —
-                # num_tasks × num_buckets small files per append; hash-
-                # partitioned on the same Murmur3 the bucketing uses, each
-                # bucket's rows land in one task → ≤ num_buckets files per
-                # append, and the per-bucket sortBy sorts whole buckets
-                banded.repartition(num_buckets, F.col("band_hash"))
-                .write.format("parquet")
-                .mode(mode)
-                .bucketBy(num_buckets, "band_hash")
-                .sortBy("band_hash")
-                .option("path", f"{path}/bands")
-                .saveAsTable(bucket_table)
-            )
+        with SIGNATURE_BANDS.writing(
+            docs.sparkSession, path, mode, (num_hashes, shingle_words),
+            (bands, num_buckets),
+        ) as save:
+            sigs.write.mode(mode).parquet(f"{path}/sigs")
+            if num_buckets is not None:
+                save(sigs.select(
+                    F.col(id_col).alias("id"),
+                    F.posexplode(band_hash_array("minhash", bands, num_hashes))
+                    .alias("band_idx", "band_hash"),
+                ))
     finally:
-        if num_buckets is not None:
-            try:
-                sigs.unpersist()
-            except Exception:  # pragma: no cover
-                pass
-    finalize_meta()
+        sigs.unpersist()
 
 
-def _meta_band_spec(meta_row) -> tuple:
-    """(bands, num_buckets, bucket_table) of a signature-store meta row —
-    tolerant of pre-r12 two-column metas, which read as plain
-    (None, None, None)."""
-    d = meta_row.asDict()
-    return d.get("bands"), d.get("num_buckets"), d.get("bucket_table")
-
-
-def register_signature_bands_table(spark, path: str) -> str:
-    """Re-attach the bucketed band table of the signature store at
-    ``path`` to THIS session's catalog (restart case — no data rewrite;
-    see sources.bucketing.register_external_bucketed_table).  The store
-    must have been written with ``bands/num_buckets``."""
-    meta_path = f"{path}/meta.parquet"
-    rows = spark.read.parquet(meta_path).collect()
-    if len(rows) != 1:
-        raise ValueError(f"corrupt signature store meta at {meta_path}: {rows}")
-    _bands, num_buckets, table = _meta_band_spec(rows[0])
-    if num_buckets is None or table is None:
-        raise ValueError(
-            f"signature store at {path} has no bucketed band table — "
-            f"rebuild it with signature_store_write(..., bands=<b>, "
-            f"num_buckets=<n>) for the pruned-probe layout"
-        )
-    return register_external_bucketed_table(
-        spark, table, f"{path}/bands", "band_hash", num_buckets, ["band_hash"]
-    )
-
-
-def _validate_store_geometry(
-    rows: list, meta_path: str, num_hashes: int, shingle_words: int
-) -> None:
-    if len(rows) != 1:
-        raise ValueError(f"corrupt signature store meta at {meta_path}: {rows}")
-    m = rows[0]
-    if m["num_hashes"] != num_hashes or m["shingle_words"] != shingle_words:
-        raise ValueError(
-            f"signature store geometry mismatch: store has "
-            f"num_hashes={m['num_hashes']}, shingle_words={m['shingle_words']}; "
-            f"caller asked num_hashes={num_hashes}, shingle_words={shingle_words} "
-            f"— signatures under different geometries never collide, so this "
-            f"probe would silently admit every duplicate"
-        )
+register_signature_bands_table = SIGNATURE_BANDS.register
 
 
 def signature_store_read(
@@ -1874,10 +1724,7 @@ def signature_store_read(
     """(id, minhash) rows of the store at ``path``, geometry-validated
     against the caller's parameters (hard error on mismatch — see
     signature_store_write)."""
-    meta_path = f"{path}/meta.parquet"
-    _validate_store_geometry(
-        spark.read.parquet(meta_path).collect(), meta_path, num_hashes, shingle_words
-    )
+    SIGNATURE_BANDS.meta(spark, path, (num_hashes, shingle_words))
     df = spark.read.parquet(f"{path}/sigs")
     # The store's id column is POSITIONAL semantics (whatever id_col the
     # writer used); detect it generically as the single non-'minhash'
@@ -2069,14 +1916,14 @@ def incremental_near_dup_filter(
     union_docs = existing.select(F.col(id_col), F.col(text_col)).unionByName(
         new_batch.select(F.col(id_col), F.col(text_col))
     )
-    store_band_spec = (None, None, None)
+    store_bands = store_buckets = None
     if signature_store is not None:
-        meta_rows = spark.read.parquet(f"{signature_store}/meta.parquet").collect()
-        _validate_store_geometry(
-            meta_rows, f"{signature_store}/meta.parquet", num_hashes, shingle_words
+        store_bands, store_buckets = SIGNATURE_BANDS.layout_of(
+            SIGNATURE_BANDS.meta(
+                spark, signature_store, (num_hashes, shingle_words)
+            )
         )
-        store_band_spec = _meta_band_spec(meta_rows[0])
-    if store_band_spec[1] is not None:
+    if store_buckets is not None:
         # BUCKETED BANDED STORE TIER (r12): the existing side's band rows
         # are read straight from the store's bucketed band table — no
         # minhash decode, no banding projection — with the NEW batch's
@@ -2089,7 +1936,6 @@ def incremental_near_dup_filter(
         # (band_idx, band_hash) buckets (all of a bucket's rows share its
         # band_hash), so _cap_band_buckets decides identically to the
         # unpruned tiers for every bucket that can produce a candidate.
-        store_bands = store_band_spec[0]
         if store_bands != bands:
             raise ValueError(
                 f"signature store at {signature_store} was banded at write "

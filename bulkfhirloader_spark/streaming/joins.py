@@ -9,6 +9,13 @@ passes their timestamp; right rows are evicted once the watermark passes
 State is therefore O(events inside one lookback window per key), not
 O(stream length) — the property that lets an always-on pipeline run this
 join indefinitely.
+
+The admission gates below (MinHash, semantic, winnow, perceptual image,
+and the composed pipeline) and the streaming IVF prober read their static
+sides from stores whose layout, meta lifecycle and refusals live in
+sources/stores.py; this module keeps each store's row projection and the
+functions that name it (``*_store_write``, ``*_store_read``,
+``register_*_table``).
 """
 
 from __future__ import annotations
@@ -16,13 +23,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bulkfhirloader_spark.fsutil import (
-    fs_path_exists,
-    store_meta_lifecycle,
-)
-from bulkfhirloader_spark.sources.bucketing import (
-    bucketed_table_name,
-    register_external_bucketed_table,
+from bulkfhirloader_spark.fsutil import fs_path_exists
+from bulkfhirloader_spark.sources.stores import (
+    BANDED,
+    IMAGE_HASH,
+    IVF_LISTS,
+    SEMANTIC,
+    WINNOW,
 )
 
 
@@ -70,6 +77,43 @@ def stream_interval_join(
     return wl.join(wr, cond, "inner").drop("_r_key")
 
 
+def _evict(ledger: list) -> None:
+    """Unpersist the previous gate's cached static side: ONE LIVE GATE PER
+    SESSION per gate kind, a deliberate memory bound.  Each kind keeps its
+    own ledger, so building one kind never evicts a running gate of
+    another, and gates evict only after their arguments validated, so a
+    failed construction evicts nothing.  A running gate whose cache was
+    evicted still admits correctly but re-derives or re-scans its static
+    side every micro-batch (for unbucketed sides including the full
+    repartition + sort that _cached exists to avoid).  Run concurrent
+    gates of one kind from separate sessions, or over bucketed stores,
+    where eviction costs only the re-scan."""
+    while ledger:
+        ledger.pop().unpersist()
+
+
+def _cached(ledger: list, df: DataFrame, bucketed: bool, *keys: str) -> DataFrame:
+    """A gate's static side, persisted for repeat micro-batches and
+    recorded in the gate's ``ledger``.
+
+    A bucketed store's layout already satisfies the join's static-side
+    distribution (InMemoryRelation keeps the bucketed child's
+    partitioning), so batch 0 pays only a scan.  Any other static side is
+    cached already partitioned and sorted on the join ``keys``: the join
+    re-plans per micro-batch, and a plain persist saves only the scan —
+    every batch would still re-shuffle the whole static side (measured
+    ~150 s/batch at a 2M-doc banded store against ≤ 13 s for the scan,
+    SCALE.md round 11).  With the repartition inside the cache only the
+    batch-sized stream side shuffles (plan-asserted in tests/test_plans.py).
+    The one-time fill costs ~4 uncached batches; a cache dies with the
+    session, the bucketed layout does not."""
+    if not bucketed:
+        df = df.repartition(*[F.col(k) for k in keys]).sortWithinPartitions(*keys)
+    df = df.persist()
+    ledger.append(df)
+    return df
+
+
 def banded_signature_store_write(
     docs: DataFrame,
     path: str,
@@ -81,224 +125,70 @@ def banded_signature_store_write(
     mode: str = "append",
     num_buckets: int | None = None,
 ) -> None:
-    """Persist the BANDED signature table the streaming admission gate's
-    static side reads at 100 TB: (id, band_idx, band_hash, shingles) rows,
-    appended per admitted batch.  Unlike the batch operator's store
-    (dedup.signature_store_write — minhash arrays only), this one carries
-    the shingle SETS because the streaming gate verifies exact Jaccard
-    INSIDE the join condition — storage is ~text-sized × bands, the price
-    of exact verification with zero stream-side lookback.  Geometry
-    (num_hashes, bands, shingle_words) is validated hard on append and
-    read: bands are PRE-projected here (not re-bandable like the minhash
-    store), so all three parameters pin the layout.
+    """Persist the banded signature table the streaming admission gate's
+    static side reads: ``(id, band_idx, band_hash, shingles)`` rows at
+    ``<path>/bands``, bucketed on ``band_hash`` with ``num_buckets=<n>``.
+    Unlike the batch operator's store (dedup.signature_store_write,
+    minhash arrays only) it carries the shingle sets, because the gate
+    verifies exact Jaccard inside the join condition: storage is
+    ~text-sized × bands, the price of exact verification with no
+    stream-side lookback.  Bands are pre-projected, so all of
+    (num_hashes, bands, shingle_words) is geometry.  Layout, meta
+    lifecycle and refusals: the family contract in sources.stores."""
+    from bulkfhirloader_spark.operators.dedup import require_band_geometry
 
-    Layout: ``<path>/meta.parquet`` (one geometry row) and
-    ``<path>/bands`` (the banded rows, plain parquet appends — at scale,
-    partition the writes by arrival date outside this helper if retention
-    windows matter).  Id uniqueness across appended batches is the
-    caller's contract, as in the batch store.  Overwrite writes data
-    first, meta last (commit-marker ordering, see
-    dedup.signature_store_write) and is not crash-atomic for concurrent
-    readers — replace a live store at a fresh path and swap the
-    pointer.
+    require_band_geometry(num_hashes, bands)
+    rows = _minhash_bands(
+        docs, id_col, text_col, num_hashes, bands, shingle_words
+    ).withColumnRenamed("sh", "shingles")
+    with BANDED.writing(
+        docs.sparkSession, path, mode, (num_hashes, bands, shingle_words),
+        (num_buckets,),
+    ) as save:
+        save(rows)
 
-    BUCKETED LAYOUT (r11 verdict, Next round #1 — the cluster-restart
-    form of the gate's co-partitioned cache): pass ``num_buckets=<n>``
-    and the banded rows are written as an EXTERNAL BUCKETED TABLE
-    (``bucketBy(n, "band_hash").sortBy("band_hash")`` at the same
-    ``<path>/bands`` location, catalog name recorded in the meta) instead
-    of plain parquet.  Bucketed files satisfy the admission join's
-    distribution requirement from LAYOUT: a gate built over a bucketed
-    store plans ZERO static-side Exchange from a FRESH session — no
-    per-session cache-fill shuffle of the array-carrying table at all
-    (the in-session cache needed ~4 micro-batches of fill at a 2M-doc
-    store, SCALE.md round-11) — and probes that filter
-    ``band_hash IN (...)`` get planning-time bucket pruning
-    (``SelectedBucketsCount``) plus per-bucket-sorted row groups for
-    min/max page skipping.  The meta self-describes the access method
-    (nullable ``num_buckets``/``bucket_table`` columns; metas written
-    before r12 lack the columns and read as plain stores).  A PLAIN
-    append to a bucketed store is REFUSED, as is a bucketed append to a
-    plain store or a bucket-count mismatch: non-bucket-hashed part files
-    beside bucketed ones would silently corrupt every bucketed scan
-    (rows land in files whose bucket id disagrees with their hash, and
-    the pruned join never sees them — silent duplicate admission).  A
-    fresh session re-attaches the table with register_banded_table (no
-    data rewrite); this writer does it automatically on append.
-    ``num_buckets`` is a per-store constant chosen at creation (match it
-    to the deployment's executor count; re-bucketing means rewriting)."""
+
+def _minhash_bands(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int,
+    bands: int,
+    shingle_words: int,
+    sfx: str = "",
+) -> DataFrame:
+    """``(id{sfx}, band_idx, band_hash, sh{sfx})``: one row per MinHash
+    band of each doc, carrying its shingle set — the banded store's rows
+    and both sides of the MinHash gates.  ONE projection yields shingles
+    AND signature: a sigs-join-shingles shape would be a stream-stream
+    self join on a stream side; chained projections keep it stateless."""
     from bulkfhirloader_spark.operators.dedup import (
         band_hash_array,
         minhash_sig_expr,
-        require_band_geometry,
         word_shingles,
     )
 
-    require_band_geometry(num_hashes, bands)
-    spark = docs.sparkSession
-    meta_path = f"{path}/meta.parquet"
-    bucket_table = _banded_table_name(path) if num_buckets is not None else None
-    # shared lifecycle (fsutil.store_meta_lifecycle, same semantics as
-    # dedup.signature_store_write): append validates / refuses on
-    # data-without-meta / bootstraps now; overwrite stamps the meta only
-    # AFTER the data write (commit-marker ordering).  The validator also
-    # enforces bucket-layout agreement and hands back the EXISTING store's
-    # recorded table name, so appends from a fresh session target the
-    # name the store was created under, not a re-derived one.
-    resolved: dict = {}
-
-    def _validate(rows) -> None:
-        _validate_banded_geometry(rows, meta_path, num_hashes, bands, shingle_words)
-        got_buckets, got_table = _meta_bucket_spec(rows[0])
-        if got_buckets != num_buckets:
-            raise ValueError(
-                f"banded store bucket-layout mismatch at {meta_path}: store "
-                f"was written with num_buckets={got_buckets}, caller asked "
-                f"num_buckets={num_buckets} — mixing plain and bucketed part "
-                f"files (or two bucket counts) under one table silently "
-                f"corrupts bucketed scans: rows land in files whose bucket "
-                f"id disagrees with their hash and the pruned join never "
-                f"sees them.  Rebuild the store to change its layout"
-            )
-        resolved["bucket_table"] = got_table
-
-    finalize_meta = store_meta_lifecycle(
-        spark,
-        meta_path,
-        f"{path}/bands",
-        "num_hashes int, bands int, shingle_words int, "
-        "num_buckets int, bucket_table string",
-        (num_hashes, bands, shingle_words, num_buckets, bucket_table),
-        _validate,
-        mode,
-    )
-    bucket_table = resolved.get("bucket_table", bucket_table)
     with_sh = docs.select(
-        F.col(id_col).alias("id"),
-        word_shingles(F.col(text_col), shingle_words).alias("shingles"),
+        F.col(id_col).alias(f"id{sfx}"),
+        word_shingles(F.col(text_col), shingle_words).alias(f"sh{sfx}"),
     )
     with_sig = with_sh.withColumn(
-        "_minhash", minhash_sig_expr(F.col("shingles"), num_hashes)
+        "_minhash", minhash_sig_expr(F.col(f"sh{sfx}"), num_hashes)
     )
     band_cols = F.posexplode(
         band_hash_array("_minhash", bands, num_hashes)
     ).alias("band_idx", "band_hash")
-    banded = with_sig.select("id", band_cols, "shingles")
-    if num_buckets is None:
-        banded.write.mode(mode).parquet(f"{path}/bands")
-    else:
-        if mode == "overwrite" and spark.catalog.tableExists(bucket_table):
-            # saveAsTable(overwrite) on an existing external table keeps
-            # the catalog entry; dropping first makes overwrite = fresh
-            # create, so a changed schema can never half-apply
-            spark.sql(f"DROP TABLE `{bucket_table}`")
-        elif (
-            mode == "append"
-            and not spark.catalog.tableExists(bucket_table)
-            and fs_path_exists(spark, f"{path}/bands")
-        ):
-            # fresh session appending to an existing bucketed store: the
-            # in-memory catalog lost the table on restart — re-attach to
-            # the existing files so Spark validates the bucket spec and
-            # writes bucket-hashed file names, instead of letting
-            # saveAsTable re-create blind
-            register_banded_table(spark, path)
-        # repartition on the bucket expression first: a bucketed write
-        # otherwise emits one file per (task, bucket) pair — num_tasks ×
-        # num_buckets small files per append; hash-partitioned on the same
-        # Murmur3 the bucketing uses, each bucket's rows land in one task
-        # → ≤ num_buckets files per append
-        w = (
-            banded.repartition(num_buckets, F.col("band_hash"))
-            .write.format("parquet")
-            .mode(mode)
-            .bucketBy(num_buckets, "band_hash")
-            .sortBy("band_hash")
-            .option("path", f"{path}/bands")
-        )
-        w.saveAsTable(bucket_table)
-    finalize_meta()
+    return with_sig.select(f"id{sfx}", band_cols, f"sh{sfx}")
 
 
-def _banded_table_name(path: str) -> str:
-    """Catalog-name seed for the bucketed banded table at ``path`` (see
-    sources.bucketing.bucketed_table_name — the meta records it)."""
-    return bucketed_table_name("bfls_banded", path)
-
-
-def _meta_bucket_spec(meta_row) -> tuple:
-    """(num_buckets, bucket_table) of a store meta row — tolerant of
-    pre-r12 three-column metas, which read as plain (None, None)."""
-    d = meta_row.asDict()
-    return d.get("num_buckets"), d.get("bucket_table")
-
-
-def _validate_banded_geometry(
-    rows, meta_path, num_hashes, bands, shingle_words
-) -> None:
-    if len(rows) != 1:
-        raise ValueError(f"corrupt banded store meta at {meta_path}: {rows}")
-    m = rows[0]
-    got = (m["num_hashes"], m["bands"], m["shingle_words"])
-    want = (num_hashes, bands, shingle_words)
-    if got != want:
-        raise ValueError(
-            f"banded store geometry mismatch at {meta_path}: store has "
-            f"(num_hashes, bands, shingle_words)={got}, caller asked {want} "
-            f"— mismatched bands never collide, so the gate would silently "
-            f"admit every duplicate"
-        )
-
-
-def register_banded_table(spark, path: str) -> str:
-    """Re-attach the bucketed banded table at ``path`` to THIS session's
-    catalog without rewriting any data — the restart case the bucketed
-    layout exists for: a fresh session (new cluster, new driver) points
-    at the store and gets the zero-Exchange join plan immediately, no
-    cache-fill micro-batches (SCALE.md round-11/12).
-
-    Reads the store meta (must describe a bucketed store), then issues
-    ``CREATE TABLE ... USING PARQUET CLUSTERED BY (band_hash) SORTED BY
-    (band_hash) INTO n BUCKETS LOCATION '<path>/bands'`` under the
-    meta-recorded table name.  Idempotent: if the catalog already holds
-    the name it is verified to point at this store's location (a
-    different location under the same name raises — silently reading a
-    different corpus's bands is the worst failure mode).  Returns the
-    table name."""
-    meta_path = f"{path}/meta.parquet"
-    rows = spark.read.parquet(meta_path).collect()
-    if len(rows) != 1:
-        raise ValueError(f"corrupt banded store meta at {meta_path}: {rows}")
-    num_buckets, table = _meta_bucket_spec(rows[0])
-    if num_buckets is None or table is None:
-        raise ValueError(
-            f"banded store at {path} is a plain (non-bucketed) store — "
-            f"there is no table to register; read it with "
-            f"banded_signature_store_read or rebuild it with "
-            f"num_buckets=<n> for the bucketed layout"
-        )
-    return register_external_bucketed_table(
-        spark, table, f"{path}/bands", "band_hash", num_buckets, ["band_hash"]
-    )
+register_banded_table = BANDED.register
 
 
 def banded_signature_store_read(
     spark, path: str, num_hashes: int, bands: int, shingle_words: int
 ) -> tuple[DataFrame, bool]:
-    """(rows, is_bucketed) for the banded store at ``path`` — rows are the
-    (id, band_idx, band_hash, shingles) DataFrame, geometry-validated hard
-    (see banded_signature_store_write).  A bucketed store is read through
-    its catalog table (auto-re-attached via register_banded_table if this
-    session hasn't seen it), which is what carries the bucket layout into
-    the plan — ``spark.read.parquet`` over the same files would read the
-    rows but lose the Exchange-free join."""
-    meta_path = f"{path}/meta.parquet"
-    rows = spark.read.parquet(meta_path).collect()
-    _validate_banded_geometry(rows, meta_path, num_hashes, bands, shingle_words)
-    num_buckets, _table = _meta_bucket_spec(rows[0])
-    if num_buckets is not None:
-        return spark.table(register_banded_table(spark, path)), True
-    return spark.read.parquet(f"{path}/bands"), False
+    """(rows, is_bucketed) of the banded store at ``path``."""
+    return BANDED.read(spark, path, (num_hashes, bands, shingle_words))
 
 
 def stream_near_dup_admission(
@@ -331,91 +221,36 @@ def stream_near_dup_admission(
     groupBy — each arriving doc's band rows live in one micro-batch, so
     the aggregate completes within the batch; run in update mode).
 
-    At 100 TB the static side is the stored signature table (id, band_idx,
-    band_hash, shingle set) appended per admitted batch — implemented: pass
-    ``banded_store=<path>`` (built/extended via banded_signature_store_write,
-    geometry-validated hard) and the static side is a parquet scan of the
-    pre-banded table instead of being re-derived from ``existing``'s text
-    (``existing`` may then be omitted).  Micro-batch semantics are
-    IDENTICAL either way (pytest-pinned).  The static side is a SNAPSHOT:
-    parquet file listings are captured at gate construction, so store
-    appends made while a gate is live are not screened against until the
-    gate restarts — the deployment loop is batch-append, then (re)start
-    the gate; a restart is also when new geometry would be rejected.
-    A store written with ``num_buckets=`` (the r12 bucketed layout) is
-    detected from its meta and read through its catalog table
-    (auto-re-attached on a fresh session): the bucketBy(band_hash) layout
-    satisfies the join's static-side distribution, so the micro-batch
-    plan has ZERO static-side Exchange and there is no cache-fill shuffle
-    at all — the restart-friendly tier (plan-asserted in
-    tests/test_plans.py).
-    Without the parameter the static side is derived from ``existing`` to
-    stay self-contained.  State: the
-    stream-static join itself is STATELESS (the static side re-resolves
-    per micro-batch); only the final per-doc count keeps O(1) state per
-    in-flight doc.  New-new (intra-stream) near-dup admission needs
-    cross-batch signature state — that is the batch operator's clustering
-    job; compose with streaming_exact_dedup for exact intra-stream dups.
+    ``banded_store=<path>`` (banded_signature_store_write) makes the
+    static side a scan of the stored pre-banded table instead of
+    re-deriving it from ``existing``'s text (``existing`` may then be
+    omitted); admissions are identical either way (pytest-pinned), and
+    the store's snapshot, bucketed-layout and geometry contracts are the
+    family's (sources.stores).  State: the stream-static join itself is
+    STATELESS (the static side re-resolves per micro-batch); only the
+    final per-doc count keeps O(1) state per in-flight doc.  New-new
+    (intra-stream) near-dup admission needs cross-batch signature state —
+    that is the batch operator's clustering job; compose with
+    streaming_exact_dedup for exact intra-stream dups.
 
     Recall contract: admission errs only where banding misses a true pair
     (same geometry argument as dedup_minhash_pairs — measured exact at
     sf0.001/0.01/0.1).
 
-    ONE LIVE GATE PER SESSION (cache contract): constructing a gate
-    unpersists the previous gate's cached static side — the ledger is a
-    deliberate memory bound, not an oversight.  A still-running gate
-    whose cache was evicted keeps producing correct admissions but
-    re-derives (derived tier) or re-scans (store tiers) its static side
-    every micro-batch — for the derived/plain-store tiers that includes
-    re-running the full repartition+sort of the array-carrying table,
-    the exact ~150 s/batch pathology the cache removes.  Run concurrent
-    gates from separate sessions, or build them over BUCKETED stores
-    (whose join needs no cached partitioning — eviction there costs only
-    the re-scan).
+    ONE LIVE GATE PER SESSION: see _evict.
     """
-    from bulkfhirloader_spark.operators.dedup import (
-        band_hash_array,
-        minhash_sig_expr,
-        require_band_geometry,
-        word_shingles,
-    )
+    from bulkfhirloader_spark.operators.dedup import require_band_geometry
 
     require_band_geometry(num_hashes, bands)
 
-    def banded(docs: DataFrame, suffix: str) -> DataFrame:
-        # ONE projection yields shingles AND signature (minhash_sig_expr) —
-        # a sigs-join-shingles shape would be a stream-stream self join on
-        # the stream side; chained projections keep it stateless.
-        with_sh = docs.select(
-            F.col(id_col).alias(f"id{suffix}"),
-            word_shingles(F.col(text_col), shingle_words).alias(f"sh{suffix}"),
-        )
-        with_sig = with_sh.withColumn(
-            "_minhash", minhash_sig_expr(F.col(f"sh{suffix}"), num_hashes)
-        )
-        band_cols = F.posexplode(
-            band_hash_array("_minhash", bands, num_hashes)
-        ).alias("band_idx", "band_hash")
-        return with_sig.select(f"id{suffix}", band_cols, f"sh{suffix}")
+    def banded(docs: DataFrame, sfx: str) -> DataFrame:
+        return _minhash_bands(
+            docs, id_col, text_col, num_hashes, bands, shingle_words, sfx
+        ).select(f"id{sfx}", "band_hash", f"sh{sfx}")
 
-    stream_banded = banded(stream_docs, "_s").select("id_s", "band_hash", "sh_s")
-    # The static side re-resolves EVERY micro-batch; persist serves the
-    # banded corpus from cached blocks after batch 1 instead of re-running
-    # the shingling + signature fold per batch — the in-session analog of
-    # the stored signature table the 100 TB deployment reads.  (At toy
-    # scale the drain is join-build-dominated, so the measured win is
-    # small; the cache matters when the corpus side is large.)  The
-    # previous invocation's cache is released on the next call.
+    stream_banded = banded(stream_docs, "_s")
     bucketed_static = False
     if banded_store is not None:
-        # deployment tier: the static side IS the stored banded table — a
-        # columnar scan, no text re-shingling.  SNAPSHOT semantics: the
-        # parquet file listing is captured when this DataFrame is created
-        # (verified empirically — a pre-append DataFrame keeps returning
-        # pre-append rows), so appends during a live run are NOT seen until
-        # the gate is rebuilt; since the snapshot is fixed anyway, persist
-        # serves it from cached blocks after batch 1, same as the derived
-        # path.
         store_rows, bucketed_static = banded_signature_store_read(
             stream_docs.sparkSession, banded_store, num_hashes, bands,
             shingle_words,
@@ -431,56 +266,11 @@ def stream_near_dup_admission(
             "or a `banded_store=` path"
         )
     else:
-        static_banded = banded(existing, "_e").select(
-            F.col("id_e"), "band_hash", F.col("sh_e")
-        )
-    # evict the previous gate's cache only AFTER this gate's arguments
-    # validated (geometry / existing checks above raise first): a FAILED
-    # construction must not cost a still-running gate its cached static
-    # side — that gate would silently re-derive the corpus every
-    # micro-batch afterwards
-    while _live_static_band_caches:
-        _live_static_band_caches.pop().unpersist()
-    if bucketed_static:
-        # BUCKETED STORE (r12, the r11 prototype shipped): the table's
-        # bucket layout (bucketBy(n, band_hash), per-bucket sorted) already
-        # satisfies the join's distribution requirement on the static side
-        # — HashPartitioning(band_hash, n) from LAYOUT, so the plan has
-        # ZERO static-side Exchange even on a fresh session (plan-asserted
-        # in tests/test_plans.py) and there is no cache-fill shuffle to
-        # amortize.  persist() still serves repeat micro-batches from
-        # cached blocks instead of re-scanning (InMemoryRelation preserves
-        # the bucketed child's partitioning), but batch 0's fill is now a
-        # plain scan, not the scan+shuffle+sort the derived tier pays.
-        static_banded = static_banded.persist()
-    else:
-        # Cache the static side ALREADY PARTITIONED AND SORTED on the join
-        # key (r11 measurement, SCALE.md "Decomposition of the 301 s"):
-        # the anti join re-plans per micro-batch, and a plain persist only
-        # saved the SCAN — every batch still re-ran the Exchange of the
-        # whole static side, hash-partitioning millions of
-        # shingle-array-carrying rows (measured ~150 s/batch at a 2M-doc
-        # store vs ≤13 s for the scan itself).  InMemoryRelation preserves
-        # its child's partitioning and ordering, so with the
-        # repartition+sort INSIDE the cache the join's distribution/
-        # ordering requirements on the static side are satisfied from
-        # cached blocks: per micro-batch only the ~banded-batch-sized
-        # stream side shuffles.  Same rows, same admissions — a physical
-        # property only (plan-asserted in tests/test_plans.py).  Measured
-        # at a 2M-doc store (SCALE.md round-11): marginal micro-batch
-        # 150 s → 1.5-7 s; the one-time fill (scan + shuffle + sort +
-        # deserialized cache write of the array-carrying table) costs ~4
-        # pre-change batches, so gates that restart every ≤3 micro-batches
-        # lose — always-on ingest gates run hundreds.  The bucketed store
-        # above is the cluster-restart answer: a cache dies with the
-        # session; the bucketed table satisfies the same requirement from
-        # layout and skips the fill entirely.
-        static_banded = (
-            static_banded.repartition(F.col("band_hash"))
-            .sortWithinPartitions("band_hash")
-            .persist()
-        )
-    _live_static_band_caches.append(static_banded)
+        static_banded = banded(existing, "_e")
+    _evict(_live_static_band_caches)
+    static_banded = _cached(
+        _live_static_band_caches, static_banded, bucketed_static, "band_hash"
+    )
 
     inter = F.size(F.array_intersect(F.col("sh_s"), F.col("sh_e")))
     union = F.size("sh_s") + F.size("sh_e") - inter
@@ -626,6 +416,17 @@ def _semantic_assigned_blas(
     return out.withColumn(f"n{sfx}", l2_norm(F.col(f"v{sfx}")))
 
 
+def _assigner(assign_tier: str):
+    """The assignment projection of ``assign_tier``: "fold" (the literal
+    expression tree) or "blas" (the Arrow/dgemm pass)."""
+    tiers = {"fold": _semantic_assigned, "blas": _semantic_assigned_blas}
+    if assign_tier not in tiers:
+        raise ValueError(
+            f"assign_tier must be 'fold' or 'blas', got {assign_tier!r}"
+        )
+    return tiers[assign_tier]
+
+
 def _centroid_fingerprint(cents: list[tuple[int, list[float]]]) -> str:
     """Deterministic sha256 of a frozen centroid fit — the semantic
     store's geometry analog of the banded store's (num_hashes, bands)
@@ -650,11 +451,6 @@ def _normalize_centroids(centroids) -> list[tuple[int, list[float]]]:
     return sorted((int(c), list(v)) for c, v in centroids)
 
 
-def _semantic_table_name(path: str) -> str:
-    """Catalog-name seed for the bucketed semantic store at ``path``."""
-    return bucketed_table_name("bfls_semstore", path)
-
-
 def semantic_store_write(
     emb: DataFrame,
     path: str,
@@ -666,212 +462,96 @@ def semantic_store_write(
     num_buckets: int | None = None,
     assign_tier: str = "fold",
 ) -> None:
-    """Persist the ASSIGNED static corpus the streaming semantic gate
-    reads at 100 TB: ``(cluster_id, id, vec, norm)`` rows plus the frozen
-    centroid fit itself — the exact analog of what
-    banded_signature_store_write is to the MinHash gate (r12 verdict,
-    Next round #1).  Before this store existed the gate assigned + cached
-    the full static corpus PER SESSION (measured 46 s batch-0 fill at
-    500k vectors, SCALE.md r12) and the cache died with the session;
-    the store pays the assignment once at write time and a restart pays
-    only a scan.
+    """Persist the assigned static corpus the streaming semantic gate
+    reads: ``(cluster_id, id, vec, norm)`` rows at ``<path>/vectors``
+    (bucketed on ``cluster_id``), plus the frozen fit itself at
+    ``<path>/centroids.parquet``.  The gate's stream side evaluates the
+    stored fit, so it can never pair another fit with the stored
+    assignments.  The store pays the assignment once at write time; a gate
+    restart pays a scan instead of the per-session assign + cache fill
+    (46 s at 500k vectors, SCALE.md r12).
 
-    Layout: ``<path>/meta.parquet`` (one row: round_dp, k, dim,
-    centroid_sha, nullable num_buckets/bucket_table),
-    ``<path>/centroids.parquet`` (the frozen (c_label, centroid) fit —
-    the gate's stream side evaluates THIS fit, so the store carries it;
-    a gate built over the store can never pair a stream-side fit with
-    different static-side assignments), and ``<path>/vectors`` (the
-    assigned rows).  With ``num_buckets=<n>`` the vectors are written as
-    an EXTERNAL BUCKETED TABLE (``bucketBy(n, "cluster_id")``, per-bucket
-    sorted) whose LAYOUT satisfies the gate join's static-side
-    distribution — zero static-side Exchange from a fresh catalog
-    (plan-asserted in tests/test_plans.py), the restart-friendly tier.
-    Plain/bucketed mixing is refused in both directions, same corruption
-    argument as the banded store.
+    FROZEN FIT: ``centroids`` (a (c_label, centroid) DataFrame or
+    [(cid, vec)] list) is required at creation and optional on append,
+    where rows are assigned under the stored fit.  Centroids passed on
+    append must fingerprint-match the stored fit (``fit mismatch``
+    otherwise): rows assigned under a re-fit would sit in the wrong
+    cluster partitions and never meet their probes.  A re-fit is a
+    rebuild (mode="overwrite"), then a gate restart.
 
-    FROZEN-FIT CONTRACT: ``centroids`` (a (c_label, centroid) DataFrame
-    or [(cid, vec)] list) is REQUIRED at store creation and optional on
-    append — appended rows are assigned under the STORED fit (read back
-    from the store).  Passing centroids on append validates their
-    fingerprint against the stored fit and refuses on mismatch: rows
-    assigned under a re-fit would sit in the wrong cluster partitions
-    and silently never meet their probes.  A re-fit means a REBUILD
-    (mode="overwrite" with the new fit), then a gate restart — the same
-    deployment loop as the banded store's snapshot semantics.
-
-    ``assign_tier="blas"`` (r13) assigns the corpus with the Arrow/dgemm
-    pass instead of the k × dim literal expression tree — REQUIRED in
-    practice at large k: the fold tree at k=5000 × dim=16 is ~80k py4j
-    expression nodes per evaluation site and the write DNF'd a 590 s
-    budget at a 500k corpus, where the blas write completes in ~70 s
-    (SCALE.md r13).  Same rounded-argmax contract, numpy half-even
-    rounding caveat as everywhere (kmeans_assign_blas); measured zero
-    assignment mismatches at 800k×k=800.  The tier is WRITE-time
-    provenance only — readers and the gate are tier-agnostic — and is
-    NOT part of the store geometry: appends may mix tiers, which is safe
-    exactly to the extent the tiers agree (the knife-edge caveat), the
-    same stance as mixing fold/blas batch assignments.
-
-    Append id-uniqueness and single-writer serialization are the
-    caller's contract; overwrite writes data first, meta last
-    (commit-marker ordering via fsutil.store_meta_lifecycle) and is not
-    crash-atomic for concurrent readers — replace a live store at a
-    fresh path and swap the pointer."""
-    if assign_tier not in ("fold", "blas"):
-        raise ValueError(
-            f"assign_tier must be 'fold' or 'blas', got {assign_tier!r}"
-        )
+    ``assign_tier="blas"`` assigns with the Arrow/dgemm pass instead of
+    the k × dim literal expression tree, which is required in practice at
+    large k (SCALE.md r13).  It is write-time provenance, not geometry:
+    appends may mix tiers, safe exactly as far as the tiers agree (the
+    kmeans_assign_blas half-even rounding caveat).  Layout, meta lifecycle
+    and refusals: the family contract in sources.stores."""
+    assign_fn = _assigner(assign_tier)
     spark = emb.sparkSession
-    meta_path = f"{path}/meta.parquet"
     cents_path = f"{path}/centroids.parquet"
     cents = _normalize_centroids(centroids) if centroids is not None else None
     if cents is not None and not cents:
         raise ValueError("semantic_store_write needs >= 1 centroid")
     if cents is None:
-        if mode == "overwrite" or not fs_path_exists(spark, meta_path):
+        if mode == "overwrite" or not fs_path_exists(spark, f"{path}/meta.parquet"):
             raise ValueError(
                 "semantic_store_write needs the frozen `centroids` fit at "
                 "store creation (append to an existing store may omit it — "
                 "rows are then assigned under the stored fit)"
             )
-        cents = _read_semantic_centroids(spark, cents_path)
+        cents = _normalize_centroids(spark.read.parquet(cents_path))
     sha = _centroid_fingerprint(cents)
-    k, dim = len(cents), len(cents[0][1])
-    bucket_table = _semantic_table_name(path) if num_buckets is not None else None
-    resolved: dict = {}
-
-    def _validate(rows) -> None:
-        _validate_semantic_meta(rows, meta_path, round_dp, sha)
-        got_buckets, got_table = _meta_bucket_spec(rows[0])
-        if got_buckets != num_buckets:
-            raise ValueError(
-                f"semantic store bucket-layout mismatch at {meta_path}: "
-                f"store was written with num_buckets={got_buckets}, caller "
-                f"asked num_buckets={num_buckets} — mixing plain and "
-                f"bucketed part files under one table silently corrupts "
-                f"bucketed scans.  Rebuild the store to change its layout"
-            )
-        resolved["bucket_table"] = got_table
-
-    finalize_meta = store_meta_lifecycle(
-        spark,
-        meta_path,
-        f"{path}/vectors",
-        "round_dp int, k int, dim int, centroid_sha string, "
-        "num_buckets int, bucket_table string",
-        (round_dp, k, dim, sha, num_buckets, bucket_table),
-        _validate,
-        mode,
-    )
-    bucket_table = resolved.get("bucket_table", bucket_table)
-    # the frozen fit rides the store: written on create/overwrite, never
-    # on append (the validator just proved the fit is unchanged)
-    write_cents = mode == "overwrite" or not fs_path_exists(spark, cents_path)
-    assign_fn = (
-        _semantic_assigned_blas if assign_tier == "blas" else _semantic_assigned
-    )
     assigned = assign_fn(emb, cents, id_col, vec_col, round_dp, "").select(
         "cluster_id",
         F.col("id").cast("long").alias("id"),
         F.col("v").alias("vec"),
         F.col("n").alias("norm"),
     )
-    if num_buckets is None:
-        assigned.write.mode(mode).parquet(f"{path}/vectors")
-    else:
-        if mode == "overwrite" and spark.catalog.tableExists(bucket_table):
-            spark.sql(f"DROP TABLE `{bucket_table}`")
-        elif (
-            mode == "append"
-            and not spark.catalog.tableExists(bucket_table)
-            and fs_path_exists(spark, f"{path}/vectors")
-        ):
-            register_semantic_table(spark, path)
-        # repartition on the bucket expression first (see the banded
-        # writer): otherwise a bucketed write emits one file per
-        # (task, bucket) pair per append
-        w = (
-            assigned.repartition(num_buckets, F.col("cluster_id"))
-            .write.format("parquet")
-            .mode(mode)
-            .bucketBy(num_buckets, "cluster_id")
-            .sortBy("cluster_id")
-            .option("path", f"{path}/vectors")
-        )
-        w.saveAsTable(bucket_table)
-    if write_cents:
-        spark.createDataFrame(
-            cents, "c_label INT, centroid ARRAY<DOUBLE>"
-        ).coalesce(1).write.mode("overwrite").parquet(cents_path)
-    finalize_meta()
+    geometry = (round_dp, len(cents), len(cents[0][1]), sha)
+    with SEMANTIC.writing(
+        spark, path, mode, geometry, (num_buckets,), check=_fit_check(sha, path)
+    ) as save:
+        # the fit rides the store: written on create and overwrite, never
+        # on append (the check just proved it unchanged)
+        write_cents = mode == "overwrite" or not fs_path_exists(spark, cents_path)
+        save(assigned)
+        if write_cents:
+            spark.createDataFrame(
+                cents, "c_label INT, centroid ARRAY<DOUBLE>"
+            ).coalesce(1).write.mode("overwrite").parquet(cents_path)
 
 
-def _read_semantic_centroids(spark, cents_path: str) -> list[tuple[int, list[float]]]:
-    return sorted(
-        (int(r["c_label"]), list(r["centroid"]))
-        for r in spark.read.parquet(cents_path).collect()
-    )
+def _fit_check(sha: str, path: str):
+    """The semantic store's own meta check: the stored fit is ``sha``."""
+
+    def check(m) -> None:
+        if m["centroid_sha"] != sha:
+            raise ValueError(
+                f"semantic store fit mismatch at {path}: the store was "
+                f"assigned under a different frozen centroid fit (stored sha "
+                f"{m['centroid_sha'][:12]}…, caller's {sha[:12]}…) — rows "
+                f"assigned under a re-fit would sit in the wrong cluster "
+                f"partitions and never meet their probes.  A re-fit means a "
+                f"rebuild (mode='overwrite'), then a gate restart"
+            )
+
+    return check
 
 
-def _validate_semantic_meta(rows, meta_path, round_dp, sha) -> None:
-    if len(rows) != 1:
-        raise ValueError(f"corrupt semantic store meta at {meta_path}: {rows}")
-    m = rows[0]
-    if m["round_dp"] != round_dp:
-        raise ValueError(
-            f"semantic store geometry mismatch at {meta_path}: store has "
-            f"round_dp={m['round_dp']}, caller asked {round_dp} — mismatched "
-            f"rounding makes assignments engine-inconsistent"
-        )
-    if m["centroid_sha"] != sha:
-        raise ValueError(
-            f"semantic store fit mismatch at {meta_path}: the store was "
-            f"assigned under a different frozen centroid fit "
-            f"(stored sha {m['centroid_sha'][:12]}…, caller's {sha[:12]}…) "
-            f"— rows assigned under a re-fit would sit in the wrong cluster "
-            f"partitions and never meet their probes.  A re-fit means a "
-            f"rebuild (mode='overwrite'), then a gate restart"
-        )
-
-
-def register_semantic_table(spark, path: str) -> str:
-    """Re-attach the bucketed semantic store's vectors table at ``path``
-    to THIS session's catalog without rewriting any data — the restart
-    case the layout exists for (exact twin of register_banded_table).
-    Raises on a plain (non-bucketed) store."""
-    meta_path = f"{path}/meta.parquet"
-    rows = spark.read.parquet(meta_path).collect()
-    if len(rows) != 1:
-        raise ValueError(f"corrupt semantic store meta at {meta_path}: {rows}")
-    num_buckets, table = _meta_bucket_spec(rows[0])
-    if num_buckets is None or table is None:
-        raise ValueError(
-            f"semantic store at {path} is a plain (non-bucketed) store — "
-            f"there is no table to register; read it with "
-            f"semantic_store_read or rebuild it with num_buckets=<n>"
-        )
-    return register_external_bucketed_table(
-        spark, table, f"{path}/vectors", "cluster_id", num_buckets, ["cluster_id"]
-    )
+register_semantic_table = SEMANTIC.register
 
 
 def semantic_store_read(
     spark, path: str, round_dp: int = 6
 ) -> tuple[DataFrame, list[tuple[int, list[float]]], bool]:
-    """(vectors, frozen centroid fit, is_bucketed) for the semantic store
-    at ``path`` — vectors are the assigned (cluster_id, id, vec, norm)
-    DataFrame, meta-validated.  A bucketed store is read through its
-    catalog table (auto-re-attached), which is what carries the bucket
-    layout into the plan."""
-    meta_path = f"{path}/meta.parquet"
-    rows = spark.read.parquet(meta_path).collect()
-    cents = _read_semantic_centroids(spark, f"{path}/centroids.parquet")
-    _validate_semantic_meta(rows, meta_path, round_dp, _centroid_fingerprint(cents))
-    num_buckets, _table = _meta_bucket_spec(rows[0])
-    if num_buckets is not None:
-        return spark.table(register_semantic_table(spark, path)), cents, True
-    return spark.read.parquet(f"{path}/vectors"), cents, False
+    """(vectors, frozen centroid fit, is_bucketed) of the semantic store at
+    ``path``; vectors are the assigned (cluster_id, id, vec, norm) rows."""
+    cents = _normalize_centroids(spark.read.parquet(f"{path}/centroids.parquet"))
+    sha = _centroid_fingerprint(cents)
+    rows, bucketed = SEMANTIC.read(
+        spark, path, (round_dp, len(cents), len(cents[0][1]), sha),
+        _fit_check(sha, path),
+    )
+    return rows, cents, bucketed
 
 
 def stream_semantic_admission(
@@ -915,23 +595,13 @@ def stream_semantic_admission(
     approximate.  k must grow with the corpus so per-cluster fan-in
     stays bounded.
 
-    STORED TIER (r13, the r12 verdict's Next round #1 — the banded
-    store's pattern applied to its SemDeDup twin): pass
-    ``semantic_store=<path>`` (built via semantic_store_write) and the
-    static side is a scan of the PRE-ASSIGNED (cluster_id, id, vec,
-    norm) store — no per-session assignment pass, and the frozen
-    centroid fit comes FROM THE STORE (``existing`` and ``centroids``
-    must then be omitted: the store carries its own fit, so the stream
-    side can never evaluate a different fit than the one the static
-    rows were assigned under).  A store written with ``num_buckets=``
-    satisfies the join's static-side distribution from LAYOUT — the
-    micro-batch plan has ZERO static-side Exchange from a fresh catalog
-    (plan-asserted in tests/test_plans.py) and batch 0 pays only a scan,
-    not the measured 46 s assign+shuffle fill at a 500k corpus
-    (SCALE.md r12/r13).  SNAPSHOT semantics, same as the banded store:
-    the file listing (and the fit) are captured at gate construction —
-    store appends and re-fits screen only from the NEXT gate
-    construction, never mid-stream (pytest-pinned).
+    STORED TIER: ``semantic_store=<path>`` (semantic_store_write) makes
+    the static side a scan of the pre-assigned store, and the frozen fit
+    comes from the store too, so ``existing`` and ``centroids`` must then
+    be omitted: the stream side can never evaluate a different fit than
+    the stored rows were assigned under.  The fit, like the file listing,
+    is a snapshot taken at gate construction (pytest-pinned); layout and
+    snapshot contracts are the family's (sources.stores).
 
     ``assign_tier="blas"`` (r13) runs the STREAM side's assignment as an
     Arrow/dgemm mapInPandas pass instead of the k × dim literal
@@ -948,16 +618,11 @@ def stream_semantic_admission(
     assignments match the batch operator exactly wherever fold is
     feasible.
 
-    ONE LIVE SEMANTIC GATE PER SESSION: same deliberate cache-ledger
-    memory bound as stream_near_dup_admission (separate ledger — a
-    semantic gate does not evict a minhash gate).
+    ONE LIVE GATE PER SESSION (own ledger): see _evict.
     """
     from bulkfhirloader_spark.operators.similarity import cosine_with_norms
 
-    if assign_tier not in ("fold", "blas"):
-        raise ValueError(
-            f"assign_tier must be 'fold' or 'blas', got {assign_tier!r}"
-        )
+    assign_fn = _assigner(assign_tier)
     bucketed_static = False
     if semantic_store is not None:
         if existing is not None or centroids is not None:
@@ -988,25 +653,11 @@ def stream_semantic_admission(
         static_side = _semantic_assigned(
             existing, cents, id_col, vec_col, round_dp, "_e"
         )
-    assign_fn = (
-        _semantic_assigned_blas if assign_tier == "blas" else _semantic_assigned
-    )
     stream_side = assign_fn(stream_emb, cents, id_col, vec_col, round_dp, "_s")
-    while _live_static_sem_caches:
-        _live_static_sem_caches.pop().unpersist()
-    if bucketed_static:
-        # the bucketBy(cluster_id) layout already satisfies the join's
-        # static-side distribution — persist only serves repeat
-        # micro-batches from cached blocks (InMemoryRelation preserves the
-        # bucketed child's partitioning); batch 0's fill is a plain scan
-        static_side = static_side.persist()
-    else:
-        static_side = (
-            static_side.repartition(F.col("cluster_id"))
-            .sortWithinPartitions("cluster_id")
-            .persist()
-        )
-    _live_static_sem_caches.append(static_side)
+    _evict(_live_static_sem_caches)
+    static_side = _cached(
+        _live_static_sem_caches, static_side, bucketed_static, "cluster_id"
+    )
     cond = (
         (stream_side["cluster_id"] == static_side["cluster_id"])
         & (stream_side["id_s"] != static_side["id_e"])
@@ -1112,21 +763,8 @@ def stream_sim_topk(
         lists = spark.read.parquet(f"{index_path}/lists.parquet").select(
             F.col(cand_id), F.col(cand_vec), F.col("_cn"), F.col("_cluster")
         )
-    while _live_static_ivf_caches:
-        _live_static_ivf_caches.pop().unpersist()
-    if bucketed_lists:
-        # the bucketBy(_cluster) layout already satisfies the join's
-        # static-side distribution — persist only serves repeat
-        # micro-batches from cached blocks (InMemoryRelation preserves
-        # the bucketed child's partitioning); batch 0's fill is a scan
-        lists = lists.persist()
-    else:
-        lists = (
-            lists.repartition(F.col("_cluster"))
-            .sortWithinPartitions("_cluster")
-            .persist()
-        )
-    _live_static_ivf_caches.append(lists)
+    _evict(_live_static_ivf_caches)
+    lists = _cached(_live_static_ivf_caches, lists, bucketed_lists, "_cluster")
     q_n = stream_queries.withColumn(
         "_qn", l2_norm(F.col(query_vec))
     ).withColumn("_nv", l2_normalize(F.col(query_vec), F.col("_qn")))
@@ -1199,98 +837,39 @@ def stream_sim_topk(
 _live_static_ivf_caches: list = []
 
 
-def _ivf_lists_table_name(path: str) -> str:
-    """Catalog-name seed for the bucketed IVF lists mirror at ``path``."""
-    return bucketed_table_name("bfls_ivflists", path)
-
-
 def ivf_lists_bucketed_write(
     spark, index_path: str, num_buckets: int = 8
 ) -> str:
-    """Derive the BUCKETED serving mirror of a stored IVF index's lists
-    (r15, r14 verdict #2 — the stored-gate contract's fifth instance):
-    reads ``<index_path>/lists.parquet`` (the Hive-partitioned primary
-    the batch prober prunes) and writes the same rows as an EXTERNAL
-    BUCKETED TABLE at ``<index_path>/lists_bucketed`` —
-    ``bucketBy(num_buckets, "_cluster")``, per-bucket sorted — whose
-    LAYOUT satisfies the streaming prober's join distribution: a
-    ``stream_sim_topk(..., bucketed_lists=True)`` micro-batch plans ZERO
-    static-side Exchange from a fresh catalog (plan-asserted in
-    tests/test_plans.py), so serving restarts pay a scan instead of the
-    full repartition+cache fill of the corpus-sized lists table.
-
-    SNAPSHOT semantics, stated more strongly than the gate stores': this
-    is a DERIVED mirror, not the primary — ``append_ivf_index`` appends
-    into ``lists.parquet`` only, so after appends the mirror is STALE
-    until re-derived (re-run this writer; the meta records ``n_rows`` at
-    derive time so an audit can compare against the primary's count).
-    Overwrite-only by design: per-batch appends belong to the primary;
-    the mirror is rebuilt on the same schedule as gate restarts.
-    Commit-marker ordering: data first, meta last — a reader never sees
-    a meta describing a half-written mirror.  Returns the catalog table
-    name."""
+    """Derive the bucketed serving mirror of a stored IVF index's lists:
+    the rows of ``<index_path>/lists.parquet`` (the Hive-partitioned
+    primary the batch prober prunes) rewritten at
+    ``<index_path>/lists_bucketed``, bucketed on ``_cluster``, so
+    ``stream_sim_topk(..., bucketed_lists=True)`` plans zero static-side
+    Exchange and a serving restart pays a scan, not the corpus-sized
+    repartition fill.  It is a derived mirror: ``append_ivf_index``
+    appends to the primary only, so the mirror is stale after appends
+    until re-derived, and the meta records ``n_rows`` at derive time for
+    an audit against the primary.  Overwrite-only; the mirror is rebuilt
+    on the gate-restart schedule.  Returns the catalog table name."""
     from pyspark.sql import Observation
 
     if num_buckets < 1:
         raise ValueError("num_buckets must be >= 1")
-    lists = spark.read.parquet(f"{index_path}/lists.parquet")
-    # the audit row count rides the write's own scan as an Observation —
-    # a separate lists.count() would re-read the corpus-sized primary, at
-    # 100 TB doubling the derive's IO for one long (r15 review)
+    # the audit count rides the write's own scan: a separate count() would
+    # re-read the corpus-sized primary
     obs = Observation()
-    lists = lists.observe(obs, F.count(F.lit(1)).alias("n_rows"))
-    table = _ivf_lists_table_name(index_path)
-    data_path = f"{index_path}/lists_bucketed"
-    meta_path = f"{index_path}/lists_bucketed_meta.parquet"
-    if spark.catalog.tableExists(table):
-        # drop-then-create so a changed bucket count / schema can never
-        # half-apply (the banded writer's overwrite stance)
-        spark.sql(f"DROP TABLE `{table}`")
-    (
-        lists.withColumn("_cluster", F.col("_cluster").cast("int"))
-        # hash-partitioned on the same Murmur3 the bucketing uses, so each
-        # bucket's rows land in one task → ≤ num_buckets files per derive
-        .repartition(num_buckets, F.col("_cluster"))
-        .write.format("parquet")
-        .mode("overwrite")
-        .bucketBy(num_buckets, "_cluster")
-        .sortBy("_cluster")
-        .option("path", data_path)
-        .saveAsTable(table)
+    lists = spark.read.parquet(f"{index_path}/lists.parquet").observe(
+        obs, F.count(F.lit(1)).alias("n_rows")
     )
-    spark.createDataFrame(
-        [(num_buckets, table, int(obs.get["n_rows"]))],
-        "num_buckets int, bucket_table string, n_rows long",
-    ).coalesce(1).write.mode("overwrite").parquet(meta_path)
+    with IVF_LISTS.writing(
+        spark, index_path, "overwrite", (), (num_buckets,),
+        trailer=lambda: (int(obs.get["n_rows"]),),
+    ) as save:
+        table = save(lists.withColumn("_cluster", F.col("_cluster").cast("int")))
     return table
 
 
-def register_ivf_lists_table(spark, index_path: str) -> str:
-    """Re-attach the bucketed IVF lists mirror at ``index_path`` to THIS
-    session's catalog without rewriting data — the restart case (exact
-    twin of register_banded_table).  Raises if the index has no derived
-    mirror (build one with ivf_lists_bucketed_write)."""
-    meta_path = f"{index_path}/lists_bucketed_meta.parquet"
-    if not fs_path_exists(spark, meta_path):
-        raise ValueError(
-            f"IVF index at {index_path} has no bucketed lists mirror — "
-            f"derive one with ivf_lists_bucketed_write(spark, path, "
-            f"num_buckets=<n>) (the primary lists.parquet stays the "
-            f"batch prober's partition-pruned layout)"
-        )
-    rows = spark.read.parquet(meta_path).collect()
-    if len(rows) != 1:
-        raise ValueError(
-            f"corrupt IVF lists-mirror meta at {meta_path}: {rows}"
-        )
-    return register_external_bucketed_table(
-        spark,
-        rows[0]["bucket_table"],
-        f"{index_path}/lists_bucketed",
-        "_cluster",
-        int(rows[0]["num_buckets"]),
-        ["_cluster"],
-    )
+register_ivf_lists_table = IVF_LISTS.register
 
 
 def stream_sim_topk_batch_prober(
@@ -1351,28 +930,6 @@ def stream_sim_topk_batch_prober(
     return _answer
 
 
-def _winnow_table_name(path: str) -> str:
-    """Catalog-name seed for the bucketed winnow fingerprint store at
-    ``path``."""
-    return bucketed_table_name("bfls_winnow", path)
-
-
-def _validate_winnow_meta(rows, meta_path, k, window, hash_tier) -> None:
-    if len(rows) != 1:
-        raise ValueError(f"corrupt winnow store meta at {meta_path}: {rows}")
-    m = rows[0]
-    got = (m["k"], m["window"], m["hash_tier"])
-    want = (k, window, hash_tier)
-    if got != want:
-        raise ValueError(
-            f"winnow store geometry mismatch at {meta_path}: store has "
-            f"(k, window, hash_tier)={got}, caller asked {want} — "
-            f"fingerprints selected under different gram length, window, "
-            f"or hash never collide, so the gate would silently admit "
-            f"every duplicate"
-        )
-
-
 def winnow_store_write(
     docs: DataFrame,
     path: str,
@@ -1384,114 +941,32 @@ def winnow_store_write(
     mode: str = "append",
     num_buckets: int | None = None,
 ) -> None:
-    """Persist the winnowing FINGERPRINT table the substring-overlap
-    admission gate's static side reads at 100 TB (r14 — the stored-gate
-    family's fourth instance): ``(id, fp_hash)`` rows, ~1/window of the
-    corpus's k-gram posting volume, appended per admitted batch.
-    Geometry is (k, window, hash_tier) — all three pin the fingerprint
-    space (mismatched selections never collide), validated hard on
-    append and read like every store in the family.
-
-    Layout: ``<path>/meta.parquet`` + ``<path>/fps``; with
-    ``num_buckets=<n>`` the rows are an EXTERNAL BUCKETED TABLE
-    (``bucketBy(n, "fp_hash")``, per-bucket sorted) whose LAYOUT
-    satisfies the gate join's static-side distribution — zero
-    static-side Exchange from a fresh catalog (plan-asserted), restarts
-    pay a scan.  Plain/bucketed mixing refused; append id-uniqueness,
-    overwrite commit-marker ordering, and snapshot semantics are the
-    family contracts verbatim."""
+    """Persist the winnowing fingerprint table the substring-overlap gate's
+    static side reads: ``(id, fp_hash)`` rows at ``<path>/fps`` (bucketed
+    on ``fp_hash``), ~1/window of the corpus's k-gram posting volume.
+    (k, window, hash_tier) is the geometry: fingerprints selected under
+    another gram length, window or hash never collide.  Layout, meta
+    lifecycle and refusals: the family contract in sources.stores."""
     from bulkfhirloader_spark.operators.text import winnow_fingerprints
 
-    spark = docs.sparkSession
-    meta_path = f"{path}/meta.parquet"
-    bucket_table = _winnow_table_name(path) if num_buckets is not None else None
-    resolved: dict = {}
-
-    def _validate(rows) -> None:
-        _validate_winnow_meta(rows, meta_path, k, window, hash_tier)
-        got_buckets, got_table = _meta_bucket_spec(rows[0])
-        if got_buckets != num_buckets:
-            raise ValueError(
-                f"winnow store bucket-layout mismatch at {meta_path}: "
-                f"store was written with num_buckets={got_buckets}, caller "
-                f"asked num_buckets={num_buckets} — mixing plain and "
-                f"bucketed part files under one table silently corrupts "
-                f"bucketed scans.  Rebuild the store to change its layout"
-            )
-        resolved["bucket_table"] = got_table
-
-    finalize_meta = store_meta_lifecycle(
-        spark,
-        meta_path,
-        f"{path}/fps",
-        "k int, window int, hash_tier string, "
-        "num_buckets int, bucket_table string",
-        (k, window, hash_tier, num_buckets, bucket_table),
-        _validate,
-        mode,
-    )
-    bucket_table = resolved.get("bucket_table", bucket_table)
     fps = winnow_fingerprints(
         docs, k=k, window=window, id_col=id_col, text_col=text_col,
         with_positions=False, hash_tier=hash_tier,
     ).select(F.col(id_col).alias("id"), "fp_hash")
-    if num_buckets is None:
-        fps.write.mode(mode).parquet(f"{path}/fps")
-    else:
-        if mode == "overwrite" and spark.catalog.tableExists(bucket_table):
-            spark.sql(f"DROP TABLE `{bucket_table}`")
-        elif (
-            mode == "append"
-            and not spark.catalog.tableExists(bucket_table)
-            and fs_path_exists(spark, f"{path}/fps")
-        ):
-            register_winnow_table(spark, path)
-        w = (
-            fps.repartition(num_buckets, F.col("fp_hash"))
-            .write.format("parquet")
-            .mode(mode)
-            .bucketBy(num_buckets, "fp_hash")
-            .sortBy("fp_hash")
-            .option("path", f"{path}/fps")
-        )
-        w.saveAsTable(bucket_table)
-    finalize_meta()
+    with WINNOW.writing(
+        docs.sparkSession, path, mode, (k, window, hash_tier), (num_buckets,)
+    ) as save:
+        save(fps)
 
 
-def register_winnow_table(spark, path: str) -> str:
-    """Re-attach the bucketed winnow fingerprint table at ``path`` to
-    THIS session's catalog without rewriting any data (family twin of
-    register_banded_table).  Raises on a plain (non-bucketed) store."""
-    meta_path = f"{path}/meta.parquet"
-    rows = spark.read.parquet(meta_path).collect()
-    if len(rows) != 1:
-        raise ValueError(f"corrupt winnow store meta at {meta_path}: {rows}")
-    num_buckets, table = _meta_bucket_spec(rows[0])
-    if num_buckets is None or table is None:
-        raise ValueError(
-            f"winnow store at {path} is a plain (non-bucketed) store — "
-            f"there is no table to register; read it with "
-            f"winnow_store_read or rebuild it with num_buckets=<n>"
-        )
-    return register_external_bucketed_table(
-        spark, table, f"{path}/fps", "fp_hash", num_buckets, ["fp_hash"]
-    )
+register_winnow_table = WINNOW.register
 
 
 def winnow_store_read(
     spark, path: str, k: int = 3, window: int = 4, hash_tier: str = "fold"
 ):
-    """(rows, is_bucketed) for the winnow fingerprint store at ``path``
-    — rows are the (id, fp_hash) DataFrame, geometry-validated hard.  A
-    bucketed store is read through its catalog table (auto-re-attached),
-    which is what carries the bucket layout into the plan."""
-    meta_path = f"{path}/meta.parquet"
-    rows = spark.read.parquet(meta_path).collect()
-    _validate_winnow_meta(rows, meta_path, k, window, hash_tier)
-    num_buckets, _table = _meta_bucket_spec(rows[0])
-    if num_buckets is not None:
-        return spark.table(register_winnow_table(spark, path)), True
-    return spark.read.parquet(f"{path}/fps"), False
+    """(rows, is_bucketed) of the winnow store at ``path``."""
+    return WINNOW.read(spark, path, (k, window, hash_tier))
 
 
 def stream_winnow_admission(
@@ -1539,12 +1014,10 @@ def stream_winnow_admission(
     boilerplate cap, with the gate-specific trade stated plainly: an
     arrival whose ONLY shared fingerprints are corpus-boilerplate is
     admitted (weaker screening on boilerplate, bounded per-row join
-    fan-out).  ``winnow_store=<path>`` (built by winnow_store_write)
-    replaces the construction-time winnowing pass with a store scan —
-    geometry incl. hash_tier validated against the gate's arguments; a
-    bucketed store joins with ZERO static-side Exchange (plan-asserted).
-    SNAPSHOT semantics as everywhere in the family.  ONE LIVE GATE per
-    session (own cache ledger)."""
+    fan-out).  ``winnow_store=<path>`` (winnow_store_write) replaces the
+    construction-time winnowing pass with a store scan (family contract:
+    sources.stores).  ONE LIVE GATE PER SESSION (own ledger): see
+    _evict."""
     from bulkfhirloader_spark.operators.text import (
         winnow_fingerprints,
         winnow_fp_array,
@@ -1581,18 +1054,11 @@ def stream_winnow_admission(
             .select("fp_hash")
         )
         static_fps = static_fps.join(rare, "fp_hash")
-    while _live_static_winnow_caches:
-        _live_static_winnow_caches.pop().unpersist()
-    if bucketed_static and max_fp_df is None:
-        # bucketBy(fp_hash) already satisfies the join's distribution
-        static_fps = static_fps.persist()
-    else:
-        static_fps = (
-            static_fps.repartition(F.col("fp_hash"))
-            .sortWithinPartitions("fp_hash")
-            .persist()
-        )
-    _live_static_winnow_caches.append(static_fps)
+    _evict(_live_static_winnow_caches)
+    static_fps = _cached(
+        _live_static_winnow_caches, static_fps,
+        bucketed_static and max_fp_df is None, "fp_hash",
+    )
     stream_fps = stream_docs.select(
         F.col(id_col).alias("id_s"),
         winnow_fp_array(
@@ -1624,12 +1090,6 @@ def stream_winnow_admission(
 _live_static_winnow_caches: list = []
 
 
-def _image_hash_table_name(path: str) -> str:
-    """Catalog-name seed for the bucketed perceptual-hash store at
-    ``path``."""
-    return bucketed_table_name("bfls_imghash", path)
-
-
 def _band_key_array(hi, lo):
     """The 64-bit perceptual hash's four 16-bit slices as ONE composite
     key each: ``band_key = band_idx * 65536 + band_val`` — a bijection of
@@ -1646,18 +1106,6 @@ def _band_key_array(hi, lo):
     )
 
 
-def _validate_image_hash_meta(rows, meta_path, bands) -> None:
-    if len(rows) != 1:
-        raise ValueError(f"corrupt image-hash store meta at {meta_path}: {rows}")
-    if rows[0]["bands"] != bands:
-        raise ValueError(
-            f"image-hash store geometry mismatch at {meta_path}: store has "
-            f"bands={rows[0]['bands']}, caller asked {bands} — mismatched "
-            f"band splits never collide, so the gate would silently admit "
-            f"every duplicate"
-        )
-
-
 def image_hash_store_write(
     hashes: DataFrame,
     path: str,
@@ -1665,128 +1113,37 @@ def image_hash_store_write(
     mode: str = "append",
     num_buckets: int | None = None,
 ) -> None:
-    """Persist the BANDED perceptual-hash table the image gate's static
-    side reads at 100 TB (r14, r13 verdict #5 — the
-    banded_signature_store_write pattern applied to its perceptual twin,
-    completing the stored-tier family symmetry): ``(id, band_key,
-    hash_hi, hash_lo)`` rows, 4 per hash (~96 B/image total), appended
-    per admitted batch.  Before this store existed the gate re-banded +
-    cached the static hash table PER SESSION; the store pays the banding
-    once at write time and a restart pays only a scan.
-
-    Layout: ``<path>/meta.parquet`` (one row: bands, nullable
-    num_buckets/bucket_table) and ``<path>/bands``.  With
-    ``num_buckets=<n>`` the rows are written as an EXTERNAL BUCKETED
-    TABLE (``bucketBy(n, "band_key")``, per-bucket sorted) whose LAYOUT
-    satisfies the gate join's static-side distribution — zero
-    static-side Exchange from a fresh catalog (plan-asserted), the
-    restart-friendly tier.  Plain/bucketed mixing is refused in both
-    directions; geometry (bands) is validated hard on append and read;
-    NULL hashes (corrupt payloads) are dropped at write — quarantined
-    content cannot screen anything.  Append id-uniqueness, overwrite
-    commit-marker ordering, and snapshot semantics are the banded
-    store's contracts verbatim."""
+    """Persist the banded perceptual-hash table the image gate's static
+    side reads: ``(id, band_key, hash_hi, hash_lo)`` rows at
+    ``<path>/bands`` (bucketed on ``band_key``), 4 per hash (~96 B per
+    image), so a gate restart pays a scan instead of re-banding the
+    corpus.  ``bands`` is the geometry.  NULL hashes (corrupt payloads)
+    are dropped: quarantined content screens nothing.  Layout, meta
+    lifecycle and refusals: the family contract in sources.stores."""
     if bands != 4:
         raise ValueError("64-bit aHash bands: only the 4 x 16-bit split is wired")
-    spark = hashes.sparkSession
-    meta_path = f"{path}/meta.parquet"
-    bucket_table = _image_hash_table_name(path) if num_buckets is not None else None
-    resolved: dict = {}
-
-    def _validate(rows) -> None:
-        _validate_image_hash_meta(rows, meta_path, bands)
-        got_buckets, got_table = _meta_bucket_spec(rows[0])
-        if got_buckets != num_buckets:
-            raise ValueError(
-                f"image-hash store bucket-layout mismatch at {meta_path}: "
-                f"store was written with num_buckets={got_buckets}, caller "
-                f"asked num_buckets={num_buckets} — mixing plain and "
-                f"bucketed part files under one table silently corrupts "
-                f"bucketed scans.  Rebuild the store to change its layout"
-            )
-        resolved["bucket_table"] = got_table
-
-    finalize_meta = store_meta_lifecycle(
-        spark,
-        meta_path,
-        f"{path}/bands",
-        "bands int, num_buckets int, bucket_table string",
-        (bands, num_buckets, bucket_table),
-        _validate,
-        mode,
+    banded = hashes.where(
+        F.col("hash_hi").isNotNull() & F.col("hash_lo").isNotNull()
+    ).select(
+        F.col("media_id").alias("id"),
+        F.explode(_band_key_array(F.col("hash_hi"), F.col("hash_lo"))).alias(
+            "band_key"
+        ),
+        "hash_hi",
+        "hash_lo",
     )
-    bucket_table = resolved.get("bucket_table", bucket_table)
-    banded = (
-        hashes.where(F.col("hash_hi").isNotNull() & F.col("hash_lo").isNotNull())
-        .select(
-            F.col("media_id").alias("id"),
-            F.col("hash_hi"),
-            F.col("hash_lo"),
-            F.explode(
-                _band_key_array(F.col("hash_hi"), F.col("hash_lo"))
-            ).alias("band_key"),
-        )
-        .select("id", "band_key", "hash_hi", "hash_lo")
-    )
-    if num_buckets is None:
-        banded.write.mode(mode).parquet(f"{path}/bands")
-    else:
-        if mode == "overwrite" and spark.catalog.tableExists(bucket_table):
-            spark.sql(f"DROP TABLE `{bucket_table}`")
-        elif (
-            mode == "append"
-            and not spark.catalog.tableExists(bucket_table)
-            and fs_path_exists(spark, f"{path}/bands")
-        ):
-            register_image_hash_table(spark, path)
-        # repartition on the bucket expression first (see the banded
-        # writer): otherwise a bucketed write emits one file per
-        # (task, bucket) pair per append
-        w = (
-            banded.repartition(num_buckets, F.col("band_key"))
-            .write.format("parquet")
-            .mode(mode)
-            .bucketBy(num_buckets, "band_key")
-            .sortBy("band_key")
-            .option("path", f"{path}/bands")
-        )
-        w.saveAsTable(bucket_table)
-    finalize_meta()
+    with IMAGE_HASH.writing(
+        hashes.sparkSession, path, mode, (bands,), (num_buckets,)
+    ) as save:
+        save(banded)
 
 
-def register_image_hash_table(spark, path: str) -> str:
-    """Re-attach the bucketed perceptual-hash table at ``path`` to THIS
-    session's catalog without rewriting any data (exact twin of
-    register_banded_table).  Raises on a plain (non-bucketed) store."""
-    meta_path = f"{path}/meta.parquet"
-    rows = spark.read.parquet(meta_path).collect()
-    if len(rows) != 1:
-        raise ValueError(f"corrupt image-hash store meta at {meta_path}: {rows}")
-    num_buckets, table = _meta_bucket_spec(rows[0])
-    if num_buckets is None or table is None:
-        raise ValueError(
-            f"image-hash store at {path} is a plain (non-bucketed) store — "
-            f"there is no table to register; read it with "
-            f"image_hash_store_read or rebuild it with num_buckets=<n>"
-        )
-    return register_external_bucketed_table(
-        spark, table, f"{path}/bands", "band_key", num_buckets, ["band_key"]
-    )
+register_image_hash_table = IMAGE_HASH.register
 
 
 def image_hash_store_read(spark, path: str, bands: int = 4):
-    """(rows, is_bucketed) for the perceptual-hash store at ``path`` —
-    rows are the (id, band_key, hash_hi, hash_lo) DataFrame,
-    geometry-validated hard.  A bucketed store is read through its
-    catalog table (auto-re-attached), which is what carries the bucket
-    layout into the plan."""
-    meta_path = f"{path}/meta.parquet"
-    rows = spark.read.parquet(meta_path).collect()
-    _validate_image_hash_meta(rows, meta_path, bands)
-    num_buckets, _table = _meta_bucket_spec(rows[0])
-    if num_buckets is not None:
-        return spark.table(register_image_hash_table(spark, path)), True
-    return spark.read.parquet(f"{path}/bands"), False
+    """(rows, is_bucketed) of the perceptual-hash store at ``path``."""
+    return IMAGE_HASH.read(spark, path, (bands,))
 
 
 def stream_image_admission(
@@ -1839,20 +1196,12 @@ def stream_image_admission(
     near-threshold hashes that the cap then bounds).  Default None keeps
     the exact pigeonhole screen.
 
-    STORED TIER (r14, r13 verdict #5 — the banded/semantic stores'
-    pattern applied to the third gate): pass ``hash_store=<path>``
-    (built via image_hash_store_write) and the static side is a scan of
-    the PRE-BANDED (id, band_key, hash_hi, hash_lo) store instead of a
-    per-session re-band + cache fill (``existing_hashes`` must then be
-    omitted).  A store written with ``num_buckets=`` satisfies the anti
-    join's static-side distribution from LAYOUT — zero static-side
-    Exchange from a fresh catalog (plan-asserted in tests/test_plans.py)
-    and a gate restart pays only a scan.  The stored tier joins on the
-    composite ``band_key = band_idx * 65536 + band_val`` (a bijection of
-    the pair, so pigeonhole semantics are identical — one bucketable
-    column).  SNAPSHOT semantics: the file listing is captured at gate
-    construction; store appends screen only from the NEXT gate
-    construction, never mid-stream (the family contract)."""
+    STORED TIER: ``hash_store=<path>`` (image_hash_store_write) makes the
+    static side a scan of the pre-banded store instead of a per-session
+    re-band + cache fill (``existing_hashes`` must then be omitted;
+    family contract: sources.stores).  It joins on the composite
+    ``band_key = band_idx * 65536 + band_val``, a bijection of the pair,
+    so pigeonhole semantics are identical on one bucketable column."""
     from bulkfhirloader_spark.operators.multimodal import image_ahash
 
     if max_hamming > bands - 1:
@@ -1922,21 +1271,11 @@ def stream_image_admission(
         from bulkfhirloader_spark.operators.dedup import _cap_band_buckets
 
         static_banded = _cap_band_buckets(static_banded, max_bucket_size, keys=keys)
-    while _live_static_img_caches:
-        _live_static_img_caches.pop().unpersist()
-    if bucketed_static and max_bucket_size is None:
-        # the bucketBy(band_key) layout already satisfies the join's
-        # static-side distribution — persist only serves repeat
-        # micro-batches from cached blocks (InMemoryRelation preserves
-        # the bucketed child's partitioning); batch 0 pays only a scan
-        static_banded = static_banded.persist()
-    else:
-        static_banded = (
-            static_banded.repartition(*[F.col(c) for c in keys])
-            .sortWithinPartitions(*keys)
-            .persist()
-        )
-    _live_static_img_caches.append(static_banded)
+    _evict(_live_static_img_caches)
+    static_banded = _cached(
+        _live_static_img_caches, static_banded,
+        bucketed_static and max_bucket_size is None, *keys,
+    )
     hamming = F.bit_count(
         F.col("hi_s").bitwiseXOR(F.col("hi_e"))
     ) + F.bit_count(F.col("lo_s").bitwiseXOR(F.col("lo_e")))
@@ -2024,26 +1363,18 @@ def stream_admission_pipeline(
     semantics already impose (state rebuilds empty; availableNow drains
     between restarts), or key the aggregate by (id, ingest-time window)
     with a watermark upstream if arrivals carry event time.  Run in
-    update mode.  ONE LIVE PIPELINE PER SESSION (own cache ledger —
-    constructing a new one evicts the previous pipeline's three static
-    caches, not the standalone gates').
+    update mode.  ONE LIVE PIPELINE PER SESSION (own ledger, see _evict:
+    a new one evicts the previous pipeline's three static caches, not the
+    standalone gates').
 
-    STORE-BACKED TIER (r15): each stage independently accepts the same
-    store its standalone gate reads — ``banded_store=`` (exact stage;
-    replaces ``existing_docs``'s text re-derivation for that stage),
-    ``winnow_store=``, and ``semantic_store=`` (which carries its own
-    frozen fit, so ``centroids``/``existing_emb`` must then be omitted)
-    — the 100 TB restart shape: three bucketed scans, zero static-side
-    Exchange apiece, geometry/fit validated hard by each store's own
-    reader, SNAPSHOT semantics as everywhere in the family.  Stages mix
-    freely (e.g. stored text screens + derived semantic while a re-fit
-    is pending)."""
-    from bulkfhirloader_spark.operators.dedup import (
-        band_hash_array,
-        minhash_sig_expr,
-        require_band_geometry,
-        word_shingles,
-    )
+    STORE-BACKED TIER: each stage independently accepts the store its
+    standalone gate reads — ``banded_store=`` (replaces
+    ``existing_docs``'s text re-derivation for the exact stage),
+    ``winnow_store=`` and ``semantic_store=`` (which carries its own
+    frozen fit, so ``centroids``/``existing_emb`` must then be omitted).
+    Stages mix freely (e.g. stored text screens + derived semantic while
+    a re-fit is pending)."""
+    from bulkfhirloader_spark.operators.dedup import require_band_geometry
     from bulkfhirloader_spark.operators.similarity import cosine_with_norms
     from bulkfhirloader_spark.operators.text import (
         winnow_fingerprints,
@@ -2053,21 +1384,10 @@ def stream_admission_pipeline(
     require_band_geometry(num_hashes, bands)
     spark = stream_docs.sparkSession
 
-    def banded(docs: DataFrame, suffix: str) -> DataFrame:
-        with_sh = docs.select(
-            F.col(id_col).alias(f"id{suffix}"),
-            word_shingles(F.col(text_col), shingle_words).alias(f"sh{suffix}"),
-        )
-        with_sig = with_sh.withColumn(
-            "_minhash", minhash_sig_expr(F.col(f"sh{suffix}"), num_hashes)
-        )
-        return with_sig.select(
-            f"id{suffix}",
-            F.explode(
-                band_hash_array("_minhash", bands, num_hashes)
-            ).alias("band_hash"),
-            f"sh{suffix}",
-        )
+    def banded(docs: DataFrame, sfx: str) -> DataFrame:
+        return _minhash_bands(
+            docs, id_col, text_col, num_hashes, bands, shingle_words, sfx
+        ).select(f"id{sfx}", "band_hash", f"sh{sfx}")
 
     bands_bucketed = fps_bucketed = sem_bucketed = False
     if banded_store is not None:
@@ -2128,24 +1448,11 @@ def stream_admission_pipeline(
         static_sem = _semantic_assigned(
             existing_emb, cents, id_col, vec_col, round_dp, "_e"
         )
-    while _live_static_pipeline_caches:
-        _live_static_pipeline_caches.pop().unpersist()
-
-    def _cached(df: DataFrame, key: str, bucketed: bool) -> DataFrame:
-        # a bucketed store's layout already satisfies the join's static-
-        # side distribution — persist only serves repeat micro-batches
-        if bucketed:
-            return df.persist()
-        return (
-            df.repartition(F.col(key)).sortWithinPartitions(key).persist()
-        )
-
-    static_bands = _cached(static_bands, "band_hash", bands_bucketed)
-    static_fps = _cached(static_fps, "fp_hash", fps_bucketed)
-    static_sem = _cached(static_sem, "cluster_id", sem_bucketed)
-    _live_static_pipeline_caches.extend(
-        [static_bands, static_fps, static_sem]
-    )
+    ledger = _live_static_pipeline_caches
+    _evict(ledger)
+    static_bands = _cached(ledger, static_bands, bands_bucketed, "band_hash")
+    static_fps = _cached(ledger, static_fps, fps_bucketed, "fp_hash")
+    static_sem = _cached(ledger, static_sem, sem_bucketed, "cluster_id")
 
     stream_bands = banded(stream_docs, "_s")
     inter = F.size(F.array_intersect(F.col("sh_s"), F.col("sh_e")))

@@ -375,7 +375,6 @@ def measure_serving_restart(n: int = 500_000) -> None:
     from bulkfhirloader_spark.operators import similarity
     from bulkfhirloader_spark.session import get_spark
     from bulkfhirloader_spark.streaming.joins import (
-        _ivf_lists_table_name,
         ivf_lists_bucketed_write,
         stream_sim_topk,
     )
@@ -387,7 +386,7 @@ def measure_serving_restart(n: int = 500_000) -> None:
     if not os.path.exists(index):
         similarity.build_ivf_index(emb, index, n_clusters=64)
     t0 = time.monotonic()
-    ivf_lists_bucketed_write(spark, index, num_buckets=32)
+    tbl = ivf_lists_bucketed_write(spark, index, num_buckets=32)
     derive_s = time.monotonic() - t0
     src = tempfile.mkdtemp(prefix="ann_serving_")
     queries.coalesce(1).write.parquet(f"{src}/in/f0")
@@ -397,7 +396,6 @@ def measure_serving_restart(n: int = 500_000) -> None:
         if bucketed:
             # simulate the cluster restart: a fresh catalog must
             # re-attach the mirror itself
-            tbl = _ivf_lists_table_name(index)
             if spark.catalog.tableExists(tbl):
                 spark.sql(f"DROP TABLE `{tbl}`")
         stream = (

@@ -625,8 +625,8 @@ def test_streaming_gate_bucketed_store_static_side_has_zero_exchange(
     REPARTITION_BY_COL fill Exchange under the InMemoryRelation."""
     import os as _os
 
+    from bulkfhirloader_spark.sources.bucketing import bucketed_table_name
     from bulkfhirloader_spark.streaming.joins import (
-        _banded_table_name,
         banded_signature_store_write,
         register_banded_table,
         stream_near_dup_admission,
@@ -645,7 +645,7 @@ def test_streaming_gate_bucketed_store_static_side_has_zero_exchange(
     # simulate the cluster restart the layout exists for: the in-memory
     # catalog forgets the table; register_banded_table re-attaches it
     # from the store meta without touching data
-    spark.sql(f"DROP TABLE `{_banded_table_name(store)}`")
+    spark.sql(f"DROP TABLE `{bucketed_table_name('bfls_banded', store)}`")
     register_banded_table(spark, store)
     docs.where("doc_id % 2 = 1").repartition(2).write.parquet(f"{src}/in")
     schema = spark.read.parquet(f"{src}/in").schema
@@ -694,8 +694,8 @@ def test_streaming_semantic_gate_stored_static_side_has_zero_exchange(
     there is no REPARTITION_BY_COL cache-fill lineage at all."""
     import os as _os
 
+    from bulkfhirloader_spark.sources.bucketing import bucketed_table_name
     from bulkfhirloader_spark.streaming.joins import (
-        _semantic_table_name,
         semantic_store_write,
         stream_semantic_admission,
     )
@@ -708,7 +708,7 @@ def test_streaming_semantic_gate_stored_static_side_has_zero_exchange(
     src = str(tmp_path)
     store = f"{src}/semstore"
     semantic_store_write(existing, store, cents, num_buckets=8)
-    spark.sql(f"DROP TABLE `{_semantic_table_name(store)}`")
+    spark.sql(f"DROP TABLE `{bucketed_table_name('bfls_semstore', store)}`")
 
     spark.createDataFrame(
         [(i, [float(i % 5) / 10.0, 1.0, 0.0]) for i in range(1, 20, 2)],
@@ -778,8 +778,8 @@ def test_streaming_winnow_gate_stored_static_side_has_zero_exchange(
     Bucketed: true, no REPARTITION_BY_COL cache-fill lineage."""
     import os as _os
 
+    from bulkfhirloader_spark.sources.bucketing import bucketed_table_name
     from bulkfhirloader_spark.streaming.joins import (
-        _winnow_table_name,
         stream_winnow_admission,
         winnow_store_write,
     )
@@ -792,7 +792,7 @@ def test_streaming_winnow_gate_stored_static_side_has_zero_exchange(
     src = str(tmp_path)
     store = f"{src}/wstore"
     winnow_store_write(docs.where("doc_id % 2 = 0"), store, num_buckets=8)
-    spark.sql(f"DROP TABLE `{_winnow_table_name(store)}`")
+    spark.sql(f"DROP TABLE `{bucketed_table_name('bfls_winnow', store)}`")
     docs.where("doc_id % 2 = 1").repartition(2).write.parquet(f"{src}/in")
     schema = spark.read.parquet(f"{src}/in").schema
     stream = (
@@ -857,8 +857,8 @@ def test_streaming_image_gate_stored_static_side_has_zero_exchange(
     from pyspark.sql import functions as F
 
     from bulkfhirloader_spark.operators import multimodal as mm
+    from bulkfhirloader_spark.sources.bucketing import bucketed_table_name
     from bulkfhirloader_spark.streaming.joins import (
-        _image_hash_table_name,
         image_hash_store_write,
         stream_image_admission,
     )
@@ -871,7 +871,7 @@ def test_streaming_image_gate_stored_static_side_has_zero_exchange(
     store = f"{src}/imgstore"
     image_hash_store_write(static_hashes, store, num_buckets=8)
     # simulate the cluster restart the layout exists for
-    spark.sql(f"DROP TABLE `{_image_hash_table_name(store)}`")
+    spark.sql(f"DROP TABLE `{bucketed_table_name('bfls_imghash', store)}`")
 
     mm.synthetic_ppm_media(
         spark.createDataFrame([(i,) for i in range(1, 40, 4)], "media_id long")
@@ -942,8 +942,8 @@ def test_stream_sim_topk_bucketed_lists_static_side_has_zero_exchange(
     import re as _re
 
     from bulkfhirloader_spark.operators import similarity as sim
+    from bulkfhirloader_spark.sources.bucketing import bucketed_table_name
     from bulkfhirloader_spark.streaming.joins import (
-        _ivf_lists_table_name,
         ivf_lists_bucketed_write,
         stream_sim_topk,
     )
@@ -957,7 +957,7 @@ def test_stream_sim_topk_bucketed_lists_static_side_has_zero_exchange(
     sim.build_ivf_index(corpus, index, n_clusters=4)
     ivf_lists_bucketed_write(spark, index, num_buckets=8)
     # simulate the cluster restart the layout exists for
-    spark.sql(f"DROP TABLE `{_ivf_lists_table_name(index)}`")
+    spark.sql(f"DROP TABLE `{bucketed_table_name('bfls_ivflists', index)}`")
     spark.createDataFrame(
         [(i, [float(i % 4), float((i * 5) % 7), 1.0]) for i in range(4)],
         "query_id long, query_vec array<double>",

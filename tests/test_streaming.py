@@ -614,8 +614,8 @@ def test_stream_near_dup_admission_from_bucketed_store(spark, tmp_path):
     silently invisible to the pruned join."""
     import pytest as _pytest
 
+    from bulkfhirloader_spark.sources.bucketing import bucketed_table_name
     from bulkfhirloader_spark.streaming.joins import (
-        _banded_table_name,
         banded_signature_store_read,
         banded_signature_store_write,
         stream_near_dup_admission,
@@ -640,7 +640,7 @@ def test_stream_near_dup_admission_from_bucketed_store(spark, tmp_path):
     ).coalesce(1).write.parquet(str(tmp_path / "in" / "f1"))
 
     # catalog restart: the gate must re-attach the table by itself
-    spark.sql(f"DROP TABLE `{_banded_table_name(store)}`")
+    spark.sql(f"DROP TABLE `{bucketed_table_name('bfls_banded', store)}`")
 
     def run(qname):
         stream = (
@@ -676,7 +676,7 @@ def test_stream_near_dup_admission_from_bucketed_store(spark, tmp_path):
 
     # append under the matching spec from a restarted catalog, then the
     # rebuilt gate screens against the appended doc too
-    spark.sql(f"DROP TABLE `{_banded_table_name(store)}`")
+    spark.sql(f"DROP TABLE `{bucketed_table_name('bfls_banded', store)}`")
     banded_signature_store_write(
         spark.createDataFrame([(3, uniq1)], schema), store, num_buckets=4
     )
@@ -861,8 +861,8 @@ def test_stream_semantic_admission_from_bucketed_store(spark, tmp_path):
     mismatches refuse loudly in both directions."""
     import pytest as _pytest
 
+    from bulkfhirloader_spark.sources.bucketing import bucketed_table_name
     from bulkfhirloader_spark.streaming.joins import (
-        _semantic_table_name,
         semantic_store_read,
         semantic_store_write,
     )
@@ -872,7 +872,7 @@ def test_stream_semantic_admission_from_bucketed_store(spark, tmp_path):
     semantic_store_write(existing, store, cents, num_buckets=4)
 
     # catalog restart: the gate must re-attach the table by itself
-    spark.sql(f"DROP TABLE `{_semantic_table_name(store)}`")
+    spark.sql(f"DROP TABLE `{bucketed_table_name('bfls_semstore', store)}`")
     got = _sem_stream_run(spark, tmp_path, "sem_bucketed_t", semantic_store=store)
     assert got == [13, 15]
 
@@ -888,7 +888,7 @@ def test_stream_semantic_admission_from_bucketed_store(spark, tmp_path):
 
     # append 13's own direction under the STORED fit (centroids omitted)
     # from a restarted catalog: a REBUILT gate now rejects 13; 15 stays
-    spark.sql(f"DROP TABLE `{_semantic_table_name(store)}`")
+    spark.sql(f"DROP TABLE `{bucketed_table_name('bfls_semstore', store)}`")
     semantic_store_write(
         spark.createDataFrame(
             [(6, [0.0, 0.0, 1.0])], "vec_id long, embedding array<double>"
