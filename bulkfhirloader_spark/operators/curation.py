@@ -710,8 +710,8 @@ def deterministic_shuffle(
 
 
 # Cache-hygiene ledger for deterministic_shuffle's pinned range placement
-# (same pattern as dedup._live_sig_caches): the previous invocation's
-# persist is released when a new one begins.
+# (the one-live-entry pattern of streaming.joins._evict): the previous
+# invocation's persist is released when a new one begins.
 _live_shuffle_caches: list = []
 
 # Same pattern for pack_token_shards' (id, n_tokens) projection pin.

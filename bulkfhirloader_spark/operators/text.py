@@ -44,12 +44,6 @@ def tokens_sql(text_sql: str) -> str:
     return f"regexp_extract_all({text_sql}, '\\\\S+', 0)"
 
 
-def normalize_sql(text_sql: str) -> str:
-    """SQL-text form of ``normalize_text`` (same one-parse contract as
-    ``tokens_sql``)."""
-    return f"lower(trim(regexp_replace({text_sql}, '\\\\s+', ' ')))"
-
-
 def _sql_str_literal(s: str) -> str:
     """Single-quoted SQL string literal with backslash/quote escaping —
     the stoplists and language tags below are plain ASCII words, but the

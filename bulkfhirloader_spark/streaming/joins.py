@@ -11,16 +11,23 @@ O(stream length) — the property that lets an always-on pipeline run this
 join indefinitely.
 
 The admission gates below (MinHash, semantic, winnow, perceptual image,
-and the composed pipeline) and the streaming IVF prober read their static
-sides from stores whose layout, meta lifecycle and refusals live in
-sources/stores.py; this module keeps each store's row projection and the
-functions that name it (``*_store_write``, ``*_store_read``,
-``register_*_table``).
+and the composed pipeline) are one plan shape, written once: each family
+supplies a *screen* (``_minhash_screen``, ``_semantic_screen``,
+``_winnow_screen``, ``_image_screen``: stream rows, static rows, join keys,
+verify predicate, optional hot-key cap) and ``_gate`` / ``_probe`` build the
+stream-static join, the static-side cache and the per-arrival admission
+(the contract is on ``_gate``).  Their stored static sides, and the
+streaming IVF prober's, live in stores whose layout, meta lifecycle and
+refusals are in sources/stores.py; this module keeps each store's row
+projection and the functions that name it (``*_store_write``,
+``*_store_read``, ``register_*_table``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bulkfhirloader_spark.fsutil import fs_path_exists
@@ -78,40 +85,132 @@ def stream_interval_join(
 
 
 def _evict(ledger: list) -> None:
-    """Unpersist the previous gate's cached static side: ONE LIVE GATE PER
-    SESSION per gate kind, a deliberate memory bound.  Each kind keeps its
-    own ledger, so building one kind never evicts a running gate of
-    another, and gates evict only after their arguments validated, so a
-    failed construction evicts nothing.  A running gate whose cache was
-    evicted still admits correctly but re-derives or re-scans its static
-    side every micro-batch (for unbucketed sides including the full
-    repartition + sort that _cached exists to avoid).  Run concurrent
-    gates of one kind from separate sessions, or over bucketed stores,
-    where eviction costs only the re-scan."""
+    """Unpersist the static side(s) a ``ledger`` holds: one live gate per
+    session per gate kind (see _gate)."""
     while ledger:
         ledger.pop().unpersist()
 
 
 def _cached(ledger: list, df: DataFrame, bucketed: bool, *keys: str) -> DataFrame:
-    """A gate's static side, persisted for repeat micro-batches and
-    recorded in the gate's ``ledger``.
-
-    A bucketed store's layout already satisfies the join's static-side
-    distribution (InMemoryRelation keeps the bucketed child's
-    partitioning), so batch 0 pays only a scan.  Any other static side is
-    cached already partitioned and sorted on the join ``keys``: the join
-    re-plans per micro-batch, and a plain persist saves only the scan —
-    every batch would still re-shuffle the whole static side (measured
-    ~150 s/batch at a 2M-doc banded store against ≤ 13 s for the scan,
-    SCALE.md round 11).  With the repartition inside the cache only the
-    batch-sized stream side shuffles (plan-asserted in tests/test_plans.py).
-    The one-time fill costs ~4 uncached batches; a cache dies with the
-    session, the bucketed layout does not."""
+    """A static side persisted for repeat micro-batches and recorded in
+    ``ledger``; unless ``bucketed``, cached already partitioned and sorted
+    on the join ``keys`` (the static-side cache contract, see _gate)."""
     if not bucketed:
         df = df.repartition(*[F.col(k) for k in keys]).sortWithinPartitions(*keys)
     df = df.persist()
     ledger.append(df)
     return df
+
+
+# One ledger per gate kind, plus the IVF prober's: each holds the cached
+# static side(s) of the kind's one live gate (_evict, _gate).
+_live_static_band_caches: list = []
+_live_static_sem_caches: list = []
+_live_static_winnow_caches: list = []
+_live_static_img_caches: list = []
+_live_static_pipeline_caches: list = []
+_live_static_ivf_caches: list = []
+
+
+class _Screen(NamedTuple):
+    """One family's half of a gate.  ``stream`` and ``static`` rows carry
+    the arrival / corpus id as ``id_s`` / ``id_e`` plus the join ``keys``;
+    ``verify`` is the join's extra predicate (None: key equality decides);
+    ``bucketed`` says the static side is a bucketed store scan; ``cap``
+    drops static rows whose key group holds more than ``cap`` rows."""
+
+    stream: DataFrame
+    static: DataFrame
+    keys: tuple
+    verify: Column | None = None
+    bucketed: bool = False
+    cap: int | None = None
+
+
+def _from_store(given: tuple, store: str | None, kw: str, src: tuple) -> bool:
+    """True when a screen's static side comes from ``store`` (the ``kw=``
+    path), False when from the ``given`` arguments.  ``src`` is (caller
+    label, name of the given arguments, whether passing both is refused);
+    a static side from neither is always refused."""
+    who, names, exclusive = src
+    if store is None:
+        if any(g is None for g in given):
+            raise ValueError(f"{who} needs either {names} or a `{kw}=` path")
+        return False
+    if exclusive and any(g is not None for g in given):
+        raise ValueError(
+            f"{kw} carries its own static side — pass either the store "
+            f"path or {names}, not both"
+        )
+    return True
+
+
+def _probe(ledger: list, sc: _Screen, how: str) -> DataFrame:
+    """``sc``'s stream side joined (``how``) to its capped, cached static
+    side on key equality, ``id_s != id_e`` and the verify predicate."""
+    from bulkfhirloader_spark.operators.dedup import _drop_hot_keys
+
+    static = sc.static
+    if sc.cap is not None:
+        static = _drop_hot_keys(static, sc.keys, sc.cap)
+    static = _cached(ledger, static, sc.bucketed and sc.cap is None, *sc.keys)
+    cond = F.col("id_s") != F.col("id_e")
+    for k in sc.keys:
+        cond = (sc.stream[k] == static[k]) & cond
+    if sc.verify is not None:
+        cond = cond & sc.verify
+    return sc.stream.join(static, cond, how)
+
+
+def _gate(ledger: list, sc: _Screen, id_col: str, all_rows=None) -> DataFrame:
+    """The admission gate every ``stream_*_admission`` builds: arrivals
+    with NO verified near-duplicate in a STATIC corpus, as a stream-static
+    join.
+
+    Plan shape: the stream side is a pure projection of each arrival into
+    its key rows (streaming-legal: no shuffle, no state), LEFT ANTI joined
+    to the static side on the keys, with the family's exact verification
+    as an extra join predicate — keys propose, the join condition
+    verifies, no Python touches a row.  A key row survives iff it produced
+    no verified match.  With ``all_rows`` (the arrival's row count as an
+    aggregate Column) an arrival is admitted iff ALL its rows survive:
+    one count per arrival, complete within the batch because an arrival's
+    rows live in one micro-batch; run in update mode.  The join itself is
+    stateless; only that count keeps O(1) state per arrival seen.  Without
+    ``all_rows`` (one row per arrival) the surviving rows are returned.
+
+    Static-side cache: built once, capped first if the screen caps, then
+    persisted (_cached).  A bucketed store's layout already satisfies the
+    join's static-side distribution (InMemoryRelation keeps the bucketed
+    child's partitioning), so batch 0 pays only a scan and the plan has no
+    static-side Exchange (plan-asserted in tests/test_plans.py).  Any other
+    static side — derived, plain-stored or capped — is cached already
+    partitioned and sorted on the keys: the join re-plans per micro-batch,
+    and a plain persist would re-shuffle the whole static side every batch
+    (measured ~150 s/batch at a 2M-doc banded store against <= 13 s for the
+    scan, SCALE.md round 11); with the repartition inside the cache only
+    the batch-sized stream side shuffles.  The fill costs ~4 uncached
+    batches; a cache dies with the session, the bucketed layout does not.
+    A stored static side is a snapshot taken at gate construction.
+
+    ONE LIVE GATE PER SESSION per gate kind, a deliberate memory bound:
+    each kind has its own ledger and a new gate evicts the previous one of
+    its kind only, after its arguments validated (the screens raise before
+    this runs), so a failed construction evicts nothing.  A running gate
+    whose cache was evicted still admits correctly but re-derives or
+    re-scans its static side every micro-batch.  Run concurrent gates of
+    one kind from separate sessions, or over bucketed stores, where
+    eviction costs only the re-scan."""
+    _evict(ledger)
+    surviving = _probe(ledger, sc, "left_anti")
+    if all_rows is None:
+        return surviving
+    return (
+        surviving.groupBy(F.col("id_s").alias(id_col))
+        .agg((F.count(F.lit(1)) == all_rows).alias("_all"))
+        .where("_all")
+        .select(id_col)
+    )
 
 
 def banded_signature_store_write(
@@ -191,6 +290,45 @@ def banded_signature_store_read(
     return BANDED.read(spark, path, (num_hashes, bands, shingle_words))
 
 
+def _minhash_screen(
+    stream: DataFrame, existing, store, src: tuple, id_col: str,
+    text_col: str, num_hashes: int, bands: int, shingle_words: int,
+    threshold: float,
+) -> _Screen:
+    """MinHash band rows carrying their shingle sets, keyed on
+    ``band_hash`` and verified by exact n-gram Jaccard >= ``threshold``.
+
+    The key is band_hash ALONE: each band's hash is xxhash64(band_idx, sig
+    slice...), the band index inside the preimage (dedup.band_hash_array),
+    so hash equality IS band equality up to a 2^-64 cross-band collision,
+    which can only propose an extra pair for the exact verify to reject.
+    One key matters physically: the bucketed store is bucketBy(band_hash),
+    and Spark plans an Exchange-free bucketed join only when the equi-keys
+    equal the bucket columns."""
+    from bulkfhirloader_spark.operators.dedup import require_band_geometry
+
+    require_band_geometry(num_hashes, bands)
+
+    def banded(docs: DataFrame, sfx: str) -> DataFrame:
+        geo = (num_hashes, bands, shingle_words, sfx)
+        return _minhash_bands(docs, id_col, text_col, *geo).drop("band_idx")
+
+    bucketed = False
+    if _from_store((existing,), store, "banded_store", src):
+        rows, bucketed = banded_signature_store_read(
+            stream.sparkSession, store, num_hashes, bands, shingle_words
+        )
+        static = rows.select(
+            F.col("id").alias("id_e"), "band_hash", F.col("shingles").alias("sh_e")
+        )
+    else:
+        static = banded(existing, "_e")
+    inter = F.size(F.array_intersect(F.col("sh_s"), F.col("sh_e")))
+    union = F.size("sh_s") + F.size("sh_e") - inter
+    verify = (inter.cast("double") / union.cast("double")) >= F.lit(threshold)
+    return _Screen(banded(stream, "_s"), static, ("band_hash",), verify, bucketed)
+
+
 def stream_near_dup_admission(
     stream_docs: DataFrame,
     existing: DataFrame | None = None,
@@ -205,104 +343,27 @@ def stream_near_dup_admission(
     """Streaming twin of dedup.incremental_near_dup_filter's first rule:
     admit arriving docs that have NO exact-verified near-dup (n-gram
     Jaccard >= threshold) in a STATIC existing corpus — the always-on
-    crawl-ingest gate, as a stream-static join.
-
-    Plan shape: the stream side computes MinHash band hashes as a pure
-    projection (streaming-safe — no shuffle, no state), explodes to one
-    row per band, and LEFT ANTI joins the static corpus's banded signature
-    table on ``band_hash`` (the band index is inside the hash preimage,
-    so one key is band equality — see the inline note) with the
-    exact-Jaccard verification as an additional join predicate: shingle
-    sets ride the band rows, and ``size(array_intersect)`` scores the
-    pair inside the join — LSH proposes, the join condition verifies,
-    nothing Python touches a row.
-    A band row survives the anti join iff it produced no verified match;
-    a doc is admitted iff ALL ``bands`` of its rows survive (count==bands
-    groupBy — each arriving doc's band rows live in one micro-batch, so
-    the aggregate completes within the batch; run in update mode).
+    crawl-ingest gate (plan, cache and state contract: _gate; keys and
+    verify: _minhash_screen).  A doc is admitted iff all ``bands`` of its
+    band rows survive.
 
     ``banded_store=<path>`` (banded_signature_store_write) makes the
     static side a scan of the stored pre-banded table instead of
     re-deriving it from ``existing``'s text (``existing`` may then be
-    omitted); admissions are identical either way (pytest-pinned), and
-    the store's snapshot, bucketed-layout and geometry contracts are the
-    family's (sources.stores).  State: the stream-static join itself is
-    STATELESS (the static side re-resolves per micro-batch); only the
-    final per-doc count keeps O(1) state per in-flight doc.  New-new
-    (intra-stream) near-dup admission needs cross-batch signature state —
-    that is the batch operator's clustering job; compose with
+    omitted); admissions are identical either way (pytest-pinned).
+    New-new (intra-stream) near-dup admission needs cross-batch signature
+    state — that is the batch operator's clustering job; compose with
     streaming_exact_dedup for exact intra-stream dups.
 
     Recall contract: admission errs only where banding misses a true pair
     (same geometry argument as dedup_minhash_pairs — measured exact at
-    sf0.001/0.01/0.1).
-
-    ONE LIVE GATE PER SESSION: see _evict.
-    """
-    from bulkfhirloader_spark.operators.dedup import require_band_geometry
-
-    require_band_geometry(num_hashes, bands)
-
-    def banded(docs: DataFrame, sfx: str) -> DataFrame:
-        return _minhash_bands(
-            docs, id_col, text_col, num_hashes, bands, shingle_words, sfx
-        ).select(f"id{sfx}", "band_hash", f"sh{sfx}")
-
-    stream_banded = banded(stream_docs, "_s")
-    bucketed_static = False
-    if banded_store is not None:
-        store_rows, bucketed_static = banded_signature_store_read(
-            stream_docs.sparkSession, banded_store, num_hashes, bands,
-            shingle_words,
-        )
-        static_banded = store_rows.select(
-            F.col("id").alias("id_e"),
-            "band_hash",
-            F.col("shingles").alias("sh_e"),
-        )
-    elif existing is None:
-        raise ValueError(
-            "stream_near_dup_admission needs either an `existing` corpus "
-            "or a `banded_store=` path"
-        )
-    else:
-        static_banded = banded(existing, "_e")
-    _evict(_live_static_band_caches)
-    static_banded = _cached(
-        _live_static_band_caches, static_banded, bucketed_static, "band_hash"
+    sf0.001/0.01/0.1)."""
+    sc = _minhash_screen(
+        stream_docs, existing, banded_store,
+        ("stream_near_dup_admission", "an `existing` corpus", False),
+        id_col, text_col, num_hashes, bands, shingle_words, threshold,
     )
-
-    inter = F.size(F.array_intersect(F.col("sh_s"), F.col("sh_e")))
-    union = F.size("sh_s") + F.size("sh_e") - inter
-    verified = (inter.cast("double") / union.cast("double")) >= F.lit(threshold)
-    # The join keys on band_hash ALONE (r12): each band's hash is
-    # xxhash64(band_idx, sig slice...) — the band index is part of the
-    # hash preimage (operators/dedup.band_hash_array), so band_hash
-    # equality IS band equality up to a 2^-64 cross-band collision, and
-    # any such collision can only PROPOSE an extra pair that the exact
-    # Jaccard predicate then verifies — identical admissions, one join
-    # key.  Single-key matters physically: the bucketed store is
-    # bucketBy(band_hash), and Spark only plans an Exchange-free bucketed
-    # join when the equi-keys equal the bucket columns (a bucket-subset
-    # key set gets 'Bucketed: false (disabled by query planner)' —
-    # measured on 4.1.2).
-    cond = (
-        (stream_banded["band_hash"] == static_banded["band_hash"])
-        & (stream_banded["id_s"] != static_banded["id_e"])
-        & verified
-    )
-    surviving = stream_banded.join(static_banded, cond, "left_anti")
-    return (
-        surviving.groupBy(F.col("id_s").alias(id_col))
-        .agg(F.count(F.lit(1)).alias("_n_clean_bands"))
-        .where(F.col("_n_clean_bands") == bands)
-        .select(id_col)
-    )
-
-
-# Cache-hygiene ledger for stream_near_dup_admission's static banded side
-# (same pattern as dedup._live_sig_caches).
-_live_static_band_caches: list = []
+    return _gate(_live_static_band_caches, sc, id_col, F.lit(bands))
 
 
 def _semantic_assigned(
@@ -352,23 +413,20 @@ def _semantic_assigned_blas(
     round_dp: int,
     sfx: str,
 ) -> DataFrame:
-    """BLAS/Arrow twin of _semantic_assigned — the gate's STREAM side at
-    large k and the store writer's large-k tier
-    (r13, r12 verdict Next round #2): one dgemm per Arrow micro-batch
-    instead of a k × dim literal expression tree per row — the fold
-    tier's per-row assignment cost is what made large-k gates
-    marginal-batch-bound (at k=5000 the literal tree is ~80k expression
-    nodes per evaluation site; the py4j CONSTRUCTION alone is minutes,
-    see SCALE.md r13).  mapInPandas is stateless and streaming-legal.
+    """BLAS/Arrow twin of _semantic_assigned (r13) — the gate's STREAM
+    side and the store writer's tier at large k: one dgemm per Arrow
+    micro-batch instead of a k × dim literal expression tree per row (at
+    k=5000 that tree is ~80k nodes per evaluation site, and its py4j
+    construction alone takes minutes, SCALE.md r13).  mapInPandas is
+    stateless and streaming-legal.
 
-    Parity contract: only the ARGMAX comes from numpy — the emitted
-    vector is the same exact float64 the fold tier casts to, and the l2
-    norm is hoisted JVM-SIDE afterwards (same l2_norm fold), so the anti
-    join's exact-cosine verify is bit-identical to the fold tier's; the
-    assignment itself carries the kmeans_assign_blas caveat (numpy
-    half-even rounding vs the fold's HALF_UP — knife-edge measure-zero,
-    ties break to the smallest cluster id in both).  NULL ids and
-    degenerate vectors are dropped plan-side like the fold tier."""
+    Parity contract: only the ARGMAX comes from numpy; the emitted vector
+    is the same float64 the fold tier casts to and the l2 norm is hoisted
+    JVM-side afterwards, so the exact-cosine verify is bit-identical to
+    the fold tier's.  The assignment carries the kmeans_assign_blas caveat
+    (numpy half-even rounding vs the fold's HALF_UP, knife-edge; ties go
+    to the smallest cluster id in both).  NULL ids and degenerate vectors
+    are dropped plan-side like the fold tier."""
     import numpy as np
     import pandas as pd
 
@@ -442,13 +500,14 @@ def _centroid_fingerprint(cents: list[tuple[int, list[float]]]) -> str:
 
 
 def _normalize_centroids(centroids) -> list[tuple[int, list[float]]]:
-    """``centroids`` as a sorted [(cid, vec)] list from either a
-    (c_label, centroid) DataFrame or an already-collected list."""
+    """``centroids`` as a sorted, non-empty [(cid, vec)] list from either
+    a (c_label, centroid) DataFrame or an already-collected list."""
     if hasattr(centroids, "collect"):
-        return sorted(
-            (int(r["c_label"]), list(r["centroid"])) for r in centroids.collect()
-        )
-    return sorted((int(c), list(v)) for c, v in centroids)
+        centroids = [(r["c_label"], r["centroid"]) for r in centroids.collect()]
+    cents = sorted((int(c), list(v)) for c, v in centroids)
+    if not cents:
+        raise ValueError("a frozen centroid fit needs >= 1 centroid")
+    return cents
 
 
 def semantic_store_write(
@@ -489,8 +548,6 @@ def semantic_store_write(
     spark = emb.sparkSession
     cents_path = f"{path}/centroids.parquet"
     cents = _normalize_centroids(centroids) if centroids is not None else None
-    if cents is not None and not cents:
-        raise ValueError("semantic_store_write needs >= 1 centroid")
     if cents is None:
         if mode == "overwrite" or not fs_path_exists(spark, f"{path}/meta.parquet"):
             raise ValueError(
@@ -554,6 +611,34 @@ def semantic_store_read(
     return rows, cents, bucketed
 
 
+def _semantic_screen(
+    stream: DataFrame, existing, centroids, store, src: tuple, id_col: str,
+    vec_col: str, round_dp: int, threshold: float, assign_tier: str = "fold",
+) -> _Screen:
+    """One row per vector, keyed on its ``cluster_id`` under a FROZEN
+    centroid fit and verified by exact cosine >= ``threshold`` over the
+    hoisted per-vector norms.  The static side is the store's pre-assigned
+    rows (the fit comes from the store) or ``existing`` assigned under
+    ``centroids``; the stream side is assigned by ``assign_tier``."""
+    from bulkfhirloader_spark.operators.similarity import cosine_with_norms
+
+    assign_fn = _assigner(assign_tier)
+    bucketed = False
+    if _from_store((existing, centroids), store, "semantic_store", src):
+        rows, cents, bucketed = semantic_store_read(
+            stream.sparkSession, store, round_dp
+        )
+        static = rows.withColumnsRenamed({"id": "id_e", "vec": "v_e", "norm": "n_e"})
+    else:
+        cents = _normalize_centroids(centroids)
+        static = _semantic_assigned(existing, cents, id_col, vec_col, round_dp, "_e")
+    cos = cosine_with_norms(F.col("v_s"), F.col("v_e"), F.col("n_s"), F.col("n_e"))
+    return _Screen(
+        assign_fn(stream, cents, id_col, vec_col, round_dp, "_s"), static,
+        ("cluster_id",), cos >= F.lit(threshold), bucketed,
+    )
+
+
 def stream_semantic_admission(
     stream_emb: DataFrame,
     existing: DataFrame | None = None,
@@ -568,114 +653,36 @@ def stream_semantic_admission(
     """Streaming twin of dedup.semantic_dedup_pairs' admission reading:
     admit arriving embeddings that have NO semantic near-dup
     (cosine >= ``threshold``) among the EXISTING corpus members of their
-    k-means cluster — the always-on ingest gate for embedding-level
-    dedup, as a stateless stream-static anti join.
+    k-means cluster, as ``(id_col, cluster_id)`` rows (plan and cache
+    contract: _gate; one row per vector, so no count and no state).
 
-    ``centroids`` is a PRE-FIT cluster table — a ``(c_label, centroid)``
-    DataFrame (similarity.kmeans_centroids) or an already-collected
-    ``[(cid, vec), ...]`` list — baked into BOTH sides' assignment as a
-    literal expression (similarity.cosine_cluster_exprs): the stream side
-    stays a pure projection (no broadcast cross join, which a stream side
-    cannot plan; no state), and both sides share the broadcast tier's
-    exact rounding contract, so gate admissions equal the batch
-    operator's on the same snapshot (pytest-pinned).  Re-fitting
-    centroids is a batch job; the gate evaluates a FROZEN fit — restart
-    it to pick up a re-fit, the same deployment loop as the banded
-    store's snapshot semantics.
-
-    Plan shape: the static side is assigned once, then cached ALREADY
-    PARTITIONED AND SORTED on cluster_id (the stream_near_dup_admission
-    cache contract — InMemoryRelation preserves its child's partitioning,
-    so per micro-batch only the batch-sized stream side shuffles); the
-    LEFT ANTI join keys cluster equality and carries the exact-cosine
-    verify as a join predicate — per-vector norms are hoisted sibling
-    columns on both sides, never recomputed per pair.  Cross-cluster
-    near-dups are unscreened by design — the SemDeDup recall trade,
-    identical to the batch tier, so batch-vs-gate parity is exact, not
-    approximate.  k must grow with the corpus so per-cluster fan-in
-    stays bounded.
+    ``centroids`` is a PRE-FIT ``(c_label, centroid)`` DataFrame
+    (similarity.kmeans_centroids) or ``[(cid, vec), ...]`` list, baked
+    into BOTH sides' assignment as a literal expression with the broadcast
+    tier's exact rounding, so admissions equal the batch operator's on the
+    same snapshot (pytest-pinned); restart the gate to pick up a re-fit.
+    Recall: cross-cluster near-dups are unscreened by design (the SemDeDup
+    trade, as in the batch tier); k must grow with the corpus.
 
     STORED TIER: ``semantic_store=<path>`` (semantic_store_write) makes
-    the static side a scan of the pre-assigned store, and the frozen fit
-    comes from the store too, so ``existing`` and ``centroids`` must then
-    be omitted: the stream side can never evaluate a different fit than
-    the stored rows were assigned under.  The fit, like the file listing,
-    is a snapshot taken at gate construction (pytest-pinned); layout and
-    snapshot contracts are the family's (sources.stores).
+    the static side a scan of the pre-assigned store, and the fit comes
+    from the store too, so ``existing`` and ``centroids`` must be omitted:
+    the stream side never evaluates another fit than the stored rows'.
 
-    ``assign_tier="blas"`` (r13) runs the STREAM side's assignment as an
-    Arrow/dgemm mapInPandas pass instead of the k × dim literal
-    expression tree — the marginal-batch floor at large k (the r12
-    verdict's named lever; measured at k=5000 in SCALE.md r13).  The
-    exact-cosine verify stays bit-identical (the vector and its JVM-side
-    norm are the same doubles); only the argmax carries the
-    kmeans_assign_blas half-even-rounding caveat — admissions
-    pytest-pinned identical to the fold tier, which remains the oracle
-    one.  The static side keeps the fold contract by default (stored
-    rows are fold-assigned at write unless the store was written with
-    assign_tier="blas" — the large-k necessity, see
-    semantic_store_write; the derived tier assigns fold) so static
-    assignments match the batch operator exactly wherever fold is
-    feasible.
-
-    ONE LIVE GATE PER SESSION (own ledger): see _evict.
-    """
-    from bulkfhirloader_spark.operators.similarity import cosine_with_norms
-
-    assign_fn = _assigner(assign_tier)
-    bucketed_static = False
-    if semantic_store is not None:
-        if existing is not None or centroids is not None:
-            raise ValueError(
-                "semantic_store carries its own corpus AND frozen fit — "
-                "pass either the store path or (existing, centroids), "
-                "not both (a stream side evaluating a different fit than "
-                "the stored assignments would silently mis-route probes)"
-            )
-        store_rows, cents, bucketed_static = semantic_store_read(
-            stream_emb.sparkSession, semantic_store, round_dp
-        )
-        static_side = store_rows.select(
-            F.col("id").alias("id_e"),
-            F.col("vec").alias("v_e"),
-            F.col("norm").alias("n_e"),
-            "cluster_id",
-        )
-    elif existing is None or centroids is None:
-        raise ValueError(
-            "stream_semantic_admission needs either (existing, centroids) "
-            "or a `semantic_store=` path"
-        )
-    else:
-        cents = _normalize_centroids(centroids)
-        if not cents:
-            raise ValueError("stream_semantic_admission needs >= 1 centroid")
-        static_side = _semantic_assigned(
-            existing, cents, id_col, vec_col, round_dp, "_e"
-        )
-    stream_side = assign_fn(stream_emb, cents, id_col, vec_col, round_dp, "_s")
-    _evict(_live_static_sem_caches)
-    static_side = _cached(
-        _live_static_sem_caches, static_side, bucketed_static, "cluster_id"
+    ``assign_tier="blas"`` (r13) assigns the STREAM side with an
+    Arrow/dgemm pass instead of the k × dim literal tree, the
+    marginal-batch floor at large k (SCALE.md r13).  The cosine verify
+    stays bit-identical; only the argmax carries the kmeans_assign_blas
+    half-even-rounding caveat (admissions pytest-pinned equal to fold).
+    The derived static side assigns fold; stored rows keep their tier."""
+    sc = _semantic_screen(
+        stream_emb, existing, centroids, semantic_store,
+        ("stream_semantic_admission", "(existing, centroids)", True),
+        id_col, vec_col, round_dp, threshold, assign_tier,
     )
-    cond = (
-        (stream_side["cluster_id"] == static_side["cluster_id"])
-        & (stream_side["id_s"] != static_side["id_e"])
-        & (
-            cosine_with_norms(
-                F.col("v_s"), F.col("v_e"), F.col("n_s"), F.col("n_e")
-            )
-            >= F.lit(threshold)
-        )
+    return _gate(_live_static_sem_caches, sc, id_col).select(
+        F.col("id_s").alias(id_col), "cluster_id"
     )
-    return (
-        stream_side.join(static_side, cond, "left_anti")
-        .select(F.col("id_s").alias(id_col), stream_side["cluster_id"])
-    )
-
-
-# Cache-hygiene ledger for stream_semantic_admission's static side.
-_live_static_sem_caches: list = []
 
 
 def stream_sim_topk(
@@ -833,10 +840,6 @@ def stream_sim_topk(
     )
 
 
-# Cache-hygiene ledger for stream_sim_topk's static lists side.
-_live_static_ivf_caches: list = []
-
-
 def ivf_lists_bucketed_write(
     spark, index_path: str, num_buckets: int = 8
 ) -> str:
@@ -969,6 +972,42 @@ def winnow_store_read(
     return WINNOW.read(spark, path, (k, window, hash_tier))
 
 
+def _winnow_screen(
+    stream: DataFrame, existing, store, src: tuple, k: int, window: int,
+    max_fp_df: int | None, id_col: str, text_col: str, hash_tier: str,
+) -> _Screen:
+    """Winnowing fingerprint rows keyed on ``fp_hash``, no verify (a
+    shared fingerprint IS the evidence), capped at ``max_fp_df`` static
+    rows per fingerprint (one row per document: the rows are distinct
+    ``(id, fp_hash)`` pairs).  The stream side is each arrival's fingerprint
+    SET as one projection (text.winnow_fp_array, the streaming-legal form)
+    exploded OUTER, so a sub-k-token arrival keeps one NULL row that can
+    never match; ``_n_fps`` carries the set size for the admission count."""
+    from bulkfhirloader_spark.operators.text import (
+        winnow_fingerprints,
+        winnow_fp_array,
+    )
+
+    bucketed = False
+    if _from_store((existing,), store, "winnow_store", src):
+        rows, bucketed = winnow_store_read(
+            stream.sparkSession, store, k, window, hash_tier
+        )
+        static = rows.withColumnRenamed("id", "id_e")
+    else:
+        static = winnow_fingerprints(
+            existing, k=k, window=window, id_col=id_col, text_col=text_col,
+            with_positions=False, hash_tier=hash_tier,
+        ).select(F.col(id_col).alias("id_e"), "fp_hash")
+    if max_fp_df is not None and max_fp_df < 1:
+        raise ValueError("max_fp_df must be >= 1")
+    fps = winnow_fp_array(F.col(text_col), k=k, window=window, hash_tier=hash_tier)
+    stream_fps = stream.select(F.col(id_col).alias("id_s"), fps.alias("_fps")).select(
+        "id_s", F.size("_fps").alias("_n_fps"), F.explode_outer("_fps").alias("fp_hash")
+    )
+    return _Screen(stream_fps, static, ("fp_hash",), None, bucketed, max_fp_df)
+
+
 def stream_winnow_admission(
     stream_docs: DataFrame,
     existing: DataFrame | None = None,
@@ -980,27 +1019,16 @@ def stream_winnow_admission(
     hash_tier: str = "fold",
     winnow_store: str | None = None,
 ) -> DataFrame:
-    """Streaming SUBSTRING-OVERLAP admission gate — the winnowing
-    family's always-on twin and the fourth instance of the gate shape
-    (MinHash text, semantic embedding, perceptual image, now exact
-    substring): admit arriving documents that share NO winnowing
-    fingerprint with the existing corpus.  The winnowing guarantee makes
-    the screen DETERMINISTIC: any arrival sharing a token run of length
-    >= window + k - 1 with an existing document shares at least one
-    selected fingerprint and is rejected — the quote/boilerplate/
-    near-copy ingest case MinHash screens only probabilistically.
-
-    Plan shape: the stream side computes each arrival's fingerprint SET
-    as one pure projection (text.winnow_fp_array — the streaming-legal
-    expression form, no window function) and explodes to ~n_grams/window
-    rows; the static side is the (id, fp_hash) table — winnowed once at
-    gate construction (or read from a ``winnow_store``) and cached
-    partitioned on fp_hash.  The LEFT ANTI join keys fp_hash; a stream
-    doc is admitted iff ALL its fingerprint rows survive (count ==
-    n_fps, each doc's rows live in one micro-batch; run in update mode).
-    Documents with no fingerprints (< k tokens) carry no overlap
-    evidence and are ADMITTED (explode_outer keeps them as one NULL row
-    that can never match).
+    """Streaming SUBSTRING-OVERLAP admission gate: admit arriving
+    documents that share NO winnowing fingerprint with the existing corpus
+    (plan, cache and state contract: _gate; rows: _winnow_screen).  The
+    winnowing guarantee makes the screen DETERMINISTIC: any arrival sharing
+    a token run of length >= window + k - 1 with an existing document
+    shares at least one selected fingerprint and is rejected — the
+    quote/boilerplate/near-copy ingest case MinHash screens only
+    probabilistically.  A doc is admitted iff all its fingerprint rows
+    survive; documents with no fingerprints (< k tokens) carry no overlap
+    evidence and are admitted.
 
     This gate is the ``min_shared=1`` (strictest) point of
     winnow_candidates' dial BY CONSTRUCTION: a >= 2 threshold needs a
@@ -1015,94 +1043,36 @@ def stream_winnow_admission(
     arrival whose ONLY shared fingerprints are corpus-boilerplate is
     admitted (weaker screening on boilerplate, bounded per-row join
     fan-out).  ``winnow_store=<path>`` (winnow_store_write) replaces the
-    construction-time winnowing pass with a store scan (family contract:
-    sources.stores).  ONE LIVE GATE PER SESSION (own ledger): see
-    _evict."""
-    from bulkfhirloader_spark.operators.text import (
-        winnow_fingerprints,
-        winnow_fp_array,
+    construction-time winnowing pass with a store scan."""
+    sc = _winnow_screen(
+        stream_docs, existing, winnow_store,
+        ("stream_winnow_admission", "existing docs", True),
+        k, window, max_fp_df, id_col, text_col, hash_tier,
     )
-
-    bucketed_static = False
-    if winnow_store is not None:
-        if existing is not None:
-            raise ValueError(
-                "winnow_store carries the fingerprinted static corpus — "
-                "pass either the store path or existing, not both"
-            )
-        store_rows, bucketed_static = winnow_store_read(
-            stream_docs.sparkSession, winnow_store, k, window, hash_tier
-        )
-        static_fps = store_rows.select(F.col("id").alias("id_e"), "fp_hash")
-    elif existing is None:
-        raise ValueError(
-            "stream_winnow_admission needs either existing docs or a "
-            "`winnow_store=` path"
-        )
-    else:
-        static_fps = winnow_fingerprints(
-            existing, k=k, window=window, id_col=id_col, text_col=text_col,
-            with_positions=False, hash_tier=hash_tier,
-        ).select(F.col(id_col).alias("id_e"), "fp_hash")
-    if max_fp_df is not None:
-        if max_fp_df < 1:
-            raise ValueError("max_fp_df must be >= 1")
-        rare = (
-            static_fps.groupBy("fp_hash")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .where(F.col("_df") <= max_fp_df)
-            .select("fp_hash")
-        )
-        static_fps = static_fps.join(rare, "fp_hash")
-    _evict(_live_static_winnow_caches)
-    static_fps = _cached(
-        _live_static_winnow_caches, static_fps,
-        bucketed_static and max_fp_df is None, "fp_hash",
-    )
-    stream_fps = stream_docs.select(
-        F.col(id_col).alias("id_s"),
-        winnow_fp_array(
-            F.col(text_col), k=k, window=window, hash_tier=hash_tier
-        ).alias("_fps"),
-    ).select(
-        "id_s",
-        F.size("_fps").alias("_n_fps"),
-        # explode_OUTER: a sub-k-token doc has no fingerprints and must
-        # still reach the admission count (its NULL fp can never match)
-        F.explode_outer("_fps").alias("fp_hash"),
-    )
-    cond = (stream_fps["fp_hash"] == static_fps["fp_hash"]) & (
-        F.col("id_s") != F.col("id_e")
-    )
-    surviving = stream_fps.join(static_fps, cond, "left_anti")
-    return (
-        surviving.groupBy(F.col("id_s").alias(id_col))
-        .agg(
-            F.count(F.lit(1)).alias("_n_clean"),
-            F.max("_n_fps").alias("_n_fps"),
-        )
-        .where(F.col("_n_clean") == F.greatest(F.col("_n_fps"), F.lit(1)))
-        .select(id_col)
-    )
+    all_rows = F.greatest(F.max("_n_fps"), F.lit(1))
+    return _gate(_live_static_winnow_caches, sc, id_col, all_rows)
 
 
-# Cache-hygiene ledger for stream_winnow_admission's static side.
-_live_static_winnow_caches: list = []
-
-
-def _band_key_array(hi, lo):
-    """The 64-bit perceptual hash's four 16-bit slices as ONE composite
-    key each: ``band_key = band_idx * 65536 + band_val`` — a bijection of
-    the (band_idx, band_val) pair into a single long, so the store can
-    bucket on one column and the gate join on one key (pigeonhole
-    semantics identical: equal key ⟺ same slice index AND same slice
-    value)."""
-    mask = F.lit(0xFFFF)
-    return F.array(
+def _image_bands(hashes: DataFrame, sfx: str) -> DataFrame:
+    """``(id{sfx}, hi{sfx}, lo{sfx}, band_key)``: one row per 16-bit slice
+    of each non-NULL 64-bit perceptual hash — the image store's rows and
+    both sides of the image gate.  ``band_key = band_idx * 65536 +
+    band_val`` is a bijection of the (slice index, slice value) pair into
+    one long, so the store buckets on one column and the gate joins on one
+    key (pigeonhole semantics identical: equal key ⟺ same slice index AND
+    same slice value).  NULL hashes (corrupt payloads) are dropped."""
+    hi, lo, mask = F.col("hash_hi"), F.col("hash_lo"), F.lit(0xFFFF)
+    keys = F.array(
         lo.bitwiseAND(mask),
         F.shiftrightunsigned(lo, 16).bitwiseAND(mask) + F.lit(65536),
         hi.bitwiseAND(mask) + F.lit(131072),
         F.shiftrightunsigned(hi, 16).bitwiseAND(mask) + F.lit(196608),
+    )
+    return hashes.where(hi.isNotNull() & lo.isNotNull()).select(
+        F.col("media_id").alias(f"id{sfx}"),
+        hi.alias(f"hi{sfx}"),
+        lo.alias(f"lo{sfx}"),
+        F.explode(keys).alias("band_key"),
     )
 
 
@@ -1122,15 +1092,8 @@ def image_hash_store_write(
     lifecycle and refusals: the family contract in sources.stores."""
     if bands != 4:
         raise ValueError("64-bit aHash bands: only the 4 x 16-bit split is wired")
-    banded = hashes.where(
-        F.col("hash_hi").isNotNull() & F.col("hash_lo").isNotNull()
-    ).select(
-        F.col("media_id").alias("id"),
-        F.explode(_band_key_array(F.col("hash_hi"), F.col("hash_lo"))).alias(
-            "band_key"
-        ),
-        "hash_hi",
-        "hash_lo",
+    banded = _image_bands(hashes, "").select(
+        "id", "band_key", F.col("hi").alias("hash_hi"), F.col("lo").alias("hash_lo")
     )
     with IMAGE_HASH.writing(
         hashes.sparkSession, path, mode, (bands,), (num_buckets,)
@@ -1146,62 +1109,15 @@ def image_hash_store_read(spark, path: str, bands: int = 4):
     return IMAGE_HASH.read(spark, path, (bands,))
 
 
-def stream_image_admission(
-    stream_media: DataFrame,
-    existing_hashes: DataFrame | None = None,
-    max_hamming: int = 3,
-    bands: int = 4,
-    max_bucket_size: int | None = None,
-    hash_store: str | None = None,
-) -> DataFrame:
-    """Streaming PERCEPTUAL admission gate — the image-modality twin of
-    stream_near_dup_admission (r13): admit arriving media whose aHash is
-    more than ``max_hamming`` bits from EVERY existing image's hash; a
-    visually-near-duplicate re-render is rejected at ingest.
-
-    Plan shape (the family's shape, third instance): the stream side
-    computes aHash in one Arrow pass (multimodal.image_ahash — legal on
-    a stream, stateless) and explodes to one row per 16-bit band (pure
-    projection); the static side is the already-hashed corpus table
-    (multimodal.image_ahash output — ~24 B/row regardless of image
-    size), banded the same way and cached ALREADY PARTITIONED on the
-    band keys (the gate cache contract, own ledger).  The LEFT ANTI join
-    keys (band_idx, band_val) — by pigeonhole any pair within
-    ``max_hamming <= bands - 1`` bits agrees on >= 1 band, so banding
-    proposes a superset — and carries the exact popcount verify as a
-    join predicate.  A band row survives iff it produced no verified
-    match; media are admitted iff ALL ``bands`` of their rows survive
-    (count == bands, each media's rows live in one micro-batch; run in
-    update mode).  DETERMINISTIC recall (pigeonhole, enforced), unlike
-    the MinHash gate's probabilistic banding.  Corrupt payloads hash to
-    NULL and are dropped — an undecodable blob is quarantined, not
-    admitted (compose payload_stats quarantine upstream if corrupt rows
-    must be routed).  Stateless per batch except the per-media band
-    count.
-
-    HOT-BAND SKEW (r14, r13 advice): perceptual-hash bands of trivial
-    content (blank/flat images → 0x0000/0xFFFF bands; near-silent audio
-    upstream of the shared join shape) pile into one (band_idx,
-    band_val) bucket, so every stream row touching that band pays
-    O(bucket) comparisons per micro-batch.  ``max_bucket_size`` EXCLUDES
-    static band rows in buckets larger than the cap (the shared
-    _cap_band_buckets contract; the window count rides the cache's
-    (band_idx, band_val) partitioning).  GATE-SPECIFIC TRADE, read
-    before setting it: a capped static row cannot CHALLENGE stream rows
-    through that band, so a stream near-dup whose every shared band is
-    capped is silently ADMITTED — weaker screening, not just lost pairs.
-    The right fix for hot-band content is exact dedup upstream of the
-    static table (image_exact_dedup — byte/pixel-identical content
-    collapses for free, leaving buckets of genuinely-distinct
-    near-threshold hashes that the cap then bounds).  Default None keeps
-    the exact pigeonhole screen.
-
-    STORED TIER: ``hash_store=<path>`` (image_hash_store_write) makes the
-    static side a scan of the pre-banded store instead of a per-session
-    re-band + cache fill (``existing_hashes`` must then be omitted;
-    family contract: sources.stores).  It joins on the composite
-    ``band_key = band_idx * 65536 + band_val``, a bijection of the pair,
-    so pigeonhole semantics are identical on one bucketable column."""
+def _image_screen(
+    stream_media: DataFrame, existing_hashes, store, max_hamming: int,
+    bands: int, max_bucket_size: int | None,
+) -> _Screen:
+    """aHash band rows (_image_bands) keyed on ``band_key`` and verified
+    by exact popcount Hamming distance <= ``max_hamming``; by pigeonhole
+    any pair within ``max_hamming <= bands - 1`` bits agrees on >= 1 band,
+    so the keys propose a superset.  The stream side hashes in one Arrow
+    pass (multimodal.image_ahash, stateless)."""
     from bulkfhirloader_spark.operators.multimodal import image_ahash
 
     if max_hamming > bands - 1:
@@ -1212,90 +1128,68 @@ def stream_image_admission(
         )
     if bands != 4:
         raise ValueError("64-bit aHash bands: only the 4 x 16-bit split is wired")
-
-    mask = F.lit(0xFFFF)
-
-    def banded(hashes: DataFrame, sfx: str, by_key: bool) -> DataFrame:
-        h = hashes.where(
-            F.col("hash_hi").isNotNull() & F.col("hash_lo").isNotNull()
-        )
-        if by_key:
-            return h.select(
-                F.col("media_id").alias(f"id{sfx}"),
-                F.col("hash_hi").alias(f"hi{sfx}"),
-                F.col("hash_lo").alias(f"lo{sfx}"),
-                F.explode(
-                    _band_key_array(F.col("hash_hi"), F.col("hash_lo"))
-                ).alias("band_key"),
-            )
-        arr = F.array(
-            F.col("hash_lo").bitwiseAND(mask),
-            F.shiftrightunsigned(F.col("hash_lo"), 16).bitwiseAND(mask),
-            F.col("hash_hi").bitwiseAND(mask),
-            F.shiftrightunsigned(F.col("hash_hi"), 16).bitwiseAND(mask),
-        )
-        return h.select(
-            F.col("media_id").alias(f"id{sfx}"),
-            F.col("hash_hi").alias(f"hi{sfx}"),
-            F.col("hash_lo").alias(f"lo{sfx}"),
-            F.posexplode(arr).alias("band_idx", "band_val"),
-        )
-
-    bucketed_static = False
-    if hash_store is not None:
-        if existing_hashes is not None:
-            raise ValueError(
-                "hash_store carries the banded static corpus — pass either "
-                "the store path or existing_hashes, not both"
-            )
-        store_rows, bucketed_static = image_hash_store_read(
-            stream_media.sparkSession, hash_store, bands
-        )
-        static_banded = store_rows.select(
-            F.col("id").alias("id_e"),
-            F.col("hash_hi").alias("hi_e"),
-            F.col("hash_lo").alias("lo_e"),
-            "band_key",
-        )
-        keys = ("band_key",)
-    elif existing_hashes is None:
-        raise ValueError(
-            "stream_image_admission needs either existing_hashes or a "
-            "`hash_store=` path"
+    if max_bucket_size is not None and max_bucket_size < 2:
+        raise ValueError("max_bucket_size must be >= 2 (a pair needs 2)")
+    bucketed = False
+    src = ("stream_image_admission", "existing_hashes", True)
+    if _from_store((existing_hashes,), store, "hash_store", src):
+        rows, bucketed = image_hash_store_read(stream_media.sparkSession, store, bands)
+        static = rows.withColumnsRenamed(
+            {"id": "id_e", "hash_hi": "hi_e", "hash_lo": "lo_e"}
         )
     else:
-        static_banded = banded(existing_hashes, "_e", by_key=False)
-        keys = ("band_idx", "band_val")
-    stream_banded = banded(image_ahash(stream_media), "_s", by_key=len(keys) == 1)
-    if max_bucket_size is not None:
-        from bulkfhirloader_spark.operators.dedup import _cap_band_buckets
-
-        static_banded = _cap_band_buckets(static_banded, max_bucket_size, keys=keys)
-    _evict(_live_static_img_caches)
-    static_banded = _cached(
-        _live_static_img_caches, static_banded,
-        bucketed_static and max_bucket_size is None, *keys,
+        static = _image_bands(existing_hashes, "_e")
+    hamming = F.bit_count(F.col("hi_s").bitwiseXOR(F.col("hi_e"))) + F.bit_count(
+        F.col("lo_s").bitwiseXOR(F.col("lo_e"))
     )
-    hamming = F.bit_count(
-        F.col("hi_s").bitwiseXOR(F.col("hi_e"))
-    ) + F.bit_count(F.col("lo_s").bitwiseXOR(F.col("lo_e")))
-    cond = (
-        (F.col("id_s") != F.col("id_e"))
-        & (hamming <= F.lit(max_hamming))
-    )
-    for c in keys:
-        cond = (stream_banded[c] == static_banded[c]) & cond
-    surviving = stream_banded.join(static_banded, cond, "left_anti")
-    return (
-        surviving.groupBy(F.col("id_s").alias("media_id"))
-        .agg(F.count(F.lit(1)).alias("_n_clean_bands"))
-        .where(F.col("_n_clean_bands") == bands)
-        .select("media_id")
+    return _Screen(
+        _image_bands(image_ahash(stream_media), "_s"), static, ("band_key",),
+        hamming <= F.lit(max_hamming), bucketed, max_bucket_size,
     )
 
 
-# Cache-hygiene ledger for stream_image_admission's static side.
-_live_static_img_caches: list = []
+def stream_image_admission(
+    stream_media: DataFrame,
+    existing_hashes: DataFrame | None = None,
+    max_hamming: int = 3,
+    bands: int = 4,
+    max_bucket_size: int | None = None,
+    hash_store: str | None = None,
+) -> DataFrame:
+    """Streaming PERCEPTUAL admission gate (r13): admit arriving media
+    whose aHash is more than ``max_hamming`` bits from EVERY existing
+    image's hash, so a visually-near-duplicate re-render is rejected at
+    ingest (plan, cache and state contract: _gate; rows: _image_screen).
+    The static side is the already-hashed corpus table
+    (multimodal.image_ahash output, ~24 B/row regardless of image size).
+    Media are admitted iff all ``bands`` of their rows survive.
+    DETERMINISTIC recall (pigeonhole, enforced), unlike the MinHash gate's
+    probabilistic banding.  Corrupt payloads hash to NULL and are dropped
+    — an undecodable blob is quarantined, not admitted (compose
+    payload_stats quarantine upstream if corrupt rows must be routed).
+
+    HOT-BAND SKEW (r14): perceptual-hash bands of trivial content
+    (blank/flat images → 0x0000/0xFFFF bands) pile into one bucket, so
+    every stream row touching that band pays O(bucket) comparisons per
+    micro-batch.  ``max_bucket_size`` EXCLUDES static band rows in buckets
+    larger than the cap.  GATE-SPECIFIC TRADE, read before setting it: a
+    capped static row cannot CHALLENGE stream rows through that band, so
+    a stream near-dup whose every shared band is capped is silently
+    ADMITTED — weaker screening, not just lost pairs.  The right fix for
+    hot-band content is exact dedup upstream of the static table
+    (image_exact_dedup), leaving buckets of genuinely-distinct
+    near-threshold hashes that the cap then bounds.  Default None keeps
+    the exact pigeonhole screen.
+
+    STORED TIER: ``hash_store=<path>`` (image_hash_store_write) makes the
+    static side a scan of the pre-banded store instead of a per-session
+    re-band + cache fill (``existing_hashes`` must then be omitted).  Both
+    tiers join on the same ``band_key``."""
+    sc = _image_screen(
+        stream_media, existing_hashes, hash_store, max_hamming, bands,
+        max_bucket_size,
+    )
+    return _gate(_live_static_img_caches, sc, "media_id", F.lit(bands))
 
 
 def stream_admission_pipeline(
@@ -1319,209 +1213,63 @@ def stream_admission_pipeline(
     winnow_store: str | None = None,
     semantic_store: str | None = None,
 ) -> DataFrame:
-    """COMPOSED streaming admission pipeline (r15, r14 verdict #3 — the
-    deployment shape the four standalone gates exist FOR, mirroring the
-    batch side's cur_full_pipeline): every arriving document (carrying
-    text AND embedding) is screened against the existing corpus by the
-    exact/near-text gate (MinHash bands propose, exact n-gram Jaccard
-    verifies), then the winnowing substring gate (deterministic shared-
-    fingerprint screen), then the semantic gate (same-cluster cosine
-    under a FROZEN k-means fit) — in that order, and each doc comes back
-    labeled ``(id_col, stage)`` with the FIRST stage that rejected it
-    ('exact' | 'winnow' | 'semantic') or 'admitted'.
+    """COMPOSED streaming admission pipeline (r15), the deployment shape
+    the standalone gates exist for: each arriving document (text AND
+    embedding) is screened against the existing corpus by the MinHash,
+    winnow and semantic screens, in that order, and comes back labeled
+    ``(id_col, stage)`` with the FIRST stage that rejected it ('exact' |
+    'winnow' | 'semantic') or 'admitted'.
 
-    Composition shape, chosen for streaming legality: a doc rejected at
-    stage i is by definition rejected by the three-gate CONJUNCTION, so
-    instead of literally chaining three anti joins through three
-    aggregations (a streaming query cannot plan chained aggregations —
-    the winnow gate's own min_shared note), the pipeline runs the three
-    screens as LEFT SEMI probes of the SAME stream (each a stateless
-    stream-static join — a hit row means "this stage would reject"),
-    unions the hit streams with a baseline row per arrival, and takes
-    ONE min-aggregate per doc: min stage rank = first failing stage.
-    Admitted docs are exactly the intersection of the three standalone
-    gates' admissions (pytest-pinned per stage), and the label order is
-    the sequential pipeline's.  Rejection-side nuance stated plainly:
-    the MinHash stage rejects iff ANY band proposes a pair the exact
-    Jaccard verifies — identical to the standalone gate's all-bands-
-    survive admission, just read from the complement side, which is
-    what lets the semi-join form drop the per-band count aggregate.
+    A streaming query cannot chain three anti joins through three
+    aggregations, so the screens run as LEFT SEMI probes of the SAME
+    stream (a hit means "this stage would reject"), unioned with a
+    baseline row per arrival under ONE min-aggregate per doc: min stage
+    rank = first failing stage.  Admitted docs are exactly the
+    intersection of the three standalone gates' admissions
+    (pytest-pinned per stage): a stage rejects iff ANY of the doc's rows
+    verifies a match, the gates' all-rows-survive rule read from the
+    complement side.
 
-    Static sides are built from ``existing_docs`` (text screens) and
-    ``existing_emb`` (semantic screen) exactly as the standalone gates
-    build their derived tiers, each cached pre-partitioned on its join
-    key.  ``centroids`` is the frozen fit (DataFrame or [(cid, vec)]
-    list), evaluated as a literal expression on both sides — the
-    stream-legal form.  Stage thresholds are the gates' own knobs.
-    State, stated honestly (r15 review): per doc it is O(1) — one
-    min-rank, and each doc's probe rows live in one micro-batch — but a
-    plain streaming aggregation never EVICTS, so TOTAL state grows with
-    distinct doc ids seen (the same retention the standalone count-
-    aggregate gates carry; the semantic gate alone is join-only/
-    stateless).  An always-on deployment bounds it operationally:
-    restart the query on the store-append schedule the snapshot
-    semantics already impose (state rebuilds empty; availableNow drains
-    between restarts), or key the aggregate by (id, ingest-time window)
-    with a watermark upstream if arrivals carry event time.  Run in
-    update mode.  ONE LIVE PIPELINE PER SESSION (own ledger, see _evict:
-    a new one evicts the previous pipeline's three static caches, not the
-    standalone gates').
-
-    STORE-BACKED TIER: each stage independently accepts the store its
-    standalone gate reads — ``banded_store=`` (replaces
-    ``existing_docs``'s text re-derivation for the exact stage),
-    ``winnow_store=`` and ``semantic_store=`` (which carries its own
-    frozen fit, so ``centroids``/``existing_emb`` must then be omitted).
-    Stages mix freely (e.g. stored text screens + derived semantic while
-    a re-fit is pending)."""
-    from bulkfhirloader_spark.operators.dedup import require_band_geometry
-    from bulkfhirloader_spark.operators.similarity import cosine_with_norms
-    from bulkfhirloader_spark.operators.text import (
-        winnow_fingerprints,
-        winnow_fp_array,
+    Static sides come from ``existing_docs`` (text screens) and
+    ``existing_emb`` + ``centroids`` (semantic), derived as the gates
+    derive theirs, or stage by stage from the store each gate reads
+    (``banded_store=``, ``winnow_store=``, ``semantic_store=``; the last
+    carries its own fit, so ``centroids``/``existing_emb`` must then be
+    omitted).  Stages mix freely.  Cache contract: _gate, with its own
+    ledger (a new pipeline evicts the previous pipeline's three static
+    caches, not the gates').  State is one min-rank per doc, but a plain
+    streaming aggregation never evicts, so it grows with distinct ids
+    seen: restart on the store-append schedule, or key the aggregate by
+    (id, ingest-time window) with an upstream watermark.  Run in update
+    mode."""
+    screens = (
+        _minhash_screen(
+            stream_docs, existing_docs, banded_store,
+            ("the exact stage", "existing_docs", False), id_col, text_col,
+            num_hashes, bands, shingle_words, jaccard_threshold,
+        ),
+        _winnow_screen(
+            stream_docs, existing_docs, winnow_store,
+            ("the winnow stage", "existing_docs", False), k, window, None,
+            id_col, text_col, hash_tier,
+        ),
+        _semantic_screen(
+            stream_docs, existing_emb, centroids, semantic_store,
+            ("the semantic stage", "(existing_emb, centroids)", True),
+            id_col, vec_col, round_dp, cosine_threshold,
+        ),
     )
-
-    require_band_geometry(num_hashes, bands)
-    spark = stream_docs.sparkSession
-
-    def banded(docs: DataFrame, sfx: str) -> DataFrame:
-        return _minhash_bands(
-            docs, id_col, text_col, num_hashes, bands, shingle_words, sfx
-        ).select(f"id{sfx}", "band_hash", f"sh{sfx}")
-
-    bands_bucketed = fps_bucketed = sem_bucketed = False
-    if banded_store is not None:
-        store_rows, bands_bucketed = banded_signature_store_read(
-            spark, banded_store, num_hashes, bands, shingle_words
-        )
-        static_bands = store_rows.select(
-            F.col("id").alias("id_e"),
-            "band_hash",
-            F.col("shingles").alias("sh_e"),
-        )
-    elif existing_docs is not None:
-        static_bands = banded(existing_docs, "_e")
-    else:
-        raise ValueError(
-            "the exact stage needs existing_docs or a banded_store= path"
-        )
-    if winnow_store is not None:
-        store_rows, fps_bucketed = winnow_store_read(
-            spark, winnow_store, k, window, hash_tier
-        )
-        static_fps = store_rows.select(F.col("id").alias("id_e"), "fp_hash")
-    elif existing_docs is not None:
-        static_fps = winnow_fingerprints(
-            existing_docs, k=k, window=window, id_col=id_col,
-            text_col=text_col, with_positions=False, hash_tier=hash_tier,
-        ).select(F.col(id_col).alias("id_e"), "fp_hash")
-    else:
-        raise ValueError(
-            "the winnow stage needs existing_docs or a winnow_store= path"
-        )
-    if semantic_store is not None:
-        if existing_emb is not None or centroids is not None:
-            raise ValueError(
-                "semantic_store carries its own corpus AND frozen fit — "
-                "pass either the store path or (existing_emb, centroids), "
-                "not both (the stream side must evaluate the fit the "
-                "stored assignments were made under)"
-            )
-        store_rows, cents, sem_bucketed = semantic_store_read(
-            spark, semantic_store, round_dp
-        )
-        static_sem = store_rows.select(
-            F.col("id").alias("id_e"),
-            F.col("vec").alias("v_e"),
-            F.col("norm").alias("n_e"),
-            "cluster_id",
-        )
-    elif existing_emb is None or centroids is None:
-        raise ValueError(
-            "the semantic stage needs (existing_emb, centroids) or a "
-            "semantic_store= path"
-        )
-    else:
-        cents = _normalize_centroids(centroids)
-        if not cents:
-            raise ValueError("stream_admission_pipeline needs >= 1 centroid")
-        static_sem = _semantic_assigned(
-            existing_emb, cents, id_col, vec_col, round_dp, "_e"
-        )
     ledger = _live_static_pipeline_caches
     _evict(ledger)
-    static_bands = _cached(ledger, static_bands, bands_bucketed, "band_hash")
-    static_fps = _cached(ledger, static_fps, fps_bucketed, "fp_hash")
-    static_sem = _cached(ledger, static_sem, sem_bucketed, "cluster_id")
-
-    stream_bands = banded(stream_docs, "_s")
-    inter = F.size(F.array_intersect(F.col("sh_s"), F.col("sh_e")))
-    union = F.size("sh_s") + F.size("sh_e") - inter
-    verified = (
-        inter.cast("double") / union.cast("double")
-    ) >= F.lit(jaccard_threshold)
-    exact_hits = stream_bands.join(
-        static_bands,
-        (stream_bands["band_hash"] == static_bands["band_hash"])
-        & (F.col("id_s") != F.col("id_e"))
-        & verified,
-        "left_semi",
-    ).select(F.col("id_s").alias(id_col), F.lit(0).alias("_stage_rank"))
-
-    stream_fps = stream_docs.select(
-        F.col(id_col).alias("id_s"),
-        # plain explode (not outer): a sub-k-token doc has no fingerprints
-        # and can produce no winnow hit — its baseline row still reaches
-        # the min-aggregate, so it is admitted unless another stage hits
-        F.explode(
-            winnow_fp_array(
-                F.col(text_col), k=k, window=window, hash_tier=hash_tier
-            )
-        ).alias("fp_hash"),
+    ranked = stream_docs.select(F.col(id_col), F.lit(len(screens)).alias("_rank"))
+    for rank, sc in enumerate(screens):
+        hits = _probe(ledger, sc, "left_semi")
+        ranked = ranked.unionByName(
+            hits.select(F.col("id_s").alias(id_col), F.lit(rank).alias("_rank"))
+        )
+    stage = F.array(*[F.lit(s) for s in ("exact", "winnow", "semantic", "admitted")])
+    return (
+        ranked.groupBy(id_col)
+        .agg(F.min("_rank").alias("_r"))
+        .select(F.col(id_col), stage[F.col("_r")].alias("stage"))
     )
-    winnow_hits = stream_fps.join(
-        static_fps,
-        (stream_fps["fp_hash"] == static_fps["fp_hash"])
-        & (F.col("id_s") != F.col("id_e")),
-        "left_semi",
-    ).select(F.col("id_s").alias(id_col), F.lit(1).alias("_stage_rank"))
-
-    stream_sem = _semantic_assigned(
-        stream_docs.select(F.col(id_col), F.col(vec_col)),
-        cents, id_col, vec_col, round_dp, "_s",
-    )
-    sem_hits = stream_sem.join(
-        static_sem,
-        (stream_sem["cluster_id"] == static_sem["cluster_id"])
-        & (F.col("id_s") != F.col("id_e"))
-        & (
-            cosine_with_norms(
-                F.col("v_s"), F.col("v_e"), F.col("n_s"), F.col("n_e")
-            )
-            >= F.lit(cosine_threshold)
-        ),
-        "left_semi",
-    ).select(F.col("id_s").alias(id_col), F.lit(2).alias("_stage_rank"))
-
-    baseline = stream_docs.select(
-        F.col(id_col), F.lit(3).alias("_stage_rank")
-    )
-    labeled = (
-        baseline.unionByName(exact_hits)
-        .unionByName(winnow_hits)
-        .unionByName(sem_hits)
-        .groupBy(id_col)
-        .agg(F.min("_stage_rank").alias("_r"))
-    )
-    return labeled.select(
-        F.col(id_col),
-        F.when(F.col("_r") == 0, F.lit("exact"))
-        .when(F.col("_r") == 1, F.lit("winnow"))
-        .when(F.col("_r") == 2, F.lit("semantic"))
-        .otherwise(F.lit("admitted"))
-        .alias("stage"),
-    )
-
-
-# Cache-hygiene ledger for stream_admission_pipeline's three static sides.
-_live_static_pipeline_caches: list = []

@@ -1311,6 +1311,37 @@ def test_stream_winnow_admission_from_stored(spark, tmp_path):
         winnow_store_write(existing, store, num_buckets=4)
 
 
+def test_stream_winnow_admission_fp_df_cap(spark):
+    """The winnow gate's ``max_fp_df`` trade, on a batch stream side: an
+    arrival whose ONLY shared fingerprints are corpus boilerplate (every
+    one in three existing docs) is admitted with the cap at 2 and rejected
+    without it; an arrival sharing a rare (df 1) run is rejected either
+    way.  Both shared runs are 10 tokens, past the window + k - 1 = 6
+    guarantee, so the uncapped rejections are deterministic."""
+    from bulkfhirloader_spark.streaming.joins import stream_winnow_admission
+
+    boiler = " ".join(f"bp{i}" for i in range(10))
+    rare = " ".join(f"r{i}" for i in range(10))
+    existing = spark.createDataFrame(
+        [(1, boiler), (2, boiler), (3, boiler), (4, rare)],
+        "doc_id long, text string",
+    )
+    arrivals = spark.createDataFrame(
+        [
+            (101, boiler + " n1 n2 n3 n4 n5 n6"),  # boilerplate only
+            (102, "m1 m2 " + rare),  # the rare run of doc 4
+        ],
+        "doc_id long, text string",
+    )
+
+    def admitted(**cap):
+        gate = stream_winnow_admission(arrivals, existing=existing, **cap)
+        return sorted(r.doc_id for r in gate.collect())
+
+    assert admitted() == []
+    assert admitted(max_fp_df=2) == [101]
+
+
 def test_stream_image_admission_rejects_perceptual_twins(spark, tmp_path):
     """r13 image gate: a perturbed single-pixel twin arriving in a later
     micro-batch is rejected against the static hash table; a novel image
@@ -1430,6 +1461,62 @@ def test_stream_image_admission_from_stored(spark, tmp_path):
         image_hash_store_read(
             spark, str(tmp_path / "store_img_store_plain"), bands=8
         )
+
+
+def test_stream_image_admission_bucket_cap(spark, tmp_path):
+    """The image gate's ``max_bucket_size`` trade, on a batch stream side,
+    derived and plain-stored tiers alike: arrival A's near-twin shares
+    A's three other bands only through buckets padded past the cap, so
+    with the cap A has no challenger and is ADMITTED (without it, A is
+    rejected); arrival B's near-twin shares under-cap bands, so B is
+    rejected either way."""
+    from bulkfhirloader_spark.operators import multimodal as mm
+    from bulkfhirloader_spark.streaming.joins import (
+        image_hash_store_write,
+        stream_image_admission,
+    )
+
+    arrivals = mm.synthetic_ppm_media(
+        spark.createDataFrame([(20,), (61,)], "media_id long")
+    )
+    h = {
+        r.media_id: (r.hash_hi, r.hash_lo)
+        for r in mm.image_ahash(arrivals).collect()
+    }
+    (a_hi, a_lo), (b_hi, b_lo) = h[20], h[61]
+    full = 0xFFFFFFFF
+    rows = [
+        # near-twins: one bit flipped in band 0 (the low 16 bits of lo)
+        (1, a_hi, a_lo ^ 1),
+        (2, b_hi, b_lo ^ 1),
+    ]
+    # pad A's bands 1-3 (lo high half, hi low half, hi high half) with two
+    # hashes each that keep that band and invert the other 48 bits
+    for i, (keep_hi, keep_lo) in enumerate(
+        [(0, 0xFFFF0000), (0xFFFF, 0), (0xFFFF0000, 0)]
+    ):
+        pad = ((a_hi & keep_hi) | (~a_hi & full & ~keep_hi),
+               (a_lo & keep_lo) | (~a_lo & full & ~keep_lo))
+        rows += [(10 + 2 * i, *pad), (11 + 2 * i, *pad)]
+    static = spark.createDataFrame(rows, "media_id long, hash_hi long, hash_lo long")
+
+    def bands(hi, lo):
+        return {lo & 0xFFFF, lo >> 16 | 1 << 16, hi & 0xFFFF | 2 << 16,
+                hi >> 16 | 3 << 16}
+
+    # no other static row sits in any of B's buckets
+    others = set().union(*(bands(hi, lo) for i, hi, lo in rows if i != 2))
+    assert not bands(b_hi, b_lo) & others
+    store = str(tmp_path / "img_cap_store")
+    image_hash_store_write(static, store)
+
+    def admitted(**kw):
+        gate = stream_image_admission(arrivals, max_hamming=3, **kw)
+        return sorted(r.media_id for r in gate.collect())
+
+    assert admitted(existing_hashes=static) == []
+    for tier in ({"existing_hashes": static}, {"hash_store": store}):
+        assert admitted(max_bucket_size=2, **tier) == [20], tier
 
 
 def test_stream_admission_pipeline_matches_standalone_gates(spark, tmp_path):
