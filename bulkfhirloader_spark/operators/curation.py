@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from bulkfhirloader_spark import reuse
 from bulkfhirloader_spark.functions.binding import let
 
 from bulkfhirloader_spark.operators.text import (
@@ -415,10 +416,11 @@ def pack_token_shards(
     r12 span pass measurably regressed the composed bench (warm 1.9 s →
     3.4 s) until the cache made the passes share one execution."""
     n_tok = token_count_bpe_ish(F.col(text_col)).cast("long")
-    while _live_pack_caches:
-        _live_pack_caches.pop().unpersist()
-    projected = docs.select(F.col(id_col), n_tok.alias("n_tokens")).persist()
-    _live_pack_caches.append(projected)
+    reuse.evict(_live_pack_caches)
+    projected = reuse.keep(
+        _live_pack_caches,
+        docs.select(F.col(id_col), n_tok.alias("n_tokens")).persist(),
+    )
     row = projected.agg(
         F.min(F.col(id_col).cast("long")).alias("_lo"),
         F.max(F.col(id_col).cast("long")).alias("_hi"),
@@ -679,15 +681,14 @@ def deterministic_shuffle(
     key = F.md5(F.concat_ws("/", F.col(id_col).cast("string"), F.lit(seed)))
     keyed = docs.select(F.col(id_col), key.alias("_k"))
     n_ranges = max(int(spark.conf.get("spark.sql.shuffle.partitions", "200")), 1)
-    while _live_shuffle_caches:
-        _live_shuffle_caches.pop().unpersist()
-    ranged = (
+    reuse.evict(_live_shuffle_caches)
+    ranged = reuse.keep(
+        _live_shuffle_caches,
         keyed.repartitionByRange(n_ranges, F.col("_k").asc(), F.col(id_col).asc())
         .sortWithinPartitions(F.col("_k").asc(), F.col(id_col).asc())
         .withColumn("_rid", F.spark_partition_id())
-        .persist()  # pin range placement: offsets job + final job must agree
+        .persist(),  # pin range placement: offsets job + final job must agree
     )
-    _live_shuffle_caches.append(ranged)
     counts = sorted(
         (r["_rid"], r["n"])
         for r in ranged.groupBy("_rid").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -710,8 +711,8 @@ def deterministic_shuffle(
 
 
 # Cache-hygiene ledger for deterministic_shuffle's pinned range placement
-# (the one-live-entry pattern of streaming.joins._evict): the previous
-# invocation's persist is released when a new one begins.
+# (reuse.evict / reuse.keep, one live entry): the previous invocation's
+# persist is released when a new one begins.
 _live_shuffle_caches: list = []
 
 # Same pattern for pack_token_shards' (id, n_tokens) projection pin.

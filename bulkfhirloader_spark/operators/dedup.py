@@ -15,16 +15,14 @@ Scale design (the point at 100 TB):
 
 from __future__ import annotations
 
-import threading
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from bulkfhirloader_spark import reuse
 from bulkfhirloader_spark.fsutil import fs_dir_fingerprint
 from bulkfhirloader_spark.functions.binding import let
 from bulkfhirloader_spark.operators.text import normalize_text, tokens
+from bulkfhirloader_spark.reuse import release_candidate_checkpoints  # noqa: F401
 from bulkfhirloader_spark.sources.stores import SIGNATURE_BANDS
 
 
@@ -50,170 +48,13 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
         return df.repartition(target)
     return df
 
-# Ledger of the candidate-set LAZY checkpoints (r15, r14 advice — one
-# place covering all the eager=False sites: ngram_jaccard_pairs,
-# ngram_containment_pairs, text.winnow_verified).  These checkpoints cut
-# a multiply-referenced proposal subplan's lineage INSIDE a returned
-# plan, so unlike the gate caches they canNOT be auto-evicted on the
-# next call: a released local checkpoint cannot recompute, and the
-# caller may still hold the previous result.  The ledger makes the
-# retention explicit and gives long-lived sessions a drain point.
-_live_candidate_checkpoints: list = []
-
-# Ledger concurrency (r16, advisor finding): a concurrent driver thread
-# that ledgers a checkpoint between another thread's "snapshot len()"
-# and "pop to that tail" would get its still-referenced checkpoint
-# released (unrecomputable).  All append/drain sites take this lock, and
-# scoped releases use a per-THREAD capture frame (below) so a caller
-# releases exactly the entries its own nested call created — never
-# another thread's.
-_ledger_lock = threading.RLock()
-_ledger_capture = threading.local()
-
-
-def _ledger_append(df: DataFrame) -> None:
-    """Record an already-created checkpoint in the module ledger (and in
-    this thread's open capture frames, if any) under the ledger lock."""
-    with _ledger_lock:
-        _live_candidate_checkpoints.append(df)
-        for frame in getattr(_ledger_capture, "frames", ()):
-            frame.append(df)
-
-
-def _ledger_lazy_checkpoint(df: DataFrame) -> DataFrame:
-    """Lazily checkpoint an internal candidate set and RECORD it in the
-    module ledger so release_candidate_checkpoints can free the blocks
-    once the session is done with the results that reference them.
-
-    Reserved for the genuine lineage-CUT cases (candidate proposal
-    subplans referenced three times, whose re-expansion blows the printed
-    plan to ~90 Exchanges and planning time with it — guide §3.3).  For
-    plain compute-once/read-twice sharing use _ledger_shared_persist:
-    a localCheckpoint's blocks are UNRECOVERABLE after an executor loss
-    (the lineage is truncated), which on a real cluster fails the query
-    — acceptable only where the checkpoint buys something persist
-    cannot."""
-    out = df.localCheckpoint(eager=False)
-    _ledger_append(out)
-    return out
-
-
-def _ledger_shared_persist(df: DataFrame) -> DataFrame:
-    """Materialize-once cut for SHARED SELF-JOIN inputs (r17, verdict #3):
-    the capped band table, the simhash signature projection and the
-    verify tier's shingle-attach table each feed BOTH self-join sides,
-    and when Catalyst broadcasts one side that side's build is a separate
-    subtree ReuseExchange cannot dedupe — so without a cut the producing
-    chain executes once per side.  persist(MEMORY_AND_DISK) gives the
-    same compute-once plan (every reference reads one InMemoryRelation)
-    WITHOUT truncating lineage: on a real cluster an executor loss after
-    a localCheckpoint makes the blocks unrecoverable and FAILS the query,
-    while a lost persisted block is recomputed from the parquet lineage.
-    Two further wins over the checkpoint it replaces: plan captures show
-    the real materialization subtree (a LogicalRDD hides it), and
-    draining merely unpersists — a still-held result recomputes instead
-    of failing, so the ledger drain is safe at any time for these
-    entries.  Ledgered for the same explicit drain point."""
-    out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _ledger_append(out)
-    return out
-
-
-class _ledger_capture_frame:
-    """Context manager: capture the ledger entries THIS thread's nested
-    operator calls create, so the caller can release exactly those (its
-    own candidate sets) without touching entries ledgered concurrently
-    by other threads."""
-
-    def __enter__(self) -> list:
-        frames = getattr(_ledger_capture, "frames", None)
-        if frames is None:
-            frames = _ledger_capture.frames = []
-        self._frame: list = []
-        frames.append(self._frame)
-        return self._frame
-
-    def __exit__(self, *exc) -> None:
-        _ledger_capture.frames.remove(self._frame)
-
-
-def _release_ledger_entry(df: DataFrame) -> None:
-    """Free one ledgered materialization, whichever kind it is: unpersist
-    covers the _ledger_shared_persist entries (cache-manager blocks; the
-    DataFrame stays recomputable), _release_local_checkpoint covers the
-    _ledger_lazy_checkpoint entries (internal-RDD blocks; the DataFrame
-    becomes unrecomputable).  Each call is a no-op for the other kind, so
-    one release path serves both."""
-    from bulkfhirloader_spark.operators.similarity import (
-        _release_local_checkpoint,
-    )
-
-    try:
-        df.unpersist()
-    except Exception:  # pragma: no cover - context raced to shutdown
-        pass
-    _release_local_checkpoint(df)
-
-
-def _release_captured_checkpoints(frame: list) -> None:
-    """Release the checkpoints in a capture frame and drop them from the
-    module ledger (identity match, under the lock)."""
-    with _ledger_lock:
-        for df in frame:
-            for i, live in enumerate(_live_candidate_checkpoints):
-                if live is df:
-                    del _live_candidate_checkpoints[i]
-                    break
-            else:
-                continue  # already drained by release_candidate_checkpoints
-            _release_ledger_entry(df)
-    frame.clear()
-
-
-def release_candidate_checkpoints() -> int:
-    """Free every recorded internal materialization (r15, r14 advice):
-    without this, repeated dedup/text/multimodal near-dup calls in a
-    long-lived session accumulate executor blocks until ContextCleaner
-    happens to GC them.  Operators that ledger here (r16 advisor ask —
-    the complete list):
-
-    - ``ngram_jaccard_pairs`` / ``ngram_containment_pairs`` /
-      ``text.winnow_verified``: the candidate proposal set, as a lazy
-      localCheckpoint (lineage cut) — releasing makes a still-held
-      result UNRECOMPUTABLE (re-collecting it afterwards fails; run the
-      operator again instead).
-    - ``ngram_jaccard_pairs`` (broadcast_candidates regime): the
-      (id, shingles) attach table; ``minhash_near_dup_pairs`` /
-      ``incremental_near_dup_filter`` / ``mm image/video near-dup``
-      (capped regimes): the shared capped band table;
-      ``simhash_near_dup_pairs``: the signature projection — all as
-      persist(MEMORY_AND_DISK) since r17, so releasing merely drops the
-      cache and still-held results RECOMPUTE on next use.
-
-    Call when the session is done with the returned DataFrames (or, for
-    the persisted entries, whenever memory pressure warrants — they
-    survive the drain logically).  Returns the number of entries
-    released."""
-    n = 0
-    with _ledger_lock:
-        while _live_candidate_checkpoints:
-            _release_ledger_entry(_live_candidate_checkpoints.pop())
-            n += 1
-    return n
-
 
 # Persisted-result memos: one entry per (session, input plan(s), params),
 # so repeated dedup calls over one corpus reuse ONE materialized cache
-# instead of a release-and-recompute cycle per call.  Bounded LRU, keyed by
-# applicationId so a restarted session can't alias dead handles.  The
-# helpers below handle two hazards: semanticHash is 32-bit, so every hit
-# is confirmed with sameSemantics (_memo_get); and a stopped session's
-# handles cannot be unpersisted, so its entries are purged first and
-# unpersist is best-effort (_memo_evict).
-_SIG_MEMO: "OrderedDict[tuple, tuple[list[DataFrame], DataFrame]]" = OrderedDict()
-_SIG_MEMO_MAX = 4
-_ADMIT_MEMO: "OrderedDict[tuple, tuple[list[DataFrame], DataFrame]]" = OrderedDict()
-_ADMIT_MEMO_MAX = 4
+# instead of a release-and-recompute cycle per call (reuse.Memo: bounded
+# LRU, sameSemantics-confirmed hits, stopped sessions purged first).
+_SIG_MEMO = reuse.Memo(4)
+_ADMIT_MEMO = reuse.Memo(4)
 # Max distinct band hashes pushed as a literal IN filter to the bucketed
 # band table (incremental_near_dup_filter's pruned-probe tier).  Pruning
 # is an IO win exactly when the probed key set is small against the
@@ -243,68 +84,6 @@ _BAND_PROBE_PUSHDOWN_MAX = 4096
 # or for id types with no safe literal rendering — the broadcast semi
 # join remains, identical output by construction.
 _VERIFY_ID_PUSHDOWN_MAX = 4096
-# One lock guards both memos: callers may run on several threads, and an
-# OrderedDict mutated mid-iteration (eviction scan vs insert) raises.  The
-# lock covers dict state, not Spark jobs: a lost race only wastes a build
-# (_memo_publish).
-_MEMO_LOCK = threading.Lock()
-
-
-def _memo_evict(memo: "OrderedDict[tuple, tuple[list[DataFrame], DataFrame]]",
-                limit: int, app_id: str) -> None:
-    """Purge entries from other (stopped) sessions, then LRU-evict to the
-    bound.  unpersist is best-effort: a handle whose context died between
-    the app_id check and the call must not crash the caller."""
-    for key in [k for k in memo if k[0] != app_id]:
-        memo.pop(key)  # dead session: blocks are gone with the context
-    while len(memo) > limit:
-        _inputs, result = memo.popitem(last=False)[1]
-        try:
-            result.unpersist()
-        except Exception:  # pragma: no cover - context raced to shutdown
-            pass
-
-
-def _memo_get(memo: "OrderedDict[tuple, tuple[list[DataFrame], DataFrame]]",
-              key: tuple, inputs: list[DataFrame]) -> DataFrame | None:
-    """Confirmed memo hit: key match AND sameSemantics on every stored
-    input (guards the ~2^-32 semanticHash collision)."""
-    hit = memo.get(key)
-    if hit is None:
-        return None
-    stored_inputs, result = hit
-    try:
-        if len(stored_inputs) == len(inputs) and all(
-            a.sameSemantics(b) for a, b in zip(inputs, stored_inputs)
-        ):
-            memo.move_to_end(key)
-            return result
-    except Exception:  # pragma: no cover - stopped-context comparison
-        pass
-    memo.pop(key, None)  # collision or dead handle: rebuild below
-    try:
-        result.unpersist()  # don't leak the evicted entry's cached blocks
-    except Exception:  # pragma: no cover - dead handle
-        pass
-    return None
-
-
-def _memo_publish(memo: OrderedDict, limit: int, key: tuple, inputs: list,
-                  built: DataFrame) -> DataFrame:
-    """Store ``built`` under ``key`` (whose first element is the
-    applicationId) and return it — or, when a concurrent caller stored a
-    confirmed entry first, release ``built`` and return the winner's."""
-    with _MEMO_LOCK:
-        again = _memo_get(memo, key, inputs)
-        if again is not None:
-            try:
-                built.unpersist()
-            except Exception:  # pragma: no cover - dead handle
-                pass
-            return again
-        memo[key] = (inputs, built)
-        _memo_evict(memo, limit, key[0])
-    return built
 
 
 # Affine-permutation constants for MinHash: h_i(x) = (a_i * x + b_i) mod P.
@@ -457,21 +236,19 @@ def cached_minhash_signatures(
 ) -> DataFrame:
     """minhash_signatures with a persisted, memoized result.
 
-    Keyed by (applicationId, canonical plan hash, column names, geometry);
-    hits are confirmed with sameSemantics against the stored input plan
-    (semanticHash is 32-bit — see the memo-helper notes).  Two calls over
+    Keyed by (session, canonical plan hash, column names, geometry); hits
+    are confirmed with sameSemantics against the stored input plan
+    (semanticHash is 32-bit — reuse.Memo).  Two calls over
     semantically identical corpora with the same geometry share one cached
     materialization.  LRU-bounded, dead-session entries purged first."""
-    app_id = docs.sparkSession.sparkContext.applicationId
-    key = (app_id, docs.semanticHash(), id_col, text_col, num_hashes, shingle_words)
-    with _MEMO_LOCK:
-        sigs = _memo_get(_SIG_MEMO, key, [docs])
-    if sigs is not None:
-        return sigs
-    built = minhash_signatures(
-        docs, id_col, text_col, num_hashes, shingle_words
-    ).persist()
-    return _memo_publish(_SIG_MEMO, _SIG_MEMO_MAX, key, [docs], built)
+    key = (docs.semanticHash(), id_col, text_col, num_hashes, shingle_words)
+    return _SIG_MEMO.get_or_build(
+        docs.sparkSession, key,
+        lambda: minhash_signatures(
+            docs, id_col, text_col, num_hashes, shingle_words
+        ).persist(),
+        [docs],
+    )
 
 
 def require_band_geometry(num_hashes: int, bands: int) -> None:
@@ -583,7 +360,7 @@ def _cap_band_buckets(
         raise ValueError("max_bucket_size must be >= 2 (a pair needs 2)")
     capped = _drop_hot_keys(banded, keys, max_bucket_size)
     if share:
-        capped = _ledger_shared_persist(capped)
+        capped = reuse.shared_persist(capped)
     return capped
 
 
@@ -621,7 +398,7 @@ def minhash_near_dup_pairs(
     cached_minhash_signatures, so repeat calls over the same corpus reuse
     ONE materialized cache (the old per-call release-and-recompute cycle
     paid the full shingle+fold projection on every warm invocation);
-    eviction is LRU-bounded at _SIG_MEMO_MAX entries.
+    eviction is LRU-bounded at _SIG_MEMO.maxsize entries.
     """
     require_band_geometry(num_hashes, bands)
     # sigs feeds the banding AND both sides of the estimate re-join; persist
@@ -787,7 +564,7 @@ def ngram_jaccard_pairs(
         # Ledgered (r15): the blocks live until the session drains them
         # via release_candidate_checkpoints (the returned plan reads from
         # them, so auto-eviction would break still-held results).
-        candidates = _ledger_lazy_checkpoint(candidates)
+        candidates = reuse.lazy_checkpoint(candidates)
     # parallelism fix on the BASE scan, before any join is stacked on top:
     # ensure_parallelism probes .rdd partition counts, which under AQE
     # would otherwise execute the candidate subplan just to count partitions
@@ -885,7 +662,7 @@ def ngram_jaccard_pairs(
             # recompute-over-materialize trade exactly as before.
             # r17 (verdict #3): ledgered persist, not localCheckpoint —
             # same one-scan plan, recomputable after executor loss.
-            sh = _ledger_shared_persist(sh)
+            sh = reuse.shared_persist(sh)
         pairs = (
             candidates.select("id_a", "id_b")
             .distinct()
@@ -996,10 +773,6 @@ def connected_components(
     (silently returning partial labels would split one duplicate cluster
     into several and keep extra survivors downstream).
     """
-    from bulkfhirloader_spark.operators.similarity import (
-        _release_local_checkpoint,
-    )
-
     edges = pairs.select(
         F.col(left_col).alias("src"), F.col(right_col).alias("dst")
     )
@@ -1011,7 +784,7 @@ def connected_components(
         # the local tier collected the edge set; its checkpoint blocks
         # are dead the moment the driver holds the labels (r15 — the
         # kmeans_centroids_chained release discipline applied here)
-        _release_local_checkpoint(edges)
+        reuse.release(edges)
         return out
     labels = (
         edges.select(F.col("src").alias("node"))
@@ -1073,22 +846,22 @@ def connected_components(
         # weight now — free both (r15, the chained-k-means release
         # discipline; previously every round's blocks lived until
         # ContextCleaner GC, O(rounds × nodes) retained per call)
-        _release_local_checkpoint(merged)
-        _release_local_checkpoint(prev_round)
+        reuse.release(merged)
+        reuse.release(prev_round)
         prev_round = new_labels
         labels = new_labels.select("node", "component")
         if changed == 0:
             # the returned labels read ONLY the final round's checkpoint;
             # the symmetrized edge table is loop-internal state
-            _release_local_checkpoint(edges)
+            reuse.release(edges)
             return labels
     # non-convergence: nothing escapes this frame, so release ALL loop
     # state before raising — the caller's likely next move is an
     # immediate retry with a higher max_iter, and stacking O(nodes +
     # edges) leaked blocks per failed attempt is the exact retention the
     # in-loop releases exist to prevent (r15 review)
-    _release_local_checkpoint(prev_round)
-    _release_local_checkpoint(edges)
+    reuse.release(prev_round)
+    reuse.release(edges)
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds; "
         "the pair graph has a longer label chain than expected — raise "
@@ -1566,7 +1339,7 @@ def simhash_near_dup_pairs(
         # drains via release_candidate_checkpoints.
         # Caller-injected sigs (the stored-table flow) stay untouched: a
         # columnar scan read twice needs no materialization.
-        sigs = _ledger_shared_persist(simhash_signatures(docs, id_col, text_col))
+        sigs = reuse.shared_persist(simhash_signatures(docs, id_col, text_col))
     n_bands = 64 // band_bits
     mask = (1 << band_bits) - 1
     banded = sigs.select(
@@ -1939,13 +1712,12 @@ def incremental_near_dup_filter(
     # every argument that changes the admitted set (the cap changes which
     # pairs get proposed) is in the key
     memo_key = (
-        spark.sparkContext.applicationId, existing.semanticHash(),
-        new_batch.semanticHash(), id_col, text_col, num_hashes, bands,
-        shingle_words, threshold, max_bucket_size, signature_store, store_fp,
+        existing.semanticHash(), new_batch.semanticHash(), id_col, text_col,
+        num_hashes, bands, shingle_words, threshold, max_bucket_size,
+        signature_store, store_fp,
     )
     inputs = [existing, new_batch]
-    with _MEMO_LOCK:
-        cached = _memo_get(_ADMIT_MEMO, memo_key, inputs)
+    cached = _ADMIT_MEMO.get(spark, memo_key, inputs)
     if cached is not None:
         return new_batch.join(cached, id_col, "left_semi")
     union_docs = existing.select(F.col(id_col), F.col(text_col)).unionByName(
@@ -1956,7 +1728,7 @@ def incremental_near_dup_filter(
         num_hashes, bands, shingle_words,
     )
     new_ids = new_batch.select(F.col(id_col)).distinct()
-    with _ledger_capture_frame() as own_entries:
+    with reuse.capture_frame() as own_entries:
         if max_bucket_size is not None:
             # same skew cap as minhash_near_dup_pairs: capped docs are NOT
             # proposed, so pathological boilerplate belongs upstream in
@@ -1985,7 +1757,7 @@ def incremental_near_dup_filter(
     # band table, ngram_jaccard_pairs' candidates): release them now rather
     # than pin dead sets per batch in a long-lived session.  The capture
     # frame holds only this thread's entries.
-    _release_captured_checkpoints(own_entries)
+    reuse.release_captured(own_entries)
 
     def is_new(c: str, flag: str) -> DataFrame:
         return new_ids.select(F.col(id_col).alias(c), F.lit(True).alias(flag))
@@ -1997,7 +1769,7 @@ def incremental_near_dup_filter(
     )
     tier = _admit_local if verified.count() <= local_threshold else _admit_distributed
     admitted, result = tier(new_batch, new_ids, tagged, id_col)
-    won = _memo_publish(_ADMIT_MEMO, _ADMIT_MEMO_MAX, memo_key, inputs, admitted)
+    won = _ADMIT_MEMO.put(spark, memo_key, admitted, inputs)
     return result if won is admitted else new_batch.join(won, id_col, "left_semi")
 
 
@@ -2046,7 +1818,7 @@ def ngram_containment_pairs(
     if candidates is not None:
         # ledgered lazy cut, same rationale and retention contract as
         # ngram_jaccard_pairs (release_candidate_checkpoints drains it)
-        candidates = _ledger_lazy_checkpoint(candidates)
+        candidates = reuse.lazy_checkpoint(candidates)
         # restrict BEFORE the explode (same rationale as ngram_jaccard_pairs:
         # a semi join doesn't push below Generate; ensure_parallelism stays
         # on the base scan so its .rdd probe can't execute the subplan)

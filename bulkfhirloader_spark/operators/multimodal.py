@@ -806,7 +806,7 @@ def image_near_dup_pairs(
         # share=True (r16): the capped table feeds both self-join sides;
         # without the cut each side re-ran the Exchange+Sort+Window chain
         # (see _cap_band_buckets — one side's broadcast build defeats
-        # ReuseExchange).  Released via release_candidate_checkpoints.
+        # ReuseExchange).  Released via reuse.release_candidate_checkpoints.
         banded = _cap_band_buckets(
             banded, max_bucket_size, keys=("band_idx", "band_val"), share=True
         )

@@ -31,6 +31,7 @@ import pandas as pd  # module-level: pandas_udf type-hint resolution needs
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bulkfhirloader_spark import reuse
 from bulkfhirloader_spark.functions.binding import let
 
 
@@ -800,25 +801,8 @@ def kmeans_centroids_chained(
         ).localCheckpoint()
         # the new table is materialized (eager checkpoint), so the
         # previous iteration's blocks are dead weight — free them now
-        _release_local_checkpoint(prev)
+        reuse.release(prev)
     return cents
-
-
-def _release_local_checkpoint(df: DataFrame) -> None:
-    """Unpersist the executor blocks behind a locally-checkpointed
-    DataFrame.  ``DataFrame.unpersist`` only talks to the cache manager —
-    checkpoint blocks belong to the internal RDD the plan's LogicalRDD
-    wraps, so they otherwise live until ContextCleaner GCs the dropped
-    reference (verified: getRDDStorageInfo holds the MapPartitionsRDD
-    until this explicit unpersist).  Best-effort across internal-API
-    drift: a plan that is not a LogicalRDD (or a future Spark that
-    renames the accessor) is left for ContextCleaner, never an error.
-    Callers must only release checkpoints whose data is no longer
-    reachable — a released local checkpoint cannot be recomputed."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
 
 
 def _drop_degenerate_vectors(df: DataFrame, vec_col: str) -> DataFrame:
@@ -1439,8 +1423,7 @@ def _assign_nearest_centroid(df: DataFrame, centers: list[list[float]]) -> DataF
     return df.mapInPandas(assign, schema=out_schema)
 
 
-_CENTROID_MEMO: dict = {}
-_CENTROID_MEMO_MAX = 16
+_CENTROID_MEMO = reuse.Memo(16, release=None)
 
 
 def _read_stored_centroids(spark, path: str) -> list[list[float]]:
@@ -1449,36 +1432,29 @@ def _read_stored_centroids(spark, path: str) -> list[list[float]]:
     share, so append-side assignment and query-side probing can never
     disagree on the centroid order or dtype.
 
-    r16: memoized per (applicationId, path, directory fingerprint).  The
-    quantizer is immutable for a given index build (appends touch only
-    the lists directory), so query-many serving was paying a file
-    listing + a one-job parquet read + collect of the SAME handful of
-    rows on every probe batch — measured 0.3-0.5 s of the per-call
-    stored-probe cost.  The fingerprint (name+size of the centroid
-    part files — a listing-only call, no job) invalidates the memo the
-    moment a rebuild rewrites the quantizer, so a stale cache cannot
-    serve old centroids; plain dict + LRU-ish size bound, same pattern
-    as dedup's signature memo."""
+    Memoized per (session, path, directory fingerprint).  The quantizer
+    is immutable for a given index build (appends touch only the lists
+    directory), so query-many serving was paying a file listing + a
+    one-job parquet read + collect of the SAME handful of rows on every
+    probe batch — measured 0.3-0.5 s of the per-call stored-probe cost.
+    The fingerprint (name+size of the centroid part files — a
+    listing-only call, no job) invalidates the memo the moment a rebuild
+    rewrites the quantizer, so a stale cache cannot serve old
+    centroids."""
     from bulkfhirloader_spark.fsutil import fs_dir_fingerprint
 
     cdir = f"{path}/centroids.parquet"
-    key = (
-        spark.sparkContext.applicationId,
-        cdir,
-        fs_dir_fingerprint(spark, cdir),
+
+    def read() -> list[list[float]]:
+        rows = sorted(
+            (r["centroid_id"], r["center"])
+            for r in spark.read.parquet(cdir).collect()
+        )
+        return [[float(v) for v in c] for _i, c in rows]
+
+    return _CENTROID_MEMO.get_or_build(
+        spark, (cdir, fs_dir_fingerprint(spark, cdir)), read
     )
-    hit = _CENTROID_MEMO.get(key)
-    if hit is not None:
-        return hit
-    rows = sorted(
-        (r["centroid_id"], r["center"])
-        for r in spark.read.parquet(cdir).collect()
-    )
-    centers = [[float(v) for v in c] for _i, c in rows]
-    if len(_CENTROID_MEMO) >= _CENTROID_MEMO_MAX:
-        _CENTROID_MEMO.pop(next(iter(_CENTROID_MEMO)))
-    _CENTROID_MEMO[key] = centers
-    return centers
 
 
 def query_ivf_index(

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bulkfhirloader_spark import reuse
 from bulkfhirloader_spark.functions.binding import let
 
 TOKEN_PATTERN = r"\S+"
@@ -559,9 +560,6 @@ def bpe_merge_rounds(
     main.go) has no tokenizer surface; this is the LLM-pipeline
     extension, published-algorithm cited."""
     from bulkfhirloader_spark.operators.dedup import ensure_parallelism
-    from bulkfhirloader_spark.operators.similarity import (
-        _release_local_checkpoint,
-    )
 
     if n_merges < 1:
         raise ValueError("n_merges must be >= 1")
@@ -606,12 +604,12 @@ def bpe_merge_rounds(
             if prev_ckpt is not None:
                 # the new segmentation is materialized — the previous
                 # round's blocks are dead weight, free them now
-                _release_local_checkpoint(prev_ckpt)
+                reuse.release(prev_ckpt)
             prev_ckpt = sym
     if prev_ckpt is not None:
         # the merge table is collected; the working corpus is internal
         # state, never returned — safe to free unconditionally
-        _release_local_checkpoint(prev_ckpt)
+        reuse.release(prev_ckpt)
     return spark.createDataFrame(merges, schema)
 
 
@@ -643,8 +641,8 @@ def apply_bpe_merges(
     cut with an eager localCheckpoint (expression-tree depth and
     analysis cost grow linearly with the stack — the bpe_merge_rounds
     plan-hygiene trade), intermediate cuts released in-loop and the
-    LAST cut ledgered for release_candidate_checkpoints (the result
-    plan reads from it).
+    LAST cut ledgered for reuse.release_candidate_checkpoints (the
+    result plan reads from it).
 
     ``apply_tier="arrow"`` (r15 review): the WHOLE learned sequence
     applies in ONE mapInPandas pass — a linear Python token loop per
@@ -654,13 +652,7 @@ def apply_bpe_merges(
     stacked interpreted folds are also a py4j construction cost — the
     80k-literal-tree lesson); ``fold`` stays the oracle-restatable
     default, segmentations pytest-pinned identical."""
-    from bulkfhirloader_spark.operators.dedup import (
-        _ledger_append,
-        ensure_parallelism,
-    )
-    from bulkfhirloader_spark.operators.similarity import (
-        _release_local_checkpoint,
-    )
+    from bulkfhirloader_spark.operators.dedup import ensure_parallelism
 
     if hasattr(merges, "collect"):
         seq = [
@@ -686,13 +678,12 @@ def apply_bpe_merges(
         if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < len(seq):
             out = out.localCheckpoint()
             if prev_ckpt is not None:
-                _release_local_checkpoint(prev_ckpt)
+                reuse.release(prev_ckpt)
             prev_ckpt = out
     if prev_ckpt is not None:
         # the returned plan reads from the final cut — retained until the
-        # session drains it (dedup.release_candidate_checkpoints); the
-        # helper takes the ledger lock (r16, advisor finding)
-        _ledger_append(prev_ckpt)
+        # session drains it (reuse.release_candidate_checkpoints)
+        reuse.ledger_append(prev_ckpt)
     return out
 
 
@@ -1315,14 +1306,12 @@ def winnow_verified(
             max_fp_df=max_fp_df, id_col=id_col, text_col=text_col,
             hash_tier=hash_tier,
         )
-    from bulkfhirloader_spark.operators.dedup import _ledger_lazy_checkpoint
-
     # lazy lineage cut, LEDGERED (r15, r14 advice): the candidate set is
     # referenced by the wanted-ids explode AND the pair join below, and
     # the returned plan reads from these blocks — they are retained until
-    # the session drains them via dedup.release_candidate_checkpoints
+    # the session drains them via reuse.release_candidate_checkpoints
     # (auto-eviction would break a still-held previous result)
-    cand = _ledger_lazy_checkpoint(
+    cand = reuse.lazy_checkpoint(
         candidates.select("id_a", "id_b")
         .where(F.col("id_a") < F.col("id_b"))
         .distinct()

@@ -30,6 +30,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bulkfhirloader_spark import reuse
 from bulkfhirloader_spark.functions.scalars import (
     alive_filter,
     collection_name,
@@ -64,6 +65,27 @@ def _utc(spark: SparkSession) -> None:
     the session zone — UTC makes them agree).  Runtime-settable, idempotent,
     works on the driver-provided session."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+# Fixture dirs (stores, stream sources, format round-trips) written once per
+# (session, key) and reused by every later call: plain temp paths, so
+# nothing to release on eviction.
+_FIXTURE_DIRS = reuse.Memo(256, release=None)
+
+
+def _fixture_dir(
+    spark: SparkSession, key: tuple, prefix: str,
+    write: Callable[[str], None], sub: str = "",
+) -> str:
+    """A fresh ``prefix`` temp dir (plus ``sub``) that ``write(path)``
+    fills on the first call per (session, ``key``); later calls reuse it."""
+
+    def build() -> str:
+        path = tempfile.mkdtemp(prefix=prefix) + sub
+        write(path)
+        return path
+
+    return _FIXTURE_DIRS.get_or_build(spark, key, build)
 
 
 def _sql_stoplist(lang: str) -> str:
@@ -2105,9 +2127,6 @@ WHERE doc_id NOT IN (SELECT node FROM labels WHERE node <> component)
 """
 
 
-_SIG_STORE_DIRS: dict = {}
-
-
 def dedup_incremental_admission_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deployment tier of dedup_incremental_admission (r9 verdict, Next
     round #1): identical admission semantics, but the EXISTING side's
@@ -2123,25 +2142,17 @@ def dedup_incremental_admission_stored(spark: SparkSession, sf_dir: str) -> Data
     guard (both drift directions, r10 hardening).
     Output is DEFINED identical to the self-contained twin, so the oracle
     SQL is shared (_DEDUP_INCR_SQL)."""
-    import os as _os
-
     docs = load_table(spark, sf_dir, "documents")
     existing = docs.where(F.col("doc_id") % 2 == 0)
     new_batch = docs.where(F.col("doc_id") % 2 == 1)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    store = _SIG_STORE_DIRS.get(key)
-    if store is None:
-        store = _os.path.join(tempfile.mkdtemp(prefix="bfls_sigstore_"), "store")
-        dedup.signature_store_write(
-            existing.select("doc_id", "text"), store
-        )
-        _SIG_STORE_DIRS[key] = store
+    store = _fixture_dir(
+        spark, (sf_dir, "sig_store"), "bfls_sigstore_",
+        lambda p: dedup.signature_store_write(existing.select("doc_id", "text"), p),
+        "/store",
+    )
     return dedup.incremental_near_dup_filter(
         existing, new_batch, signature_store=store, validate_store_ids=True
     ).select("doc_id")
-
-
-_BKT_SIG_STORE_DIRS: dict = {}
 
 
 def dedup_incremental_admission_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2157,19 +2168,16 @@ def dedup_incremental_admission_bucketed(spark: SparkSession, sf_dir: str) -> Da
     (re-)attach, the pruned band-table probe, and the id-set equality
     guard.  Output is DEFINED identical to the self-contained twin, so
     the oracle SQL is shared (_DEDUP_INCR_SQL)."""
-    import os as _os
-
     docs = load_table(spark, sf_dir, "documents")
     existing = docs.where(F.col("doc_id") % 2 == 0)
     new_batch = docs.where(F.col("doc_id") % 2 == 1)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    store = _BKT_SIG_STORE_DIRS.get(key)
-    if store is None:
-        store = _os.path.join(tempfile.mkdtemp(prefix="bfls_bktsigstore_"), "store")
-        dedup.signature_store_write(
-            existing.select("doc_id", "text"), store, bands=8, num_buckets=8
-        )
-        _BKT_SIG_STORE_DIRS[key] = store
+    store = _fixture_dir(
+        spark, (sf_dir, "bkt_sig_store"), "bfls_bktsigstore_",
+        lambda p: dedup.signature_store_write(
+            existing.select("doc_id", "text"), p, bands=8, num_buckets=8
+        ),
+        "/store",
+    )
     return dedup.incremental_near_dup_filter(
         existing, new_batch, signature_store=store, validate_store_ids=True
     ).select("doc_id")
@@ -2973,23 +2981,19 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_INDEX_DIRS: dict[tuple[str, str], str] = {}
-
-
 def prebuild_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     """Build (or reuse) the session-memoized stored-IVF index for
     ``sim_topk_ivf_stored`` and return its path.  Exposed so bench.py can
     prebuild during warmup: the train-once/query-many contract means the
     headline number should measure the PROBE (partition-pruned read +
     in-list scoring), not the one-time quantizer build."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _IVF_INDEX_DIRS.get(key)
-    if path is None:
-        _q, emb = _query_vectors(spark, sf_dir)
-        path = tempfile.mkdtemp(prefix="bfls_ivf_") + "/index"
-        similarity.build_ivf_index(emb, path, n_clusters=8)
-        _IVF_INDEX_DIRS[key] = path
-    return path
+    return _fixture_dir(
+        spark, (sf_dir, "ivf_index"), "bfls_ivf_",
+        lambda p: similarity.build_ivf_index(
+            _query_vectors(spark, sf_dir)[1], p, n_clusters=8
+        ),
+        "/index",
+    )
 
 
 def sim_topk_ivf_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3014,6 +3018,28 @@ def sim_topk_ivf_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _write_query_stream(q: DataFrame, src: str) -> None:
+    """The benchmark queries as a 2-file stream source: ``<src>/in/f0``
+    holds query ids < 2, ``f1`` the rest."""
+    import os as _os
+
+    q.where(F.col("query_id") < 2).coalesce(1).write.parquet(
+        _os.path.join(src, "in", "f0")
+    )
+    q.where(F.col("query_id") >= 2).coalesce(1).write.parquet(
+        _os.path.join(src, "in", "f1")
+    )
+
+
+def _sim_topk_stream_src(spark: SparkSession, sf_dir: str, q: DataFrame) -> str:
+    """The query stream source of the stored and pruned top-k rows,
+    written once per (session, sf_dir)."""
+    return _fixture_dir(
+        spark, (sf_dir, "sim_topk_stream"), "bfls_stream_simtopk_",
+        lambda src: _write_query_stream(q, src),
+    )
+
+
 def stream_sim_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming top-k over the stored IVF index
     (streaming.joins.stream_sim_topk, r14 — the serving twin of
@@ -3032,17 +3058,7 @@ def stream_sim_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     _utc(spark)
     q, _emb = _query_vectors(spark, sf_dir)
     path = prebuild_ivf_index(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "sim_topk_stream")
-    src = _STREAM_DOC_DIRS.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="bfls_stream_simtopk_")
-        q.where(F.col("query_id") < 2).coalesce(1).write.parquet(
-            _os.path.join(src, "in", "f0")
-        )
-        q.where(F.col("query_id") >= 2).coalesce(1).write.parquet(
-            _os.path.join(src, "in", "f1")
-        )
-        _STREAM_DOC_DIRS[key] = src
+    src = _sim_topk_stream_src(spark, sf_dir, q)
     in_dir = _os.path.join(src, "in")
     schema = spark.read.parquet(f"{in_dir}/f0").schema
     _STREAM_Q_SEQ += 1
@@ -3096,18 +3112,14 @@ def stream_sim_topk_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     _utc(spark)
     q, _emb = _query_vectors(spark, sf_dir)
     path = prebuild_ivf_index(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "sim_topk_stream_bkt")
-    src = _STREAM_DOC_DIRS.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="bfls_stream_simtopk_bkt_")
-        q.where(F.col("query_id") < 2).coalesce(1).write.parquet(
-            _os.path.join(src, "in", "f0")
-        )
-        q.where(F.col("query_id") >= 2).coalesce(1).write.parquet(
-            _os.path.join(src, "in", "f1")
-        )
+
+    def write(src: str) -> None:
+        _write_query_stream(q, src)
         ivf_lists_bucketed_write(spark, path, num_buckets=8)
-        _STREAM_DOC_DIRS[key] = src
+
+    src = _fixture_dir(
+        spark, (sf_dir, "sim_topk_stream_bkt"), "bfls_stream_simtopk_bkt_", write
+    )
     in_dir = _os.path.join(src, "in")
     schema = spark.read.parquet(f"{in_dir}/f0").schema
     _STREAM_Q_SEQ += 1
@@ -3158,17 +3170,7 @@ def stream_sim_topk_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     _utc(spark)
     q, _emb = _query_vectors(spark, sf_dir)
     path = prebuild_ivf_index(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "sim_topk_stream")
-    src = _STREAM_DOC_DIRS.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="bfls_stream_simtopk_")
-        q.where(F.col("query_id") < 2).coalesce(1).write.parquet(
-            _os.path.join(src, "in", "f0")
-        )
-        q.where(F.col("query_id") >= 2).coalesce(1).write.parquet(
-            _os.path.join(src, "in", "f1")
-        )
-        _STREAM_DOC_DIRS[key] = src
+    src = _sim_topk_stream_src(spark, sf_dir, q)
     in_dir = _os.path.join(src, "in")
     schema = spark.read.parquet(f"{in_dir}/f0").schema
     _STREAM_Q_SEQ += 1
@@ -3555,7 +3557,6 @@ SELECT vec_id, label, c_label AS predicted_label, score FROM r WHERE rnk = 1
 # The streaming source dir + query-name counter for stream_user_totals:
 # one materialization per (session, sf_dir), fresh memory-sink name per call
 # (a memory sink's temp view persists after termination).
-_STREAM_EV_DIRS: dict[tuple, str] = {}
 _STREAM_Q_SEQ = 0
 
 
@@ -3570,16 +3571,15 @@ def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bulkfhirloader_spark.streaming.stateful import running_user_totals
 
     global _STREAM_Q_SEQ
-    key = (spark.sparkContext.applicationId, sf_dir)
-    src = _STREAM_EV_DIRS.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="bfls_stream_ev_")
+
+    def write(src: str) -> None:
         # several files so availableNow + maxFilesPerTrigger=1 forces state
         # to carry across micro-batches
         load_table(spark, sf_dir, "events").select(
             "user_id", "value"
         ).repartition(3).write.mode("overwrite").parquet(_os.path.join(src, "in"))
-        _STREAM_EV_DIRS[key] = src
+
+    src = _fixture_dir(spark, (sf_dir, "stream_ev"), "bfls_stream_ev_", write)
     in_dir = _os.path.join(src, "in")
     schema = spark.read.parquet(in_dir).schema
     _STREAM_Q_SEQ += 1
@@ -3613,9 +3613,6 @@ FROM events GROUP BY 1
 """
 
 
-_STREAM_SESS_DIRS: dict[tuple[str, str, tuple[str, ...]], str] = {}
-
-
 def _ordered_event_chunks(
     spark: SparkSession, sf_dir: str, cols: tuple[str, ...]
 ) -> str:
@@ -3626,10 +3623,7 @@ def _ordered_event_chunks(
     — see stream_sessionize / stream_interval_join docstrings."""
     import os as _os
 
-    key = (spark.sparkContext.applicationId, sf_dir, cols)
-    src = _STREAM_SESS_DIRS.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="bfls_stream_ord_")
+    def write(src: str) -> None:
         ev = load_table(spark, sf_dir, "events").select(*cols)
         bounds = ev.select(
             F.expr(
@@ -3647,7 +3641,10 @@ def _ordered_event_chunks(
             chunk.coalesce(1).write.parquet(
                 _os.path.join(src, "in", f"chunk-{i:03d}")
             )
-        _STREAM_SESS_DIRS[key] = src
+
+    src = _fixture_dir(
+        spark, (sf_dir, "ordered_events", cols), "bfls_stream_ord_", write
+    )
     return _os.path.join(src, "in", "*")
 
 
@@ -3823,9 +3820,6 @@ FROM c JOIN p ON c.user_id = p.user_id
 """
 
 
-_STREAM_DOC_DIRS: dict[tuple, str] = {}
-
-
 def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful streaming dedup as a driver-checked query: the documents
     table is drained through a multi-file stream (maxFilesPerTrigger=1
@@ -3837,14 +3831,13 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bulkfhirloader_spark.streaming.stateful import streaming_exact_dedup
 
     global _STREAM_Q_SEQ
-    key = (spark.sparkContext.applicationId, sf_dir)
-    src = _STREAM_DOC_DIRS.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="bfls_stream_doc_")
+
+    def write(src: str) -> None:
         load_table(spark, sf_dir, "documents").select("doc_id", "text").repartition(
             3
         ).write.mode("overwrite").parquet(_os.path.join(src, "in"))
-        _STREAM_DOC_DIRS[key] = src
+
+    src = _fixture_dir(spark, (sf_dir, "stream_doc"), "bfls_stream_doc_", write)
     in_dir = _os.path.join(src, "in")
     schema = spark.read.parquet(in_dir).schema
     _STREAM_Q_SEQ += 1
@@ -3889,14 +3882,13 @@ def stream_near_dup_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     global _STREAM_Q_SEQ
     _utc(spark)
     docs = load_table(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, sf_dir, "admit")
-    src = _STREAM_DOC_DIRS.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="bfls_stream_admit_")
+
+    def write(src: str) -> None:
         docs.where(F.col("doc_id") % 2 == 1).select("doc_id", "text").repartition(
             3
         ).write.mode("overwrite").parquet(_os.path.join(src, "in"))
-        _STREAM_DOC_DIRS[key] = src
+
+    src = _fixture_dir(spark, (sf_dir, "admit"), "bfls_stream_admit_", write)
     in_dir = _os.path.join(src, "in")
     existing = docs.where(F.col("doc_id") % 2 == 0).select("doc_id", "text")
     schema = spark.read.parquet(in_dir).schema
@@ -3966,10 +3958,8 @@ def stream_near_dup_admit_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     global _STREAM_Q_SEQ
     _utc(spark)
     docs = load_table(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, sf_dir, "admit_stored")
-    src = _STREAM_DOC_DIRS.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="bfls_stream_admit_store_")
+
+    def write(src: str) -> None:
         docs.where(F.col("doc_id") % 2 == 1).select("doc_id", "text").repartition(
             3
         ).write.mode("overwrite").parquet(_os.path.join(src, "in"))
@@ -3977,7 +3967,10 @@ def stream_near_dup_admit_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs.where(F.col("doc_id") % 2 == 0).select("doc_id", "text"),
             _os.path.join(src, "bandstore"),
         )
-        _STREAM_DOC_DIRS[key] = src
+
+    src = _fixture_dir(
+        spark, (sf_dir, "admit_stored"), "bfls_stream_admit_store_", write
+    )
     in_dir = _os.path.join(src, "in")
     schema = spark.read.parquet(in_dir).schema
     _STREAM_Q_SEQ += 1
@@ -4024,10 +4017,8 @@ def stream_near_dup_admit_bucketed(spark: SparkSession, sf_dir: str) -> DataFram
     global _STREAM_Q_SEQ
     _utc(spark)
     docs = load_table(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, sf_dir, "admit_bucketed")
-    src = _STREAM_DOC_DIRS.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="bfls_stream_admit_bkt_")
+
+    def write(src: str) -> None:
         docs.where(F.col("doc_id") % 2 == 1).select("doc_id", "text").repartition(
             3
         ).write.mode("overwrite").parquet(_os.path.join(src, "in"))
@@ -4036,7 +4027,10 @@ def stream_near_dup_admit_bucketed(spark: SparkSession, sf_dir: str) -> DataFram
             _os.path.join(src, "bandstore"),
             num_buckets=8,
         )
-        _STREAM_DOC_DIRS[key] = src
+
+    src = _fixture_dir(
+        spark, (sf_dir, "admit_bucketed"), "bfls_stream_admit_bkt_", write
+    )
     in_dir = _os.path.join(src, "in")
     schema = spark.read.parquet(in_dir).schema
     _STREAM_Q_SEQ += 1
@@ -4061,6 +4055,25 @@ def stream_near_dup_admit_bucketed(spark: SparkSession, sf_dir: str) -> DataFram
     return spark.table(qname).select("doc_id").distinct()
 
 
+def _semantic_admit_inputs(spark: SparkSession, sf_dir: str):
+    """The semantic gate rows' shared inputs: the stream source dir (odd
+    vec_ids as 3 parquet files under ``in``, written once per (session,
+    sf_dir)), the static even-id corpus, and the frozen k=8, n_iter=2
+    fit."""
+    import os as _os
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    src = _fixture_dir(
+        spark, (sf_dir, "semantic_admit"), "bfls_stream_sem_",
+        lambda p: emb.where(F.col("vec_id") % 2 == 1).select(
+            "vec_id", "embedding"
+        ).repartition(3).write.mode("overwrite").parquet(_os.path.join(p, "in")),
+    )
+    existing = emb.where(F.col("vec_id") % 2 == 0).select("vec_id", "embedding")
+    cents = similarity.kmeans_centroids(emb, k=8, n_iter=2)
+    return src, existing, cents
+
+
 def stream_semantic_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming semantic (embedding) admission gate
     (streaming.joins.stream_semantic_admission): odd vec_ids replayed as a
@@ -4077,18 +4090,8 @@ def stream_semantic_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     global _STREAM_Q_SEQ
     _utc(spark)
-    emb = load_table(spark, sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir, "semantic_admit")
-    src = _STREAM_DOC_DIRS.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="bfls_stream_sem_")
-        emb.where(F.col("vec_id") % 2 == 1).select(
-            "vec_id", "embedding"
-        ).repartition(3).write.mode("overwrite").parquet(_os.path.join(src, "in"))
-        _STREAM_DOC_DIRS[key] = src
+    src, existing, cents = _semantic_admit_inputs(spark, sf_dir)
     in_dir = _os.path.join(src, "in")
-    existing = emb.where(F.col("vec_id") % 2 == 0).select("vec_id", "embedding")
-    cents = similarity.kmeans_centroids(emb, k=8, n_iter=2)
     schema = spark.read.parquet(in_dir).schema
     _STREAM_Q_SEQ += 1
     qname = f"bfls_stream_sem_{_STREAM_Q_SEQ}"
@@ -4126,18 +4129,8 @@ def stream_semantic_admit_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     global _STREAM_Q_SEQ
     _utc(spark)
-    emb = load_table(spark, sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir, "semantic_admit")
-    src = _STREAM_DOC_DIRS.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="bfls_stream_sem_")
-        emb.where(F.col("vec_id") % 2 == 1).select(
-            "vec_id", "embedding"
-        ).repartition(3).write.mode("overwrite").parquet(_os.path.join(src, "in"))
-        _STREAM_DOC_DIRS[key] = src
+    src, existing, cents = _semantic_admit_inputs(spark, sf_dir)
     in_dir = _os.path.join(src, "in")
-    existing = emb.where(F.col("vec_id") % 2 == 0).select("vec_id", "embedding")
-    cents = similarity.kmeans_centroids(emb, k=8, n_iter=2)
     schema = spark.read.parquet(in_dir).schema
     _STREAM_Q_SEQ += 1
     qname = f"bfls_stream_sem_blas_{_STREAM_Q_SEQ}"
@@ -4196,10 +4189,8 @@ def stream_semantic_admit_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     global _STREAM_Q_SEQ
     _utc(spark)
     emb = load_table(spark, sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir, "semantic_admit_stored")
-    src = _STREAM_DOC_DIRS.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="bfls_stream_sem_store_")
+
+    def write(src: str) -> None:
         emb.where(F.col("vec_id") % 2 == 1).select(
             "vec_id", "embedding"
         ).repartition(3).write.mode("overwrite").parquet(_os.path.join(src, "in"))
@@ -4210,7 +4201,10 @@ def stream_semantic_admit_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
             cents,
             num_buckets=8,
         )
-        _STREAM_DOC_DIRS[key] = src
+
+    src = _fixture_dir(
+        spark, (sf_dir, "semantic_admit_stored"), "bfls_stream_sem_store_", write
+    )
     in_dir = _os.path.join(src, "in")
     schema = spark.read.parquet(in_dir).schema
     _STREAM_Q_SEQ += 1
@@ -4247,10 +4241,8 @@ def _winnow_admit_run(spark: SparkSession, sf_dir: str, tag: str, **gate_kw):
     global _STREAM_Q_SEQ
     _utc(spark)
     docs = load_table(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, sf_dir, f"winnow_admit_{tag}")
-    src = _STREAM_DOC_DIRS.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="bfls_stream_winnow_")
+
+    def write(src: str) -> None:
         docs.where(F.col("doc_id") % 2 == 1).select("doc_id", "text").repartition(
             3
         ).write.mode("overwrite").parquet(_os.path.join(src, "in"))
@@ -4262,7 +4254,10 @@ def _winnow_admit_run(spark: SparkSession, sf_dir: str, tag: str, **gate_kw):
                 _os.path.join(src, "wstore"),
                 num_buckets=8,
             )
-        _STREAM_DOC_DIRS[key] = src
+
+    src = _fixture_dir(
+        spark, (sf_dir, f"winnow_admit_{tag}"), "bfls_stream_winnow_", write
+    )
     in_dir = _os.path.join(src, "in")
     if "winnow_store" in gate_kw:
         gate_kw["winnow_store"] = _os.path.join(src, "wstore")
@@ -4351,14 +4346,13 @@ def stream_full_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.join(
         emb, docs["doc_id"] == emb["vec_id"]
     ).select("doc_id", "text", "embedding")
-    key = (spark.sparkContext.applicationId, sf_dir, "full_admission")
-    src = _STREAM_DOC_DIRS.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="bfls_stream_full_")
+
+    def write(src: str) -> None:
         base.where(F.col("doc_id") % 2 == 1).repartition(3).write.mode(
             "overwrite"
         ).parquet(_os.path.join(src, "in"))
-        _STREAM_DOC_DIRS[key] = src
+
+    src = _fixture_dir(spark, (sf_dir, "full_admission"), "bfls_stream_full_", write)
     in_dir = _os.path.join(src, "in")
     even = base.where(F.col("doc_id") % 2 == 0)
     existing_docs = even.select("doc_id", "text")
@@ -4410,10 +4404,8 @@ def stream_full_admission_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.join(
         emb, docs["doc_id"] == emb["vec_id"]
     ).select("doc_id", "text", "embedding")
-    key = (spark.sparkContext.applicationId, sf_dir, "full_admission_stored")
-    src = _STREAM_DOC_DIRS.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="bfls_stream_full_store_")
+
+    def write(src: str) -> None:
         base.where(F.col("doc_id") % 2 == 1).repartition(3).write.mode(
             "overwrite"
         ).parquet(_os.path.join(src, "in"))
@@ -4435,7 +4427,10 @@ def stream_full_admission_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
             cents,
             num_buckets=8,
         )
-        _STREAM_DOC_DIRS[key] = src
+
+    src = _fixture_dir(
+        spark, (sf_dir, "full_admission_stored"), "bfls_stream_full_store_", write
+    )
     in_dir = _os.path.join(src, "in")
     schema = spark.read.parquet(in_dir).schema
     _STREAM_Q_SEQ += 1
@@ -4546,10 +4541,8 @@ def stream_mm_image_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     global _STREAM_Q_SEQ
     _utc(spark)
     docs = load_table(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, sf_dir, "mm_image_admit")
-    src = _STREAM_DOC_DIRS.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="bfls_stream_img_")
+
+    def write(src: str) -> None:
         pert = multimodal.synthetic_ppm_media(
             docs.where(F.col("doc_id") % 40 == 0).select(
                 F.col("doc_id").alias("media_id")
@@ -4564,7 +4557,8 @@ def stream_mm_image_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
         pert.unionByName(novel).repartition(3).write.mode("overwrite").parquet(
             _os.path.join(src, "in")
         )
-        _STREAM_DOC_DIRS[key] = src
+
+    src = _fixture_dir(spark, (sf_dir, "mm_image_admit"), "bfls_stream_img_", write)
     in_dir = _os.path.join(src, "in")
     static_hashes = multimodal.image_ahash(
         multimodal.synthetic_ppm_media(
@@ -4615,10 +4609,8 @@ def stream_mm_image_admit_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     global _STREAM_Q_SEQ
     _utc(spark)
     docs = load_table(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, sf_dir, "mm_image_admit_stored")
-    src = _STREAM_DOC_DIRS.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="bfls_stream_img_store_")
+
+    def write(src: str) -> None:
         pert = multimodal.synthetic_ppm_media(
             docs.where(F.col("doc_id") % 40 == 0).select(
                 F.col("doc_id").alias("media_id")
@@ -4644,7 +4636,10 @@ def stream_mm_image_admit_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
             _os.path.join(src, "imgstore"),
             num_buckets=8,
         )
-        _STREAM_DOC_DIRS[key] = src
+
+    src = _fixture_dir(
+        spark, (sf_dir, "mm_image_admit_stored"), "bfls_stream_img_store_", write
+    )
     in_dir = _os.path.join(src, "in")
     schema = spark.read.parquet(in_dir).schema
     _STREAM_Q_SEQ += 1
@@ -5289,9 +5284,6 @@ WHERE l_orderkey IN (
 """
 
 
-_JSONL_DIRS: dict[tuple[str, str], str] = {}
-
-
 def src_jsonl_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSONL corpus round-trip (sources.corpus): the documents table is
     written as 4 JSON-Lines shards (the format LLM corpora actually ship
@@ -5301,13 +5293,9 @@ def src_jsonl_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     fidelity, not just self-consistency."""
     from bulkfhirloader_spark.sources import corpus
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _JSONL_DIRS.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="bfls_jsonl_") + "/docs"
-        docs = load_table(spark, sf_dir, "documents")
-        corpus.write_jsonl(docs, path, num_shards=4)
-        _JSONL_DIRS[key] = path
+    path = _roundtrip_dir(
+        spark, sf_dir, "jsonl", lambda df, p: corpus.write_jsonl(df, p, num_shards=4)
+    )
     back = corpus.read_jsonl(spark, path)
     return back.select(
         "doc_id",
@@ -5560,7 +5548,7 @@ GROUP BY 1
 
 
 def _partitioned_store_day(spark: SparkSession, sf_dir: str, day: str) -> DataFrame:
-    """Build (once per session+sf_dir, memoized in _SRC_FMT_DIRS) the
+    """Build (once per session+sf_dir, memoized in _FIXTURE_DIRS) the
     Hive-partitioned event store and read back ONE pruned day.  Single
     source of truth for the store geometry shared by src_partitioned_events
     and its _diag twin — whichever runs first writes the store BOTH hash
@@ -5568,12 +5556,13 @@ def _partitioned_store_day(spark: SparkSession, sf_dir: str, day: str) -> DataFr
     from bulkfhirloader_spark.sources import partitioned
 
     _utc(spark)
-    key = (spark.sparkContext.applicationId, sf_dir, "events_part")
-    path = _SRC_FMT_DIRS.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="bfls_evpart_") + "/events"
-        partitioned.write_events_partitioned(load_table(spark, sf_dir, "events"), path)
-        _SRC_FMT_DIRS[key] = path
+    path = _fixture_dir(
+        spark, (sf_dir, "events_part"), "bfls_evpart_",
+        lambda p: partitioned.write_events_partitioned(
+            load_table(spark, sf_dir, "events"), p
+        ),
+        "/events",
+    )
     return partitioned.read_events_day(spark, path, day)
 
 
@@ -5591,34 +5580,27 @@ def _compacted_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bulkfhirloader_spark.sources import partitioned
 
     _utc(spark)
-    key = (spark.sparkContext.applicationId, sf_dir, "events_compacted")
-    out = _SRC_FMT_DIRS.get(key)
-    if out is None:
-        root = tempfile.mkdtemp(prefix="bfls_evcomp_")
+
+    def write(root: str) -> None:
         src = _os.path.join(root, "shattered")
         ev = load_table(spark, sf_dir, "events")
         ev.repartition(16).withColumn(
             "event_day", partitioned.epoch_day("ts")
         ).write.partitionBy("event_day").parquet(src)
-        out = _os.path.join(root, "compacted")
         partitioned.compact_store(
-            spark, src, out, target_rows_per_file=2_000, partition_col="event_day"
+            spark, src, _os.path.join(root, "compacted"),
+            target_rows_per_file=2_000, partition_col="event_day",
         )
-        _SRC_FMT_DIRS[key] = out
-    return spark.read.parquet(out)
 
-
-_SRC_FMT_DIRS: dict[tuple[str, str, str], str] = {}
+    root = _fixture_dir(spark, (sf_dir, "events_compacted"), "bfls_evcomp_", write)
+    return spark.read.parquet(_os.path.join(root, "compacted"))
 
 
 def _roundtrip_dir(spark: SparkSession, sf_dir: str, fmt: str, write) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir, fmt)
-    path = _SRC_FMT_DIRS.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix=f"bfls_{fmt}_") + "/docs"
-        write(load_table(spark, sf_dir, "documents"), path)
-        _SRC_FMT_DIRS[key] = path
-    return path
+    return _fixture_dir(
+        spark, (sf_dir, fmt), f"bfls_{fmt}_",
+        lambda p: write(load_table(spark, sf_dir, "documents"), p), "/docs",
+    )
 
 
 def src_csv_documents(spark: SparkSession, sf_dir: str) -> DataFrame:

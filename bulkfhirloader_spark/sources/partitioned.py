@@ -21,12 +21,9 @@ Two hazards the API here makes explicit:
 
 from __future__ import annotations
 
-import datetime as _dt
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_EPOCH = _dt.date(1970, 1, 1)
 _MICROS_PER_DAY = 86_400_000_000
 
 
@@ -47,11 +44,6 @@ def epoch_day(ts_col: str = "ts"):
 def epoch_day_to_date(day_col):
     """Integer epoch-day -> DATE, tz-free (DateType is a day ordinal)."""
     return F.date_from_unix_date(day_col)
-
-
-def day_str_to_epoch_day(day: str) -> int:
-    """Driver-side 'YYYY-MM-DD' -> integer epoch-day (pure calendar math)."""
-    return (_dt.date.fromisoformat(day) - _EPOCH).days
 
 
 def write_events_partitioned(

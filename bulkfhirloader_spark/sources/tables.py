@@ -10,42 +10,32 @@ broadcast it — small dims never shuffle.
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bulkfhirloader_spark import reuse
 from bulkfhirloader_spark.schemas import TESTDATA_TABLES
 
 
 # DataFrame handles are immutable lazy plans — reusing one is the engine's
 # catalog cache (a metastore's job): it skips the per-call file listing +
 # parquet footer/schema read, which measures 0.1-0.2 s of driver time per
-# table per query.  Keyed by the session OBJECT in a WeakKeyDictionary —
-# not id(spark), whose value is reused after garbage collection and could
-# alias a new session to a stopped one's dead handles; dead-session entries
-# here are evicted automatically when the session is collected.
-_table_cache: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
+# table per query.  One entry per (session, sf_dir, table); plain read
+# handles, so nothing to release on eviction.
+_TABLES = reuse.Memo(64, release=None)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """One driver-generated parquet table (TESTDATA.md)."""
-    per_session = _table_cache.get(spark)
-    if per_session is None:
-        per_session = {}
-        _table_cache[spark] = per_session
-    key = (sf_dir, name)
-    df = per_session.get(key)
-    if df is None:
+
+    def read() -> DataFrame:
         if name == "events":
-            df = load_events(spark, os.path.join(sf_dir, "events.parquet"))
-        else:
-            df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        per_session[key] = df
-    return df
+            return load_events(spark, os.path.join(sf_dir, "events.parquet"))
+        return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+    return _TABLES.get_or_build(spark, (sf_dir, name), read)
 
 
 def load_events(spark: SparkSession, path: str) -> DataFrame:

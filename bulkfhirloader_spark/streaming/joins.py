@@ -30,6 +30,7 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bulkfhirloader_spark import reuse
 from bulkfhirloader_spark.fsutil import fs_path_exists
 from bulkfhirloader_spark.sources.stores import (
     BANDED,
@@ -84,26 +85,19 @@ def stream_interval_join(
     return wl.join(wr, cond, "inner").drop("_r_key")
 
 
-def _evict(ledger: list) -> None:
-    """Unpersist the static side(s) a ``ledger`` holds: one live gate per
-    session per gate kind (see _gate)."""
-    while ledger:
-        ledger.pop().unpersist()
-
-
 def _cached(ledger: list, df: DataFrame, bucketed: bool, *keys: str) -> DataFrame:
-    """A static side persisted for repeat micro-batches and recorded in
-    ``ledger``; unless ``bucketed``, cached already partitioned and sorted
-    on the join ``keys`` (the static-side cache contract, see _gate)."""
+    """A static side persisted for repeat micro-batches and kept in
+    ``ledger`` (reuse.keep); unless ``bucketed``, cached already
+    partitioned and sorted on the join ``keys`` (the static-side cache
+    contract, see _gate)."""
     if not bucketed:
         df = df.repartition(*[F.col(k) for k in keys]).sortWithinPartitions(*keys)
-    df = df.persist()
-    ledger.append(df)
-    return df
+    return reuse.keep(ledger, df.persist())
 
 
 # One ledger per gate kind, plus the IVF prober's: each holds the cached
-# static side(s) of the kind's one live gate (_evict, _gate).
+# static side(s) of the kind's one live gate, released by reuse.evict when
+# the next gate of the kind is built (_gate).
 _live_static_band_caches: list = []
 _live_static_sem_caches: list = []
 _live_static_winnow_caches: list = []
@@ -193,15 +187,16 @@ def _gate(ledger: list, sc: _Screen, id_col: str, all_rows=None) -> DataFrame:
     batches; a cache dies with the session, the bucketed layout does not.
     A stored static side is a snapshot taken at gate construction.
 
-    ONE LIVE GATE PER SESSION per gate kind, a deliberate memory bound:
-    each kind has its own ledger and a new gate evicts the previous one of
-    its kind only, after its arguments validated (the screens raise before
-    this runs), so a failed construction evicts nothing.  A running gate
-    whose cache was evicted still admits correctly but re-derives or
-    re-scans its static side every micro-batch.  Run concurrent gates of
-    one kind from separate sessions, or over bucketed stores, where
+    ONE LIVE GATE PER DRIVER per gate kind, a deliberate memory bound:
+    each kind has its own module-level ledger, and a new gate releases the
+    previous one of its kind only (reuse.evict, under the shared reuse
+    lock), after its arguments validated (the screens raise before this
+    runs), so a failed construction evicts nothing.  A running gate whose
+    cache was evicted still admits correctly but re-derives or re-scans
+    its static side every micro-batch.  Run concurrent gates of one kind
+    from separate driver processes, or over bucketed stores, where
     eviction costs only the re-scan."""
-    _evict(ledger)
+    reuse.evict(ledger)
     surviving = _probe(ledger, sc, "left_anti")
     if all_rows is None:
         return surviving
@@ -349,7 +344,7 @@ def stream_near_dup_admission(
 
     ``banded_store=<path>`` (banded_signature_store_write) makes the
     static side a scan of the stored pre-banded table instead of
-    re-deriving it from ``existing``'s text (``existing`` may then be
+    re-deriving it from ``existing``'s text (``existing`` must then be
     omitted); admissions are identical either way (pytest-pinned).
     New-new (intra-stream) near-dup admission needs cross-batch signature
     state — that is the batch operator's clustering job; compose with
@@ -360,7 +355,7 @@ def stream_near_dup_admission(
     sf0.001/0.01/0.1)."""
     sc = _minhash_screen(
         stream_docs, existing, banded_store,
-        ("stream_near_dup_admission", "an `existing` corpus", False),
+        ("stream_near_dup_admission", "an `existing` corpus", True),
         id_col, text_col, num_hashes, bands, shingle_words, threshold,
     )
     return _gate(_live_static_band_caches, sc, id_col, F.lit(bands))
@@ -770,7 +765,7 @@ def stream_sim_topk(
         lists = spark.read.parquet(f"{index_path}/lists.parquet").select(
             F.col(cand_id), F.col(cand_vec), F.col("_cn"), F.col("_cluster")
         )
-    _evict(_live_static_ivf_caches)
+    reuse.evict(_live_static_ivf_caches)
     lists = _cached(_live_static_ivf_caches, lists, bucketed_lists, "_cluster")
     q_n = stream_queries.withColumn(
         "_qn", l2_norm(F.col(query_vec))
@@ -1260,7 +1255,7 @@ def stream_admission_pipeline(
         ),
     )
     ledger = _live_static_pipeline_caches
-    _evict(ledger)
+    reuse.evict(ledger)
     ranked = stream_docs.select(F.col(id_col), F.lit(len(screens)).alias("_rank"))
     for rank, sc in enumerate(screens):
         hits = _probe(ledger, sc, "left_semi")

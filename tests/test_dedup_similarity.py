@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_DIR
+from bulkfhirloader_spark import reuse
 from bulkfhirloader_spark.operators import dedup, similarity
 
 
@@ -257,7 +258,7 @@ def test_capped_band_table_computed_once(spark):
     rows += [(100, f"{pair_body} terminal"), (101, f"{pair_body} lateral")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    ledger_before = len(dedup._live_candidate_checkpoints)
+    ledger_before = len(reuse._live_candidate_checkpoints)
     capped = dedup.minhash_near_dup_pairs(docs, threshold=0.5, max_bucket_size=10)
     plan = capped._jdf.queryExecution().executedPlan().toString()
     # r17 (verdict #3): the cap chain runs once behind a ledgered
@@ -267,7 +268,7 @@ def test_capped_band_table_computed_once(spark):
     assert plan.count("InMemoryTableScan") >= 2, plan
     first_imr = plan.find("InMemoryRelation")
     assert first_imr != -1 and "Window" not in plan[:first_imr], plan
-    assert len(dedup._live_candidate_checkpoints) == ledger_before + 1
+    assert len(reuse._live_candidate_checkpoints) == ledger_before + 1
     got = sorted((r["id_a"], r["id_b"]) for r in capped.collect())
 
     # inline reference shape (share off), same inputs
@@ -1038,8 +1039,10 @@ def test_label_outliers_flags_planted_outlier(spark):
 def test_memo_hygiene_dead_session_purge_and_collision_guard(spark):
     """Round-6 advisor findings on the persisted-result memos: (a) entries
     from a stopped session must be purged before LRU eviction ever calls
-    unpersist on a dead handle; (b) a semanticHash key collision must be
-    DETECTED via sameSemantics and rebuilt, never served."""
+    unpersist on a dead handle (every memo instance:
+    test_reuse.test_memo_purges_stopped_sessions_bounds_and_races); (b) a
+    semanticHash key collision must be DETECTED via sameSemantics and
+    rebuilt, never served."""
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma delta"), (2, "epsilon zeta eta theta")],
         "doc_id long, text string",
@@ -1050,22 +1053,12 @@ def test_memo_hygiene_dead_session_purge_and_collision_guard(spark):
     )
     dedup._SIG_MEMO.clear()
     sigs = dedup.cached_minhash_signatures(docs)
-    (key,) = dedup._SIG_MEMO
-    app_id = key[0]
-
-    # (a) plant a dead-session entry whose unpersist would raise; eviction
-    # must purge it by app_id without touching the handle
-    class _Boom:
-        def unpersist(self):  # pragma: no cover - purged, never called
-            raise RuntimeError("dead context")
-
-    dedup._SIG_MEMO[("dead-app", 0, "doc_id", "text", 16, 3)] = ([docs], _Boom())
-    dedup._memo_evict(dedup._SIG_MEMO, dedup._SIG_MEMO_MAX, app_id)
-    assert all(k[0] == app_id for k in dedup._SIG_MEMO)
+    ((owner, key),) = dedup._SIG_MEMO._entries
+    assert owner is spark
 
     # (b) forge a collision: same key, but the stored input is a DIFFERENT
     # plan — the hit must be rejected (sameSemantics) and recomputed
-    dedup._SIG_MEMO[key] = ([other], sigs)
+    dedup._SIG_MEMO._entries[(owner, key)] = ([other], sigs)
     rebuilt = dedup.cached_minhash_signatures(docs)
     got = {r["doc_id"] for r in rebuilt.collect()}
     assert got == {1, 2}
@@ -1127,7 +1120,7 @@ def test_memo_thread_safety_under_concurrent_callers(spark):
     for t in threads:
         t.join()
     assert not errors, errors
-    assert len(dedup._SIG_MEMO) <= dedup._SIG_MEMO_MAX
+    assert len(dedup._SIG_MEMO) <= dedup._SIG_MEMO.maxsize
 
 
 def test_ledger_scoped_release_spares_concurrent_entries(spark):
@@ -1137,34 +1130,32 @@ def test_ledger_scoped_release_spares_concurrent_entries(spark):
     unrecomputable).  The capture-frame drain releases exactly the
     entries this thread's own nested call created; a foreign entry
     ledgered mid-window must survive and stay collectable."""
-    from bulkfhirloader_spark.operators import dedup
-
-    dedup.release_candidate_checkpoints()
+    reuse.release_candidate_checkpoints()
     own = spark.createDataFrame([(1, "a")], "id long, v string")
     foreign = spark.createDataFrame([(2, "b")], "id long, v string")
-    with dedup._ledger_capture_frame() as frame:
-        mine = dedup._ledger_lazy_checkpoint(own)
+    with reuse.capture_frame() as frame:
+        mine = reuse.lazy_checkpoint(own)
         # simulate another driver thread ledgering in the window: no
         # frame is active in THAT thread, so its entry is not captured
         import threading
 
         t = threading.Thread(
-            target=lambda: dedup._ledger_append(
+            target=lambda: reuse.ledger_append(
                 foreign.localCheckpoint(eager=False)
             )
         )
         t.start()
         t.join()
     assert frame == [mine]
-    dedup._release_captured_checkpoints(frame)
+    reuse.release_captured(frame)
     assert frame == []
     # the foreign entry is still ledgered and its checkpoint still works
-    assert len(dedup._live_candidate_checkpoints) == 1
-    assert dedup._live_candidate_checkpoints[0].collect() == [(2, "b")]
+    assert len(reuse._live_candidate_checkpoints) == 1
+    assert reuse._live_candidate_checkpoints[0].collect() == [(2, "b")]
     # double-release of already-drained entries is a no-op
     captured = [mine]
-    dedup._release_captured_checkpoints(captured)
-    assert dedup.release_candidate_checkpoints() == 1
+    reuse.release_captured(captured)
+    assert reuse.release_candidate_checkpoints() == 1
 
 
 def test_simhash_production_geometry_pigeonhole_guarantee(spark):
@@ -2081,7 +2072,7 @@ def test_kmeans_chained_releases_iteration_checkpoints(two_lobes, spark):
     cents.count()
     # seed + 3 iterations = 4 checkpoints taken; all but the last freed
     assert stored_rdds() <= before + 1
-    sim._release_local_checkpoint(cents)
+    reuse.release(cents)
     assert stored_rdds() <= before
 
 
@@ -2177,8 +2168,8 @@ def test_pairwise_verify_candidate_id_scan_pushdown(spark, tmp_path):
     )
     assert expect, "fixture must produce pairs"
 
-    real_ckpt = dedup._ledger_lazy_checkpoint
-    dedup._ledger_lazy_checkpoint = lambda df: df
+    real_ckpt = reuse.lazy_checkpoint
+    reuse.lazy_checkpoint = lambda df: df
     try:
         j = dedup.ngram_jaccard_pairs(docs, candidates=cand, threshold=0.05)
         plan = j._jdf.queryExecution().executedPlan().toString()
@@ -2207,7 +2198,7 @@ def test_pairwise_verify_candidate_id_scan_pushdown(spark, tmp_path):
         finally:
             dedup._VERIFY_ID_PUSHDOWN_MAX = old_max
     finally:
-        dedup._ledger_lazy_checkpoint = real_ckpt
+        reuse.lazy_checkpoint = real_ckpt
 
     # real path (checkpoint on): same values through the pushdown tier
     j_real = dedup.ngram_jaccard_pairs(docs, candidates=cand, threshold=0.05)
@@ -2267,7 +2258,7 @@ def test_candidate_checkpoint_ledger_and_cc_release(spark):
     cand = spark.createDataFrame(
         [(0, 1), (2, 3)], "id_a long, id_b long"
     )
-    base_ledger = len(dedup._live_candidate_checkpoints)
+    base_ledger = len(reuse._live_candidate_checkpoints)
     j = dedup.ngram_jaccard_pairs(docs, candidates=cand)
     c = dedup.ngram_containment_pairs(docs, candidates=cand)
     w = T.winnow_verified(docs, candidates=cand)
@@ -2278,12 +2269,12 @@ def test_candidate_checkpoint_ledger_and_cc_release(spark):
     # winnow_verified still ledger only their candidate sets (winnow's
     # gram table is NOT contractually small — see the note in
     # winnow_verified) → 2 + 1 + 1 = 4
-    assert len(dedup._live_candidate_checkpoints) == base_ledger + 4
+    assert len(reuse._live_candidate_checkpoints) == base_ledger + 4
     before = stored_rdds()
     released = dedup.release_candidate_checkpoints()
     assert released == base_ledger + 4
     assert stored_rdds() <= before
-    assert not dedup._live_candidate_checkpoints
+    assert not reuse._live_candidate_checkpoints
 
     # (2) the distributed CC loop (local_threshold=0 forces it): a chain
     # graph needs several rounds; superseded rounds must not accumulate

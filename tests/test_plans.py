@@ -497,8 +497,7 @@ def test_incremental_admission_small_tier_returns_scan_filter(spark):
     # drop any admitted-set memo a prior test left: a warm hit returns
     # the (also fine) one-semi-join read plan; the pin targets the cold
     # small-tier shape
-    with dedup_ops._MEMO_LOCK:
-        dedup_ops._ADMIT_MEMO.clear()
+    dedup_ops._ADMIT_MEMO.clear()
     fn, _ = registry.REGISTRY["dedup_incremental_admission"]
     plan = _plan(fn(spark, SF_DIR))
     assert "Exchange" not in plan and "Join" not in plan

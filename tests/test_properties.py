@@ -510,8 +510,7 @@ def test_admission_local_tier_matches_distributed_on_random_corpora(spark):
     from bulkfhirloader_spark.operators import dedup
 
     def run(docs, lt):
-        with dedup._MEMO_LOCK:
-            dedup._ADMIT_MEMO.clear()
+        dedup._ADMIT_MEMO.clear()
         existing = docs.where("doc_id % 2 = 0")
         new_batch = docs.where("doc_id % 2 = 1 or doc_id is null")
         return sorted(
@@ -744,6 +743,7 @@ def test_apply_bpe_merges_roundtrip_and_chunked_checkpoints(spark):
     checkpoint path (checkpoint_every=1) segments identically and its
     final cut is drainable via the candidate-checkpoint ledger; a plain
     [(left, right)] list is accepted."""
+    from bulkfhirloader_spark import reuse
     from bulkfhirloader_spark.operators import dedup, text as T
 
     token_docs = [
@@ -784,14 +784,14 @@ def test_apply_bpe_merges_roundtrip_and_chunked_checkpoints(spark):
     }
     assert got == expected
     dedup.release_candidate_checkpoints()
-    base_ledger = len(dedup._live_candidate_checkpoints)
+    base_ledger = len(reuse._live_candidate_checkpoints)
     got_chunked = {
         r["doc_id"]: list(r["syms"])
         for r in T.apply_bpe_merges(docs, seq, checkpoint_every=1).collect()
     }
     assert got_chunked == expected
     # intermediate cuts released in-loop; the final cut is ledgered
-    assert len(dedup._live_candidate_checkpoints) == base_ledger + 1
+    assert len(reuse._live_candidate_checkpoints) == base_ledger + 1
     assert dedup.release_candidate_checkpoints() == base_ledger + 1
 
 

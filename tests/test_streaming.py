@@ -579,6 +579,9 @@ def test_stream_near_dup_admission_from_banded_store(spark, tmp_path):
     # neither a corpus nor a store is an error
     with _pytest.raises(ValueError, match="existing"):
         stream_near_dup_admission(stream)
+    # both is an error too: the store carries its own static side
+    with _pytest.raises(ValueError, match="not both"):
+        stream_near_dup_admission(stream, existing, banded_store=store)
 
 
 def test_banded_store_data_without_meta_refuses_append(spark, tmp_path):

@@ -17,6 +17,7 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
+from bulkfhirloader_spark import reuse
 from bulkfhirloader_spark.queries import registry
 from bulkfhirloader_spark.sources import partitioned
 from bulkfhirloader_spark.sources.tables import load_table
@@ -55,7 +56,7 @@ def test_partitioned_events_hash_is_tz_free(spark, tz, monkeypatch):
     base = _rows(registry.src_partitioned_events(spark, SF_DIR))
     monkeypatch.setattr(registry, "_utc", lambda s: None)  # defeat the pin
     # fresh store so the write itself happens under the hostile tz
-    monkeypatch.setattr(registry, "_SRC_FMT_DIRS", {})
+    monkeypatch.setattr(registry, "_FIXTURE_DIRS", reuse.Memo(256, release=None))
     old = spark.conf.get("spark.sql.session.timeZone")
     try:
         spark.conf.set("spark.sql.session.timeZone", tz)
@@ -69,7 +70,7 @@ def test_partitioned_events_hash_is_tz_free(spark, tz, monkeypatch):
 def test_compacted_events_hash_is_tz_free(spark, tz, monkeypatch):
     base = _rows(registry.src_compacted_events(spark, SF_DIR))
     monkeypatch.setattr(registry, "_utc", lambda s: None)
-    monkeypatch.setattr(registry, "_SRC_FMT_DIRS", {})
+    monkeypatch.setattr(registry, "_FIXTURE_DIRS", reuse.Memo(256, release=None))
     old = spark.conf.get("spark.sql.session.timeZone")
     try:
         spark.conf.set("spark.sql.session.timeZone", tz)
@@ -89,7 +90,6 @@ def test_read_events_day_prunes_with_epoch_day_derivation(spark, tmp_path):
     plan = day._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "event_date" in plan
     # pruned read == epoch-day filter over the original
-    want = events.where(
-        partitioned.epoch_day("ts") == partitioned.day_str_to_epoch_day("2024-01-03")
-    ).count()
+    day_no = (datetime.date(2024, 1, 3) - datetime.date(1970, 1, 1)).days
+    want = events.where(partitioned.epoch_day("ts") == day_no).count()
     assert day.count() == want
