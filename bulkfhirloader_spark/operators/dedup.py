@@ -49,10 +49,11 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     return df
 
 
-# Persisted-result memos: one entry per (session, input plan(s), params),
-# so repeated dedup calls over one corpus reuse ONE materialized cache
-# instead of a release-and-recompute cycle per call (reuse.Memo: bounded
-# LRU, sameSemantics-confirmed hits, stopped sessions purged first).
+# Persisted-result memos: one entry per (SparkContext, input plan(s),
+# params), so repeated dedup calls over one corpus reuse ONE materialized
+# cache instead of a release-and-recompute cycle per call (reuse.Memo:
+# bounded LRU, sameSemantics-confirmed hits, stopped contexts purged
+# first).
 _SIG_MEMO = reuse.Memo(4)
 _ADMIT_MEMO = reuse.Memo(4)
 # Max distinct band hashes pushed as a literal IN filter to the bucketed
@@ -236,9 +237,9 @@ def cached_minhash_signatures(
 ) -> DataFrame:
     """minhash_signatures with a persisted, memoized result.
 
-    Keyed by (session, canonical plan hash, column names, geometry); hits
-    are confirmed with sameSemantics against the stored input plan
-    (semanticHash is 32-bit — reuse.Memo).  Two calls over
+    Keyed by (SparkContext, canonical plan hash, column names,
+    geometry); hits are confirmed with sameSemantics against the stored
+    input plan (semanticHash is 32-bit — reuse.Memo).  Two calls over
     semantically identical corpora with the same geometry share one cached
     materialization.  LRU-bounded, dead-session entries purged first."""
     key = (docs.semanticHash(), id_col, text_col, num_hashes, shingle_words)

@@ -1432,11 +1432,14 @@ def _read_stored_centroids(spark, path: str) -> list[list[float]]:
     share, so append-side assignment and query-side probing can never
     disagree on the centroid order or dtype.
 
-    Memoized per (session, path, directory fingerprint).  The quantizer
-    is immutable for a given index build (appends touch only the lists
-    directory), so query-many serving was paying a file listing + a
-    one-job parquet read + collect of the SAME handful of rows on every
-    probe batch — measured 0.3-0.5 s of the per-call stored-probe cost.
+    Memoized per (SparkContext, path, directory fingerprint) — the
+    context, not the session, so the fresh session wrapper foreachBatch
+    hands each micro-batch (stream_sim_topk_batch_prober) hits too.  The
+    quantizer is immutable for a given index build (appends touch only
+    the lists directory), so query-many serving was paying a file listing
+    + a one-job parquet read + collect of the SAME handful of rows on
+    every probe batch — measured 0.3-0.5 s of the per-call stored-probe
+    cost.
     The fingerprint (name+size of the centroid part files — a
     listing-only call, no job) invalidates the memo the moment a rebuild
     rewrites the quantizer, so a stale cache cannot serve old

@@ -68,7 +68,7 @@ def _utc(spark: SparkSession) -> None:
 
 
 # Fixture dirs (stores, stream sources, format round-trips) written once per
-# (session, key) and reused by every later call: plain temp paths, so
+# (SparkContext, key) and reused by every later call: plain temp paths, so
 # nothing to release on eviction.
 _FIXTURE_DIRS = reuse.Memo(256, release=None)
 
@@ -78,7 +78,8 @@ def _fixture_dir(
     write: Callable[[str], None], sub: str = "",
 ) -> str:
     """A fresh ``prefix`` temp dir (plus ``sub``) that ``write(path)``
-    fills on the first call per (session, ``key``); later calls reuse it."""
+    fills on the first call per (SparkContext, ``key``); later calls
+    reuse it."""
 
     def build() -> str:
         path = tempfile.mkdtemp(prefix=prefix) + sub

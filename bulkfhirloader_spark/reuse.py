@@ -4,7 +4,7 @@ long-lived session, and how they let it go.
 - ``release(df)``: the one release path for anything the engine
   materialized — cache-manager blocks (``persist``) and the internal RDD
   blocks behind a local checkpoint.
-- ``Memo``: a bounded LRU of values built once per (session, key) — the
+- ``Memo``: a bounded LRU of values built once per (context, key) — the
   persisted dedup results, the stored IVF quantizer, ``load_table``'s
   DataFrame handles, the registry's fixture dirs.
 - the candidate-checkpoint ledger: materializations cut INSIDE a returned
@@ -16,7 +16,8 @@ long-lived session, and how they let it go.
 
 Every memo, ledger and drain takes the one ``LOCK``: callers may run on
 several driver threads, and an OrderedDict mutated mid-iteration raises.
-The lock covers Python state, not Spark jobs — builds run outside it, and
+The lock covers Python state only, never a Py4J call or a Spark job —
+builds, ``sameSemantics`` confirmations and releases run outside it, and
 a lost race only wastes a build.
 
 Not here: ``functions.binding.per_jvm``.  Its entries live as long as the
@@ -53,21 +54,22 @@ def release(df: DataFrame) -> None:
         pass
 
 
-def _stopped(spark) -> bool:
-    return spark.sparkContext._jsc is None
-
-
 class Memo:
-    """Bounded LRU of values built once per (session, key).
+    """Bounded LRU of values built once per (SparkContext, key).
 
-    Keyed by the SparkSession OBJECT plus the caller's key: no Py4J round
-    trip per lookup, and a session's entries cannot alias another's.  A
-    stopped session's entries are purged, never released, before any
-    insert or eviction — its handles are dead — so neither an entry nor
-    the session it pins outlives the next insert.  When ``inputs`` (the
-    DataFrames the key hashes) are given, a hit is confirmed with
-    ``sameSemantics`` on each (semanticHash is 32-bit); a rejected or
-    evicted value goes to ``release`` (None: values hold nothing)."""
+    Keyed by the SparkContext OBJECT plus the caller's key: every Python
+    wrapper of a context's sessions shares it (foreachBatch hands each
+    micro-batch a fresh SparkSession wrapper over the same context, and
+    those must hit), a lookup makes no Py4J round trip, and two contexts'
+    entries cannot alias.  A caller whose values belong to one session
+    puts the session in its key.  A stopped context's entries are purged,
+    never released, before any insert or eviction — their handles are
+    dead — so neither an entry nor the session its value pins outlives
+    the next insert.  When ``inputs`` (the DataFrames the key hashes) are
+    given, a hit is confirmed with ``sameSemantics`` on each (semanticHash
+    is 32-bit); a rejected or evicted value goes to ``release`` (None:
+    values hold nothing).  ``LOCK`` covers the dict only: the
+    sameSemantics confirmations and the releases run outside it."""
 
     def __init__(self, maxsize: int, release=release) -> None:
         self.maxsize = maxsize
@@ -87,38 +89,54 @@ class Memo:
             self._release(value)
 
     def get(self, spark, key, inputs=()):
-        """The confirmed value under ``key`` in ``spark``, or None."""
+        """The confirmed value under ``key`` in ``spark``'s context, or
+        None."""
+        k = (spark.sparkContext, key)
         with LOCK:
-            hit = self._entries.get((spark, key))
-            if hit is None:
-                return None
-            stored, value = hit
-            try:
-                if len(stored) == len(inputs) and all(
-                    a.sameSemantics(b) for a, b in zip(inputs, stored)
-                ):
-                    self._entries.move_to_end((spark, key))
-                    return value
-            except Exception:  # pragma: no cover - stopped-context comparison
-                pass
-            del self._entries[(spark, key)]  # collision or dead handle
-            self._drop(value)
+            hit = self._entries.get(k)
+        if hit is None:
             return None
+        stored, value = hit
+        try:
+            same = len(stored) == len(inputs) and all(
+                a.sameSemantics(b) for a, b in zip(inputs, stored)
+            )
+        except Exception:  # pragma: no cover - stopped-context comparison
+            same = False
+        with LOCK:
+            current = self._entries.get(k) is hit
+            if current and same:
+                self._entries.move_to_end(k)
+                return value
+            if current:
+                del self._entries[k]  # collision or dead handle
+        if current:
+            self._drop(value)
+        return None  # rejected, or evicted since the lookup
 
     def put(self, spark, key, value, inputs=()):
         """Store ``value`` and return it — or, when a concurrent caller
         stored a confirmed entry first, release ``value`` and return the
         winner's."""
-        with LOCK:
+        k = (spark.sparkContext, key)
+        while True:
             won = self.get(spark, key, inputs)
             if won is not None:
                 self._drop(value)
                 return won
-            for k in [k for k in self._entries if _stopped(k[0])]:
-                del self._entries[k]
-            self._entries[(spark, key)] = (list(inputs), value)
-            while len(self._entries) > self.maxsize:
-                self._drop(self._entries.popitem(last=False)[1][1])
+            with LOCK:
+                if k in self._entries:
+                    continue  # stored since the miss: confirm it first
+                for dead in [d for d in self._entries if d[0]._jsc is None]:
+                    del self._entries[dead]
+                self._entries[k] = (list(inputs), value)
+                evicted = [
+                    self._entries.popitem(last=False)[1][1]
+                    for _ in range(len(self._entries) - self.maxsize)
+                ]
+                break
+        for old in evicted:
+            self._drop(old)
         return value
 
     def get_or_build(self, spark, key, build, inputs=()):
@@ -128,11 +146,24 @@ class Memo:
         return hit if hit is not None else self.put(spark, key, build(), inputs)
 
 
+def _release_all(dfs: list) -> int:
+    for df in dfs:
+        release(df)
+    return len(dfs)
+
+
+def _take_all(ledger: list) -> list:
+    """Empty ``ledger`` under the lock and return its entries, newest
+    first, for release outside the lock."""
+    with LOCK:
+        taken = ledger[::-1]
+        ledger.clear()
+    return taken
+
+
 def evict(ledger: list) -> None:
     """Release every entry of a one-live-entry ledger."""
-    with LOCK:
-        while ledger:
-            release(ledger.pop())
+    _release_all(_take_all(ledger))
 
 
 def keep(ledger: list, df: DataFrame) -> DataFrame:
@@ -219,16 +250,15 @@ class capture_frame:
 def release_captured(frame: list) -> None:
     """Release the entries in a capture frame and drop them from the
     ledger (identity match); entries already drained are skipped."""
+    owned = []
     with LOCK:
         for df in frame:
             for i, live in enumerate(_live_candidate_checkpoints):
                 if live is df:
-                    del _live_candidate_checkpoints[i]
+                    owned.append(_live_candidate_checkpoints.pop(i))
                     break
-            else:
-                continue  # already drained by release_candidate_checkpoints
-            release(df)
     frame.clear()
+    _release_all(owned)
 
 
 def release_candidate_checkpoints() -> int:
@@ -257,9 +287,4 @@ def release_candidate_checkpoints() -> int:
     the persisted entries, whenever memory pressure warrants — they
     survive the drain logically).  Returns the number of entries
     released."""
-    n = 0
-    with LOCK:
-        while _live_candidate_checkpoints:
-            release(_live_candidate_checkpoints.pop())
-            n += 1
-    return n
+    return _release_all(_take_all(_live_candidate_checkpoints))

@@ -22,8 +22,9 @@ from bulkfhirloader_spark.schemas import TESTDATA_TABLES
 # DataFrame handles are immutable lazy plans — reusing one is the engine's
 # catalog cache (a metastore's job): it skips the per-call file listing +
 # parquet footer/schema read, which measures 0.1-0.2 s of driver time per
-# table per query.  One entry per (session, sf_dir, table); plain read
-# handles, so nothing to release on eviction.
+# table per query.  A handle belongs to the session that read it, so the
+# session is in the key: one entry per (session, sf_dir, table).  Plain
+# read handles, so nothing to release on eviction.
 _TABLES = reuse.Memo(64, release=None)
 
 
@@ -35,7 +36,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             return load_events(spark, os.path.join(sf_dir, "events.parquet"))
         return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
-    return _TABLES.get_or_build(spark, (sf_dir, name), read)
+    return _TABLES.get_or_build(spark, (spark, sf_dir, name), read)
 
 
 def load_events(spark: SparkSession, path: str) -> DataFrame:

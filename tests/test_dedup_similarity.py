@@ -1054,7 +1054,7 @@ def test_memo_hygiene_dead_session_purge_and_collision_guard(spark):
     dedup._SIG_MEMO.clear()
     sigs = dedup.cached_minhash_signatures(docs)
     ((owner, key),) = dedup._SIG_MEMO._entries
-    assert owner is spark
+    assert owner is spark.sparkContext
 
     # (b) forge a collision: same key, but the stored input is a DIFFERENT
     # plan — the hit must be rejected (sameSemantics) and recomputed

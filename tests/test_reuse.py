@@ -19,15 +19,16 @@ from bulkfhirloader_spark.sources.tables import load_table
 
 
 class _Context:
-    _jsc = object()  # a stopped SparkContext sets _jsc to None
+    def __init__(self) -> None:
+        self._jsc = object()  # a stopped SparkContext sets _jsc to None
 
 
 class _Session:
     """Stand-in SparkSession: a context to stop and a reader whose
     handles hold their session, as a real DataFrame's ``_session`` does."""
 
-    def __init__(self, log: list | None = None) -> None:
-        self.sparkContext = _Context()
+    def __init__(self, log: list | None = None, context=None) -> None:
+        self.sparkContext = context or _Context()
         self.read = self
         self.log = log
 
@@ -86,6 +87,29 @@ def test_memo_purges_stopped_sessions_bounds_and_races(name, monkeypatch):
     assert memo.put(live, 1, loser) is winner
     assert (loser in log) == releases
     assert memo.get_or_build(live, 1, lambda: pytest.fail("rebuilt")) is winner
+
+
+def test_memo_hits_from_a_second_session_wrapper(spark, monkeypatch):
+    """foreachBatch wraps each micro-batch in a fresh Python SparkSession
+    over the same context: the context-keyed memos (the stored-IVF
+    centroids among them) must hit from it, and load_table's handles,
+    which belong to one session, must not be served to another."""
+    from pyspark.sql import SparkSession
+
+    wrapper = SparkSession(spark.sparkContext, spark._jsparkSession)
+    assert wrapper is not spark
+    for name in sorted(set(MEMOS) - {"tables"}):
+        memo = MEMOS[name]()
+        monkeypatch.setattr(memo, "_entries", OrderedDict())  # this test's own
+        value = memo.get_or_build(spark, "k", object)
+        assert memo.get_or_build(wrapper, "k", pytest.fail) is value, name
+
+    ctx = _Context()
+    first, second = _Session(context=ctx), _Session(context=ctx)
+    assert load_table(first, "/stand-in", "documents") is not load_table(
+        second, "/stand-in", "documents"
+    )
+    ctx._jsc = None  # purged by the suite's next insert
 
 
 def test_memo_concurrent_builds_serve_their_own_key():
