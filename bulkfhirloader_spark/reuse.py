@@ -32,7 +32,7 @@ from collections import OrderedDict
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
-LOCK = threading.RLock()
+LOCK = threading.Lock()
 
 
 def release(df: DataFrame) -> None:
