@@ -24,6 +24,8 @@ filters, F-ops over orders columns.
 
 from __future__ import annotations
 
+import itertools
+import os
 import tempfile
 from collections.abc import Callable
 
@@ -3019,6 +3021,50 @@ def sim_topk_ivf_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Per-call number of the stream_* rows: a fresh memory-sink name and
+# checkpoint per call (a memory sink's temp view persists after termination).
+_STREAM_SEQ = itertools.count(1)
+
+
+def _file_stream(
+    spark: SparkSession, path: str, schema_path: str | None = None
+) -> DataFrame:
+    """A parquet file stream over ``path`` that takes one file per
+    micro-batch, so operator state carries across batches.  The schema
+    is read from ``schema_path`` (default: ``path``)."""
+    schema = spark.read.parquet(schema_path or path).schema
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(path)
+    )
+
+
+def _drain_to_memory(
+    df: DataFrame, prefix: str, mode: str, ckpt_root: str | None = None
+) -> DataFrame:
+    """Drain the streaming ``df`` (availableNow) into a fresh memory sink
+    ``<prefix><n>`` in output mode ``mode`` and return the sink's table.
+    The checkpoint is ``<ckpt_root>/ckpt_<n>``, or a new temp dir."""
+    n = next(_STREAM_SEQ)
+    qname = f"{prefix}{n}"
+    ckpt = (
+        os.path.join(ckpt_root, f"ckpt_{n}")
+        if ckpt_root
+        else tempfile.mkdtemp(prefix=f"bfls_ckpt_{qname}_")
+    )
+    (
+        df.writeStream.format("memory")
+        .queryName(qname)
+        .outputMode(mode)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return df.sparkSession.table(qname)
+
+
 def _write_query_stream(q: DataFrame, src: str) -> None:
     """The benchmark queries as a 2-file stream source: ``<src>/in/f0``
     holds query ids < 2, ``f1`` the rest."""
@@ -3055,32 +3101,19 @@ def stream_sim_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from bulkfhirloader_spark.streaming.joins import stream_sim_topk
 
-    global _STREAM_Q_SEQ
     _utc(spark)
     q, _emb = _query_vectors(spark, sf_dir)
     path = prebuild_ivf_index(spark, sf_dir)
     src = _sim_topk_stream_src(spark, sf_dir, q)
     in_dir = _os.path.join(src, "in")
-    schema = spark.read.parquet(f"{in_dir}/f0").schema
-    _STREAM_Q_SEQ += 1
-    qname = f"bfls_stream_simtopk_{_STREAM_Q_SEQ}"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{in_dir}/*")
-    )
-    qq = (
-        stream_sim_topk(stream, path, k=5, n_probe=8)
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", _os.path.join(src, f"ckpt_{_STREAM_Q_SEQ}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    qq.awaitTermination()
+    stream = _file_stream(spark, f"{in_dir}/*", f"{in_dir}/f0")
     return (
-        spark.table(qname)
+        _drain_to_memory(
+            stream_sim_topk(stream, path, k=5, n_probe=8),
+            "bfls_stream_simtopk_",
+            "update",
+            src,
+        )
         .select(
             "query_id",
             "vec_id",
@@ -3109,7 +3142,6 @@ def stream_sim_topk_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_sim_topk,
     )
 
-    global _STREAM_Q_SEQ
     _utc(spark)
     q, _emb = _query_vectors(spark, sf_dir)
     path = prebuild_ivf_index(spark, sf_dir)
@@ -3122,26 +3154,14 @@ def stream_sim_topk_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, (sf_dir, "sim_topk_stream_bkt"), "bfls_stream_simtopk_bkt_", write
     )
     in_dir = _os.path.join(src, "in")
-    schema = spark.read.parquet(f"{in_dir}/f0").schema
-    _STREAM_Q_SEQ += 1
-    qname = f"bfls_stream_simtopk_bkt_{_STREAM_Q_SEQ}"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{in_dir}/*")
-    )
-    qq = (
-        stream_sim_topk(stream, path, k=5, n_probe=8, bucketed_lists=True)
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", _os.path.join(src, f"ckpt_{_STREAM_Q_SEQ}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    qq.awaitTermination()
+    stream = _file_stream(spark, f"{in_dir}/*", f"{in_dir}/f0")
     return (
-        spark.table(qname)
+        _drain_to_memory(
+            stream_sim_topk(stream, path, k=5, n_probe=8, bucketed_lists=True),
+            "bfls_stream_simtopk_bkt_",
+            "update",
+            src,
+        )
         .select(
             "query_id",
             "vec_id",
@@ -3167,15 +3187,13 @@ def stream_sim_topk_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from bulkfhirloader_spark.streaming.joins import stream_sim_topk_batch_prober
 
-    global _STREAM_Q_SEQ
     _utc(spark)
     q, _emb = _query_vectors(spark, sf_dir)
     path = prebuild_ivf_index(spark, sf_dir)
     src = _sim_topk_stream_src(spark, sf_dir, q)
     in_dir = _os.path.join(src, "in")
-    schema = spark.read.parquet(f"{in_dir}/f0").schema
-    _STREAM_Q_SEQ += 1
-    out_dir = _os.path.join(src, f"out_{_STREAM_Q_SEQ}")
+    n = next(_STREAM_SEQ)
+    out_dir = _os.path.join(src, f"out_{n}")
 
     def sink(df: DataFrame, batch_id: int) -> None:
         # per-batch OVERWRITE directory keyed by batch_id — foreachBatch
@@ -3186,16 +3204,12 @@ def stream_sim_topk_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
             _os.path.join(out_dir, f"b{batch_id}")
         )
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{in_dir}/*")
-    )
+    stream = _file_stream(spark, f"{in_dir}/*", f"{in_dir}/f0")
     qq = (
         stream.writeStream.foreachBatch(
             stream_sim_topk_batch_prober(path, sink, k=5, n_probe=8)
         )
-        .option("checkpointLocation", _os.path.join(src, f"ckpt_{_STREAM_Q_SEQ}"))
+        .option("checkpointLocation", _os.path.join(src, f"ckpt_{n}"))
         .trigger(availableNow=True)
         .start()
     )
@@ -3555,11 +3569,6 @@ SELECT vec_id, label, c_label AS predicted_label, score FROM r WHERE rnk = 1
 """
 
 
-# The streaming source dir + query-name counter for stream_user_totals:
-# one materialization per (session, sf_dir), fresh memory-sink name per call
-# (a memory sink's temp view persists after termination).
-_STREAM_Q_SEQ = 0
-
 
 def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The custom stateful streaming operator (applyInPandasWithState,
@@ -3571,8 +3580,6 @@ def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from bulkfhirloader_spark.streaming.stateful import running_user_totals
 
-    global _STREAM_Q_SEQ
-
     def write(src: str) -> None:
         # several files so availableNow + maxFilesPerTrigger=1 forces state
         # to carry across micro-batches
@@ -3582,25 +3589,11 @@ def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _fixture_dir(spark, (sf_dir, "stream_ev"), "bfls_stream_ev_", write)
     in_dir = _os.path.join(src, "in")
-    schema = spark.read.parquet(in_dir).schema
-    _STREAM_Q_SEQ += 1
-    qname = f"bfls_user_totals_{_STREAM_Q_SEQ}"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
+    stream = _file_stream(spark, in_dir)
+    emits = _drain_to_memory(
+        running_user_totals(stream),
+        "bfls_user_totals_", "update", src,
     )
-    q = (
-        running_user_totals(stream)
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", _os.path.join(src, f"ckpt_{_STREAM_Q_SEQ}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    emits = spark.table(qname)
     return emits.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.max_by("total_value_cents", "n_events").alias("total_value_cents"),
@@ -3657,35 +3650,14 @@ def stream_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows a stateless per-batch count would MISS.  Summing the per-batch
     partials must reproduce the batch operator's matrix, so this shares
     ext_markov_transitions' oracle."""
-    import os as _os
-
     from bulkfhirloader_spark.streaming.stateful import stream_transitions
 
-    global _STREAM_Q_SEQ
     in_glob = _ordered_event_chunks(
         spark, sf_dir, ("event_id", "user_id", "ts", "event_type")
     )
-    schema = spark.read.parquet(in_glob).schema
-    _STREAM_Q_SEQ += 1
-    qname = f"bfls_markov_{_STREAM_Q_SEQ}"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_glob)
-    )
-    ckpt = tempfile.mkdtemp(prefix="bfls_markov_ckpt_")
-    q = (
-        stream_transitions(stream)
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", _os.path.join(ckpt, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = _file_stream(spark, in_glob)
     return (
-        spark.table(qname)
+        _drain_to_memory(stream_transitions(stream), "bfls_markov_", "update")
         .groupBy("prev_type", "next_type")
         .agg(F.sum("n").alias("n_transitions"))
     )
@@ -3702,29 +3674,11 @@ def stream_sessionize_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves state expiry cannot change an assignment on in-order input."""
     from bulkfhirloader_spark.streaming.stateful import stream_sessionize
 
-    global _STREAM_Q_SEQ
     in_glob = _ordered_event_chunks(spark, sf_dir, ("event_id", "user_id", "ts"))
-    schema = spark.read.parquet(in_glob).schema
-    _STREAM_Q_SEQ += 1
-    qname = f"bfls_sessionize_{_STREAM_Q_SEQ}"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_glob)
-    )
-    q = (
-        stream_sessionize(stream, gap_seconds=1800)
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix=f"bfls_ckpt_{qname}_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(qname).select(
+    stream = _file_stream(spark, in_glob)
+    return _drain_to_memory(
+        stream_sessionize(stream, gap_seconds=1800), "bfls_sessionize_", "append"
+    ).select(
         "event_id", "user_id", "ts_epoch_us", "session_start_us"
     )
 
@@ -3755,26 +3709,16 @@ def stream_interval_join_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     case."""
     from bulkfhirloader_spark.streaming.joins import stream_interval_join
 
-    global _STREAM_Q_SEQ
     in_glob = _ordered_event_chunks(
         spark, sf_dir, ("event_id", "user_id", "event_type", "ts")
     )
-    schema = spark.read.parquet(in_glob).schema
-
-    def read_stream():
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_glob)
-        )
-
     clicks = (
-        read_stream()
+        _file_stream(spark, in_glob)
         .filter(F.col("event_type") == "click")
         .select("event_id", "user_id", "ts")
     )
     purchases = (
-        read_stream()
+        _file_stream(spark, in_glob)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("p_event_id"),
@@ -3785,27 +3729,17 @@ def stream_interval_join_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = stream_interval_join(
         clicks, purchases, on="user_id", lookback_seconds=1800
     )
-    _STREAM_Q_SEQ += 1
-    qname = f"bfls_interval_join_{_STREAM_Q_SEQ}"
-    q = (
+    return _drain_to_memory(
         joined.select(
             "event_id",
             "p_event_id",
             "user_id",
             F.unix_micros("ts").alias("ts_epoch_us"),
             F.unix_micros("p_ts").alias("p_ts_epoch_us"),
-        )
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix=f"bfls_ckpt_{qname}_")
-        )
-        .trigger(availableNow=True)
-        .start()
+        ),
+        "bfls_interval_join_",
+        "append",
     )
-    q.awaitTermination()
-    return spark.table(qname)
 
 
 _STREAM_INTERVAL_JOIN_SQL = """
@@ -3831,8 +3765,6 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from bulkfhirloader_spark.streaming.stateful import streaming_exact_dedup
 
-    global _STREAM_Q_SEQ
-
     def write(src: str) -> None:
         load_table(spark, sf_dir, "documents").select("doc_id", "text").repartition(
             3
@@ -3840,25 +3772,11 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _fixture_dir(spark, (sf_dir, "stream_doc"), "bfls_stream_doc_", write)
     in_dir = _os.path.join(src, "in")
-    schema = spark.read.parquet(in_dir).schema
-    _STREAM_Q_SEQ += 1
-    qname = f"bfls_stream_dedup_{_STREAM_Q_SEQ}"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
-    q = (
-        streaming_exact_dedup(stream)
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", _os.path.join(src, f"ckpt_{_STREAM_Q_SEQ}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(qname).select("content_sha")
+    stream = _file_stream(spark, in_dir)
+    return _drain_to_memory(
+        streaming_exact_dedup(stream),
+        "bfls_stream_dedup_", "append", src,
+    ).select("content_sha")
 
 
 _STREAM_DEDUP_SQL = """
@@ -3880,7 +3798,6 @@ def stream_near_dup_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from bulkfhirloader_spark.streaming.joins import stream_near_dup_admission
 
-    global _STREAM_Q_SEQ
     _utc(spark)
     docs = load_table(spark, sf_dir, "documents")
 
@@ -3892,25 +3809,11 @@ def stream_near_dup_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _fixture_dir(spark, (sf_dir, "admit"), "bfls_stream_admit_", write)
     in_dir = _os.path.join(src, "in")
     existing = docs.where(F.col("doc_id") % 2 == 0).select("doc_id", "text")
-    schema = spark.read.parquet(in_dir).schema
-    _STREAM_Q_SEQ += 1
-    qname = f"bfls_stream_admit_{_STREAM_Q_SEQ}"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
-    q = (
-        stream_near_dup_admission(stream, existing)
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", _os.path.join(src, f"ckpt_{_STREAM_Q_SEQ}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(qname).select("doc_id").distinct()
+    stream = _file_stream(spark, in_dir)
+    return _drain_to_memory(
+        stream_near_dup_admission(stream, existing),
+        "bfls_stream_admit_", "update", src,
+    ).select("doc_id").distinct()
 
 
 _STREAM_ADMIT_SQL = r"""
@@ -3956,7 +3859,6 @@ def stream_near_dup_admit_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_near_dup_admission,
     )
 
-    global _STREAM_Q_SEQ
     _utc(spark)
     docs = load_table(spark, sf_dir, "documents")
 
@@ -3973,27 +3875,13 @@ def stream_near_dup_admit_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, (sf_dir, "admit_stored"), "bfls_stream_admit_store_", write
     )
     in_dir = _os.path.join(src, "in")
-    schema = spark.read.parquet(in_dir).schema
-    _STREAM_Q_SEQ += 1
-    qname = f"bfls_stream_admit_stored_{_STREAM_Q_SEQ}"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
-    q = (
+    stream = _file_stream(spark, in_dir)
+    return _drain_to_memory(
         stream_near_dup_admission(
             stream, banded_store=_os.path.join(src, "bandstore")
-        )
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", _os.path.join(src, f"ckpt_{_STREAM_Q_SEQ}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(qname).select("doc_id").distinct()
+        ),
+        "bfls_stream_admit_stored_", "update", src,
+    ).select("doc_id").distinct()
 
 
 def stream_near_dup_admit_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4015,7 +3903,6 @@ def stream_near_dup_admit_bucketed(spark: SparkSession, sf_dir: str) -> DataFram
         stream_near_dup_admission,
     )
 
-    global _STREAM_Q_SEQ
     _utc(spark)
     docs = load_table(spark, sf_dir, "documents")
 
@@ -4033,27 +3920,13 @@ def stream_near_dup_admit_bucketed(spark: SparkSession, sf_dir: str) -> DataFram
         spark, (sf_dir, "admit_bucketed"), "bfls_stream_admit_bkt_", write
     )
     in_dir = _os.path.join(src, "in")
-    schema = spark.read.parquet(in_dir).schema
-    _STREAM_Q_SEQ += 1
-    qname = f"bfls_stream_admit_bucketed_{_STREAM_Q_SEQ}"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
-    q = (
+    stream = _file_stream(spark, in_dir)
+    return _drain_to_memory(
         stream_near_dup_admission(
             stream, banded_store=_os.path.join(src, "bandstore")
-        )
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", _os.path.join(src, f"ckpt_{_STREAM_Q_SEQ}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(qname).select("doc_id").distinct()
+        ),
+        "bfls_stream_admit_bucketed_", "update", src,
+    ).select("doc_id").distinct()
 
 
 def _semantic_admit_inputs(spark: SparkSession, sf_dir: str):
@@ -4089,29 +3962,14 @@ def stream_semantic_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from bulkfhirloader_spark.streaming.joins import stream_semantic_admission
 
-    global _STREAM_Q_SEQ
     _utc(spark)
     src, existing, cents = _semantic_admit_inputs(spark, sf_dir)
     in_dir = _os.path.join(src, "in")
-    schema = spark.read.parquet(in_dir).schema
-    _STREAM_Q_SEQ += 1
-    qname = f"bfls_stream_sem_{_STREAM_Q_SEQ}"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
-    q = (
-        stream_semantic_admission(stream, existing, cents, threshold=0.4)
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", _os.path.join(src, f"ckpt_{_STREAM_Q_SEQ}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(qname).select("vec_id", "cluster_id").distinct()
+    stream = _file_stream(spark, in_dir)
+    return _drain_to_memory(
+        stream_semantic_admission(stream, existing, cents, threshold=0.4),
+        "bfls_stream_sem_", "append", src,
+    ).select("vec_id", "cluster_id").distinct()
 
 
 def stream_semantic_admit_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4128,31 +3986,16 @@ def stream_semantic_admit_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from bulkfhirloader_spark.streaming.joins import stream_semantic_admission
 
-    global _STREAM_Q_SEQ
     _utc(spark)
     src, existing, cents = _semantic_admit_inputs(spark, sf_dir)
     in_dir = _os.path.join(src, "in")
-    schema = spark.read.parquet(in_dir).schema
-    _STREAM_Q_SEQ += 1
-    qname = f"bfls_stream_sem_blas_{_STREAM_Q_SEQ}"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
-    q = (
+    stream = _file_stream(spark, in_dir)
+    return _drain_to_memory(
         stream_semantic_admission(
             stream, existing, cents, threshold=0.4, assign_tier="blas"
-        )
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", _os.path.join(src, f"ckpt_{_STREAM_Q_SEQ}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(qname).select("vec_id", "cluster_id").distinct()
+        ),
+        "bfls_stream_sem_blas_", "append", src,
+    ).select("vec_id", "cluster_id").distinct()
 
 
 _STREAM_SEMANTIC_SQL = _KMEANS_CTE + """
@@ -4187,7 +4030,6 @@ def stream_semantic_admit_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_semantic_admission,
     )
 
-    global _STREAM_Q_SEQ
     _utc(spark)
     emb = load_table(spark, sf_dir, "embeddings")
 
@@ -4207,29 +4049,15 @@ def stream_semantic_admit_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, (sf_dir, "semantic_admit_stored"), "bfls_stream_sem_store_", write
     )
     in_dir = _os.path.join(src, "in")
-    schema = spark.read.parquet(in_dir).schema
-    _STREAM_Q_SEQ += 1
-    qname = f"bfls_stream_sem_stored_{_STREAM_Q_SEQ}"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
-    q = (
+    stream = _file_stream(spark, in_dir)
+    return _drain_to_memory(
         stream_semantic_admission(
             stream,
             threshold=0.4,
             semantic_store=_os.path.join(src, "semstore"),
-        )
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", _os.path.join(src, f"ckpt_{_STREAM_Q_SEQ}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(qname).select("vec_id", "cluster_id").distinct()
+        ),
+        "bfls_stream_sem_stored_", "append", src,
+    ).select("vec_id", "cluster_id").distinct()
 
 
 def _winnow_admit_run(spark: SparkSession, sf_dir: str, tag: str, **gate_kw):
@@ -4239,7 +4067,6 @@ def _winnow_admit_run(spark: SparkSession, sf_dir: str, tag: str, **gate_kw):
 
     from bulkfhirloader_spark.streaming.joins import stream_winnow_admission
 
-    global _STREAM_Q_SEQ
     _utc(spark)
     docs = load_table(spark, sf_dir, "documents")
 
@@ -4266,25 +4093,11 @@ def _winnow_admit_run(spark: SparkSession, sf_dir: str, tag: str, **gate_kw):
         gate_kw["existing"] = docs.where(F.col("doc_id") % 2 == 0).select(
             "doc_id", "text"
         )
-    schema = spark.read.parquet(in_dir).schema
-    _STREAM_Q_SEQ += 1
-    qname = f"bfls_stream_winnow_{tag}_{_STREAM_Q_SEQ}"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
-    q = (
-        stream_winnow_admission(stream, **gate_kw)
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", _os.path.join(src, f"ckpt_{_STREAM_Q_SEQ}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(qname).select("doc_id").distinct()
+    stream = _file_stream(spark, in_dir)
+    return _drain_to_memory(
+        stream_winnow_admission(stream, **gate_kw),
+        f"bfls_stream_winnow_{tag}_", "update", src,
+    ).select("doc_id").distinct()
 
 
 def stream_winnow_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4340,7 +4153,6 @@ def stream_full_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from bulkfhirloader_spark.streaming.joins import stream_admission_pipeline
 
-    global _STREAM_Q_SEQ
     _utc(spark)
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
@@ -4359,25 +4171,11 @@ def stream_full_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     existing_docs = even.select("doc_id", "text")
     existing_emb = even.select("doc_id", "embedding")
     cents = similarity.kmeans_centroids(emb, k=8, n_iter=2)
-    schema = spark.read.parquet(in_dir).schema
-    _STREAM_Q_SEQ += 1
-    qname = f"bfls_stream_full_{_STREAM_Q_SEQ}"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
-    q = (
-        stream_admission_pipeline(stream, existing_docs, existing_emb, cents)
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", _os.path.join(src, f"ckpt_{_STREAM_Q_SEQ}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(qname).select("doc_id", "stage").distinct()
+    stream = _file_stream(spark, in_dir)
+    return _drain_to_memory(
+        stream_admission_pipeline(stream, existing_docs, existing_emb, cents),
+        "bfls_stream_full_", "update", src,
+    ).select("doc_id", "stage").distinct()
 
 
 def stream_full_admission_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4398,7 +4196,6 @@ def stream_full_admission_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
         winnow_store_write,
     )
 
-    global _STREAM_Q_SEQ
     _utc(spark)
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
@@ -4433,30 +4230,16 @@ def stream_full_admission_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, (sf_dir, "full_admission_stored"), "bfls_stream_full_store_", write
     )
     in_dir = _os.path.join(src, "in")
-    schema = spark.read.parquet(in_dir).schema
-    _STREAM_Q_SEQ += 1
-    qname = f"bfls_stream_full_stored_{_STREAM_Q_SEQ}"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
-    q = (
+    stream = _file_stream(spark, in_dir)
+    return _drain_to_memory(
         stream_admission_pipeline(
             stream,
             banded_store=_os.path.join(src, "bandstore"),
             winnow_store=_os.path.join(src, "winnowstore"),
             semantic_store=_os.path.join(src, "semstore"),
-        )
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", _os.path.join(src, f"ckpt_{_STREAM_Q_SEQ}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(qname).select("doc_id", "stage").distinct()
+        ),
+        "bfls_stream_full_stored_", "update", src,
+    ).select("doc_id", "stage").distinct()
 
 
 _STREAM_FULL_SQL = _KMEANS_CTE + r"""
@@ -4539,7 +4322,6 @@ def stream_mm_image_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from bulkfhirloader_spark.streaming.joins import stream_image_admission
 
-    global _STREAM_Q_SEQ
     _utc(spark)
     docs = load_table(spark, sf_dir, "documents")
 
@@ -4568,25 +4350,11 @@ def stream_mm_image_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    schema = spark.read.parquet(in_dir).schema
-    _STREAM_Q_SEQ += 1
-    qname = f"bfls_stream_img_{_STREAM_Q_SEQ}"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
-    q = (
-        stream_image_admission(stream, static_hashes, max_hamming=3)
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", _os.path.join(src, f"ckpt_{_STREAM_Q_SEQ}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(qname).select("media_id").distinct()
+    stream = _file_stream(spark, in_dir)
+    return _drain_to_memory(
+        stream_image_admission(stream, static_hashes, max_hamming=3),
+        "bfls_stream_img_", "update", src,
+    ).select("media_id").distinct()
 
 
 def stream_mm_image_admit_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4607,7 +4375,6 @@ def stream_mm_image_admit_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_image_admission,
     )
 
-    global _STREAM_Q_SEQ
     _utc(spark)
     docs = load_table(spark, sf_dir, "documents")
 
@@ -4642,27 +4409,13 @@ def stream_mm_image_admit_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, (sf_dir, "mm_image_admit_stored"), "bfls_stream_img_store_", write
     )
     in_dir = _os.path.join(src, "in")
-    schema = spark.read.parquet(in_dir).schema
-    _STREAM_Q_SEQ += 1
-    qname = f"bfls_stream_img_stored_{_STREAM_Q_SEQ}"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
-    q = (
+    stream = _file_stream(spark, in_dir)
+    return _drain_to_memory(
         stream_image_admission(
             stream, max_hamming=3, hash_store=_os.path.join(src, "imgstore")
-        )
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", _os.path.join(src, f"ckpt_{_STREAM_Q_SEQ}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(qname).select("media_id").distinct()
+        ),
+        "bfls_stream_img_stored_", "update", src,
+    ).select("media_id").distinct()
 
 
 _STREAM_IMG_SQL = """
@@ -7244,35 +6997,17 @@ def stream_attribution_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded last-touch model.  On in-order replay the emitted rows equal
     the batch operator's exactly, so this shares ext_attribution_touch's
     oracle."""
-    import os as _os
-
     from bulkfhirloader_spark.streaming.stateful import stream_attribution
 
-    global _STREAM_Q_SEQ
     _utc(spark)
     in_glob = _ordered_event_chunks(
         spark, sf_dir, ("event_id", "user_id", "ts", "event_type")
     )
-    schema = spark.read.parquet(in_glob).schema
-    _STREAM_Q_SEQ += 1
-    qname = f"bfls_attrib_{_STREAM_Q_SEQ}"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_glob)
-    )
-    ckpt = tempfile.mkdtemp(prefix="bfls_attrib_ckpt_")
-    q = (
-        stream_attribution(stream, lookback_seconds=3600)
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", _os.path.join(ckpt, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(qname).select(
+    stream = _file_stream(spark, in_glob)
+    return _drain_to_memory(
+        stream_attribution(stream, lookback_seconds=3600),
+        "bfls_attrib_", "update",
+    ).select(
         "conversion_event_id",
         "user_id",
         "conversion_us",
