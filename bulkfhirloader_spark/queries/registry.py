@@ -3026,13 +3026,10 @@ def sim_topk_ivf_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STREAM_SEQ = itertools.count(1)
 
 
-def _file_stream(
-    spark: SparkSession, path: str, schema_path: str | None = None
-) -> DataFrame:
+def _file_stream(spark: SparkSession, path: str) -> DataFrame:
     """A parquet file stream over ``path`` that takes one file per
-    micro-batch, so operator state carries across batches.  The schema
-    is read from ``schema_path`` (default: ``path``)."""
-    schema = spark.read.parquet(schema_path or path).schema
+    micro-batch, so operator state carries across batches."""
+    schema = spark.read.parquet(path).schema
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -3106,7 +3103,7 @@ def stream_sim_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = prebuild_ivf_index(spark, sf_dir)
     src = _sim_topk_stream_src(spark, sf_dir, q)
     in_dir = _os.path.join(src, "in")
-    stream = _file_stream(spark, f"{in_dir}/*", f"{in_dir}/f0")
+    stream = _file_stream(spark, f"{in_dir}/*")
     return (
         _drain_to_memory(
             stream_sim_topk(stream, path, k=5, n_probe=8),
@@ -3154,7 +3151,7 @@ def stream_sim_topk_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, (sf_dir, "sim_topk_stream_bkt"), "bfls_stream_simtopk_bkt_", write
     )
     in_dir = _os.path.join(src, "in")
-    stream = _file_stream(spark, f"{in_dir}/*", f"{in_dir}/f0")
+    stream = _file_stream(spark, f"{in_dir}/*")
     return (
         _drain_to_memory(
             stream_sim_topk(stream, path, k=5, n_probe=8, bucketed_lists=True),
@@ -3204,7 +3201,7 @@ def stream_sim_topk_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
             _os.path.join(out_dir, f"b{batch_id}")
         )
 
-    stream = _file_stream(spark, f"{in_dir}/*", f"{in_dir}/f0")
+    stream = _file_stream(spark, f"{in_dir}/*")
     qq = (
         stream.writeStream.foreachBatch(
             stream_sim_topk_batch_prober(path, sink, k=5, n_probe=8)
@@ -3567,7 +3564,6 @@ r AS (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY score DESC, c_la
       FROM s)
 SELECT vec_id, label, c_label AS predicted_label, score FROM r WHERE rnk = 1
 """
-
 
 
 def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
