@@ -3037,19 +3037,12 @@ def _file_stream(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def _drain_to_memory(
-    df: DataFrame, prefix: str, mode: str, ckpt_root: str | None = None
-) -> DataFrame:
+def _drain_to_memory(df: DataFrame, prefix: str, mode: str) -> DataFrame:
     """Drain the streaming ``df`` (availableNow) into a fresh memory sink
-    ``<prefix><n>`` in output mode ``mode`` and return the sink's table.
-    The checkpoint is ``<ckpt_root>/ckpt_<n>``, or a new temp dir."""
-    n = next(_STREAM_SEQ)
-    qname = f"{prefix}{n}"
-    ckpt = (
-        os.path.join(ckpt_root, f"ckpt_{n}")
-        if ckpt_root
-        else tempfile.mkdtemp(prefix=f"bfls_ckpt_{qname}_")
-    )
+    ``<prefix><n>`` in output mode ``mode``, checkpointed in a new temp
+    dir, and return the sink's table."""
+    qname = f"{prefix}{next(_STREAM_SEQ)}"
+    ckpt = tempfile.mkdtemp(prefix=f"bfls_ckpt_{qname}_")
     (
         df.writeStream.format("memory")
         .queryName(qname)
@@ -3109,7 +3102,6 @@ def stream_sim_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream_sim_topk(stream, path, k=5, n_probe=8),
             "bfls_stream_simtopk_",
             "update",
-            src,
         )
         .select(
             "query_id",
@@ -3157,7 +3149,6 @@ def stream_sim_topk_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream_sim_topk(stream, path, k=5, n_probe=8, bucketed_lists=True),
             "bfls_stream_simtopk_bkt_",
             "update",
-            src,
         )
         .select(
             "query_id",
@@ -3588,7 +3579,7 @@ def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _file_stream(spark, in_dir)
     emits = _drain_to_memory(
         running_user_totals(stream),
-        "bfls_user_totals_", "update", src,
+        "bfls_user_totals_", "update",
     )
     return emits.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
@@ -3771,7 +3762,7 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _file_stream(spark, in_dir)
     return _drain_to_memory(
         streaming_exact_dedup(stream),
-        "bfls_stream_dedup_", "append", src,
+        "bfls_stream_dedup_", "append",
     ).select("content_sha")
 
 
@@ -3808,7 +3799,7 @@ def stream_near_dup_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _file_stream(spark, in_dir)
     return _drain_to_memory(
         stream_near_dup_admission(stream, existing),
-        "bfls_stream_admit_", "update", src,
+        "bfls_stream_admit_", "update",
     ).select("doc_id").distinct()
 
 
@@ -3876,7 +3867,7 @@ def stream_near_dup_admit_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_near_dup_admission(
             stream, banded_store=_os.path.join(src, "bandstore")
         ),
-        "bfls_stream_admit_stored_", "update", src,
+        "bfls_stream_admit_stored_", "update",
     ).select("doc_id").distinct()
 
 
@@ -3921,7 +3912,7 @@ def stream_near_dup_admit_bucketed(spark: SparkSession, sf_dir: str) -> DataFram
         stream_near_dup_admission(
             stream, banded_store=_os.path.join(src, "bandstore")
         ),
-        "bfls_stream_admit_bucketed_", "update", src,
+        "bfls_stream_admit_bucketed_", "update",
     ).select("doc_id").distinct()
 
 
@@ -3964,7 +3955,7 @@ def stream_semantic_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _file_stream(spark, in_dir)
     return _drain_to_memory(
         stream_semantic_admission(stream, existing, cents, threshold=0.4),
-        "bfls_stream_sem_", "append", src,
+        "bfls_stream_sem_", "append",
     ).select("vec_id", "cluster_id").distinct()
 
 
@@ -3990,7 +3981,7 @@ def stream_semantic_admit_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_semantic_admission(
             stream, existing, cents, threshold=0.4, assign_tier="blas"
         ),
-        "bfls_stream_sem_blas_", "append", src,
+        "bfls_stream_sem_blas_", "append",
     ).select("vec_id", "cluster_id").distinct()
 
 
@@ -4052,7 +4043,7 @@ def stream_semantic_admit_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
             threshold=0.4,
             semantic_store=_os.path.join(src, "semstore"),
         ),
-        "bfls_stream_sem_stored_", "append", src,
+        "bfls_stream_sem_stored_", "append",
     ).select("vec_id", "cluster_id").distinct()
 
 
@@ -4092,7 +4083,7 @@ def _winnow_admit_run(spark: SparkSession, sf_dir: str, tag: str, **gate_kw):
     stream = _file_stream(spark, in_dir)
     return _drain_to_memory(
         stream_winnow_admission(stream, **gate_kw),
-        f"bfls_stream_winnow_{tag}_", "update", src,
+        f"bfls_stream_winnow_{tag}_", "update",
     ).select("doc_id").distinct()
 
 
@@ -4170,7 +4161,7 @@ def stream_full_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _file_stream(spark, in_dir)
     return _drain_to_memory(
         stream_admission_pipeline(stream, existing_docs, existing_emb, cents),
-        "bfls_stream_full_", "update", src,
+        "bfls_stream_full_", "update",
     ).select("doc_id", "stage").distinct()
 
 
@@ -4234,7 +4225,7 @@ def stream_full_admission_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
             winnow_store=_os.path.join(src, "winnowstore"),
             semantic_store=_os.path.join(src, "semstore"),
         ),
-        "bfls_stream_full_stored_", "update", src,
+        "bfls_stream_full_stored_", "update",
     ).select("doc_id", "stage").distinct()
 
 
@@ -4349,7 +4340,7 @@ def stream_mm_image_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _file_stream(spark, in_dir)
     return _drain_to_memory(
         stream_image_admission(stream, static_hashes, max_hamming=3),
-        "bfls_stream_img_", "update", src,
+        "bfls_stream_img_", "update",
     ).select("media_id").distinct()
 
 
@@ -4410,7 +4401,7 @@ def stream_mm_image_admit_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_image_admission(
             stream, max_hamming=3, hash_store=_os.path.join(src, "imgstore")
         ),
-        "bfls_stream_img_stored_", "update", src,
+        "bfls_stream_img_stored_", "update",
     ).select("media_id").distinct()
 
 

@@ -17,8 +17,10 @@ the knobs that matter for correctness and local-vs-cluster portability:
 - File listing kept on the driver up to ``LISTING_THRESHOLD`` paths, so a
   streaming micro-batch does not start a listing job per batch.
 
-``spark.sql.codegen.cache.maxEntries`` is a static conf: it applies only
-when ``get_spark`` creates the SparkContext, not to a session it reuses.
+``spark.sql.codegen.cache.maxEntries`` is fixed once per JVM: Spark's
+``CodeGenerator`` object sizes its cache from the conf of the first session
+that generates code, and keeps that size past ``spark.stop()``.
+``get_spark``'s value holds only when ``get_spark`` created that session.
 """
 
 from __future__ import annotations

@@ -9,15 +9,19 @@ the headline queries, then ``--passes`` warm passes in seed-shuffled order
 
 - build: the registry function that returns the DataFrame, with the Py4J
   round trips it makes (``send_command`` calls; eager Spark work done
-  while building counts here too);
+  while building counts here too).  Py4J's finalizer thread releases the
+  JVM references of collected Python objects by its own ``send_command``
+  calls whenever it wakes; those are not the query's and are not counted;
 - plan: ``queryExecution().executedPlan()``;
 - execute: ``collect()``.
 
 It also reads, per query, the stages and tasks that completed (Spark's
 status store, as ``perfbench/probes.py`` ``StageMeter`` does) and the
 generated classes compiled (``CodegenMetrics``, codegen cache misses).
-Prints one markdown row per query with the medians over the warm passes,
-then the per-pass totals.  Checks nothing: ``perfbench/run.py`` does.
+Prints one markdown row per query with the medians over the warm passes
+and the largest round trips and compiles of any one warm pass (so a query
+that compiles only now and then shows), then the per-pass totals.  Checks
+nothing: ``perfbench/run.py`` does.
 """
 
 from __future__ import annotations
@@ -36,6 +40,7 @@ for _p in (ROOT, os.path.join(ROOT, "perfbench")):
     if _p not in sys.path:
         sys.path.insert(0, _p)
 
+from py4j import protocol  # noqa: E402
 from py4j.clientserver import ClientServerConnection  # noqa: E402
 
 import tables  # noqa: E402  (perfbench/tables.py)
@@ -46,13 +51,16 @@ from bulkfhirloader_spark.queries.registry import REGISTRY  # noqa: E402
 from bulkfhirloader_spark.session import get_spark  # noqa: E402
 
 FIELDS = ("build_s", "trips", "plan_s", "exec_s", "stages", "tasks", "compiles")
+MAX_FIELDS = ("trips", "compiles")
 
 _TRIPS = [0]
 _send = ClientServerConnection.send_command
+_RELEASE = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
 
 
 def _counting_send(self, command):
-    _TRIPS[0] += 1
+    if not command.startswith(_RELEASE):
+        _TRIPS[0] += 1
     return _send(self, command)
 
 
@@ -121,11 +129,13 @@ def main() -> None:
 
     print(f"medians of {args.passes} warm passes after one cold pass "
           f"(seed {args.seed}, scale {args.scale})\n")
-    print("| query | " + " | ".join(FIELDS) + " |")
-    print("|---" * (len(FIELDS) + 1) + "|")
+    heads = list(FIELDS) + [f"max {f}" for f in MAX_FIELDS]
+    print("| query | " + " | ".join(heads) + " |")
+    print("|---" * (len(heads) + 1) + "|")
     for name in HEADLINE:
-        row = [statistics.median(p[name][f] for p in warm) for f in FIELDS]
-        print(f"| `{name}` | " + " | ".join(_fmt(f, v) for f, v in zip(FIELDS, row)) + " |")
+        row = [_fmt(f, statistics.median(p[name][f] for p in warm)) for f in FIELDS]
+        row += [_fmt(f, max(p[name][f] for p in warm)) for f in MAX_FIELDS]
+        print(f"| `{name}` | " + " | ".join(row) + " |")
     print("\nper pass (sum over the 19 queries):\n")
     print("| pass | " + " | ".join(FIELDS) + " |")
     print("|---" * (len(FIELDS) + 1) + "|")

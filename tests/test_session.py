@@ -6,7 +6,12 @@ from conftest import SF_DIR
 from bulkfhirloader_spark.queries.registry import REGISTRY
 
 # Cheap headline queries whose generated classes together outnumber Spark's
-# default codegen cache (100 entries): about 146 compiles per cold pass.
+# default codegen cache (100 entries): about 140 compiles per cold pass.
+# Each has one whole-stage-codegen stage numbering from run to run.  A query
+# whose independent stages AQE may plan in either order (such as
+# ext_bloom_semi_lineitem) numbers them differently on some runs; the stage
+# id is part of the generated class name, so such a run compiles new
+# classes however large the cache, and the query is left out.
 WARM_SET = (
     "q1_lineitem_pricing",
     "q3_top_unshipped_orders",
@@ -19,7 +24,6 @@ WARM_SET = (
     "ref_a2_disease_facts",
     "dedup_exact",
     "text_quality_stats",
-    "ext_bloom_semi_lineitem",
 )
 
 
@@ -39,7 +43,7 @@ def _pass(spark) -> int:
 
 def test_warm_pass_recompiles_no_generated_class(spark):
     """A second pass of the same queries finds every generated class in the
-    codegen cache.  With the default 100-entry LRU cache, the ~146 classes
+    codegen cache.  With the default 100-entry LRU cache, the ~140 classes
     of one pass evict each other, and every warm pass recompiles them."""
     _pass(spark)
     assert _pass(spark) == 0
